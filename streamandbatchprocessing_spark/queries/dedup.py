@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import hash60, minhash_hashes
 from ..functions.aggregates import pround, pround_sql
 from ..plans import static_plan
+from ..session import is_local_master
 from ..sources.batch import load_table
 from ..sources.staging import staging_dir
 from .registry import env_int, persist_tracked, query, session_artifact
@@ -252,7 +253,8 @@ def shared_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: come from blocks; a lost/evicted block recomputes by re-reading the
 #: checkpoint FILES, so consumers survive executor loss AND the
 #: variants-cap LRU can release blocks promptly and safely).
-#: ``auto`` (default) picks ``local`` on a local[*] master — where
+#: ``auto`` (default) picks ``local`` on a ``local``/``local[...]``
+#: master (:func:`is_local_master`) — where
 #: "executor loss" is process death and localCheckpoint's
 #: skip-the-write build is strictly better — and ``reliable`` on any
 #: cluster master, where recompute-safety is the difference between a
@@ -269,10 +271,7 @@ if _PAIRS_MATERIALIZE not in _PAIRS_MATERIALIZE_MODES:
 def _pairs_materialize_mode(spark: SparkSession) -> str:
     if _PAIRS_MATERIALIZE != "auto":
         return _PAIRS_MATERIALIZE
-    return (
-        "local" if spark.sparkContext.master.startswith("local")
-        else "reliable"
-    )
+    return "local" if is_local_master(spark.sparkContext.master) else "reliable"
 
 
 def _ensure_checkpoint_dir(spark: SparkSession) -> None:

@@ -14,9 +14,11 @@ return 202 immediately, the job runs on a pool thread whose
 
 from __future__ import annotations
 
+import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 
+from ..operators.analytics import ANALYSES, VALID_ANALYSIS_TYPES
 from .batch_job import BatchJobRunner, new_batch_id
 from .registry import BatchRegistry, BatchStatus
 
@@ -28,12 +30,6 @@ except ImportError:  # pragma: no cover — flask is available in CI image
 MAX_CONCURRENT_BATCHES = 8
 DEFAULT_PAGE = 100
 MAX_PAGE = 10000
-
-_VALID = {
-    "revenue_by_category", "revenue_by_region", "payment_analysis",
-    "customer_segmentation", "fraud_analysis", "hourly_trends",
-    "channel_performance", "inventory_velocity", "full_report",
-}
 
 
 def _error(code: str, message: str, http: int):
@@ -73,7 +69,7 @@ def create_app(
         analysis = body.get("analysisType")
         start, end = body.get("startDate"), body.get("endDate")
         filters = body.get("filters") or {}
-        if not analysis or analysis not in _VALID:
+        if not analysis or analysis not in VALID_ANALYSIS_TYPES:
             return _error("INVALID_REQUEST", f"invalid analysisType {analysis!r}", 400)
         if not start or not end:
             return _error("INVALID_REQUEST", "startDate and endDate required", 400)
@@ -118,7 +114,19 @@ def create_app(
             return _error(
                 "BATCH_NOT_READY", f"status={record.status.value}", 409
             )
-        path = record.raw_path if which == "raw" else record.agg_path
+        path, total = record.raw_path, record.row_count
+        if which == "agg":
+            path, total = record.agg_path, None
+            if record.analysis_type == "full_report":
+                # One subdir per analysis; a page is of one of them.
+                analysis = request.args.get("analysis")
+                if analysis not in ANALYSES:
+                    return _error(
+                        "INVALID_REQUEST",
+                        f"full_report needs ?analysis=<name>; valid: {list(ANALYSES)}",
+                        400,
+                    )
+                path = os.path.join(path, analysis)
         offset = request.args.get("offset", 0, type=int)
         limit = min(request.args.get("limit", DEFAULT_PAGE, type=int), MAX_PAGE)
         if offset < 0 or limit < 0:
@@ -128,7 +136,7 @@ def create_app(
             return _error(
                 "INVALID_REQUEST", "offset and limit must be >= 0", 400
             )
-        rows, total = runner.page(path, offset=offset, limit=limit)
+        rows, total = runner.page(path, offset=offset, limit=limit, total=total)
         return jsonify(
             {
                 "batchId": batch_id,

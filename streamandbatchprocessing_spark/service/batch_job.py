@@ -9,14 +9,22 @@ any exception and the scheduler pool reset in a finally.
 
 Deliberate fixes of the reference's physical anti-patterns
 (SURVEY.md §4), behavior-identical at the API level:
-  1. row_count comes from the written snapshot's metadata scan, not a
-     second pass over the source lineage (BatchJob.scala:65-71 rescans).
+  1. row_count is observed on the snapshot write (an ``Observation``
+     counting the rows as they are written), not a second pass over the
+     source lineage (BatchJob.scala:65-71 rescans) nor a ``count()`` job
+     over the snapshot. The raw page's ``total`` is that same count.
   2. Analyses read the persisted snapshot, not the source lineage —
      ``full_report`` in the reference recomputes the filtered scan 8×
      (BatchJob.scala:76); here the snapshot is scanned once per
-     analysis from compact, category-partitioned files.
+     analysis from compact, category-partitioned files. The read-back
+     uses the schema the runner wrote, so no schema-inference job runs,
+     and an empty snapshot (no files) reads as zero rows.
   3. Scheduler pool set per-thread via ``setLocalProperty`` (works from
      Python threads under Py4J pinned-thread mode, on by default).
+
+Every batch is a handful of small Spark jobs that queue in the FAIR
+``batch-pool`` behind the stream, so the runner issues only the jobs
+its outputs need; ``phase_s`` on the record says where the time went.
 """
 
 from __future__ import annotations
@@ -27,8 +35,9 @@ import traceback
 import uuid
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..operators.analytics import run_analysis
 from .maintenance import persist_record
@@ -77,22 +86,28 @@ class BatchJobRunner:
         sc = self.spark.sparkContext
         sc.setLocalProperty("spark.scheduler.pool", "batch-pool")
         try:
-            self.registry.update(
-                batch_id, status=BatchStatus.RUNNING, started_at=time.time()
-            )
+            t0 = time.time()
+            self.registry.update(batch_id, status=BatchStatus.RUNNING, started_at=t0)
             source = self._build_source(batch_id, start_date, end_date, filters or {})
+            t1 = time.time()
 
             raw = self.raw_path(batch_id)
             # Snapshot partitioned by category: ~10 partitions whose
             # values downstream filters prune on (BatchJob.scala:65-69).
-            source.write.format(self.fmt).partitionBy("category").mode(
-                "overwrite"
-            ).save(raw)
+            # Fix 1: the write itself counts the rows it writes.
+            written = Observation()
+            source.observe(written, F.count(F.lit(1)).alias("rows")).write.format(
+                self.fmt
+            ).partitionBy("category").mode("overwrite").save(raw)
+            row_count = written.get["rows"]
+            t2 = time.time()
 
-            # Fix 1+2: analyses and the row count read the snapshot back.
-            snapshot = self.spark.read.format(self.fmt).load(raw)
-            row_count = snapshot.count()
-
+            # Fix 2: analyses read the snapshot back, with its known schema.
+            snapshot = (
+                self.spark.read.format(self.fmt)
+                .schema(_snapshot_schema(source.schema))
+                .load(raw)
+            )
             agg = self.agg_path(batch_id)
             results = run_analysis(analysis_type, snapshot)
             if analysis_type == "full_report":
@@ -104,6 +119,7 @@ class BatchJobRunner:
                 results[analysis_type].write.format(self.fmt).mode(
                     "overwrite"
                 ).save(agg)
+            t3 = time.time()
 
             record = self.registry.update(
                 batch_id,
@@ -112,6 +128,11 @@ class BatchJobRunner:
                 row_count=row_count,
                 raw_path=raw,
                 agg_path=agg,
+                phase_s={
+                    "source": t1 - t0,
+                    "snapshot_write": t2 - t1,
+                    "analysis_write": t3 - t2,
+                },
             )
             persist_record(self.base_dir, record)
         except Exception as exc:  # noqa: BLE001 — status machine contract
@@ -147,13 +168,32 @@ class BatchJobRunner:
 
     # -- retrieval (scalable pagination, AGENTS.md:1149-1155 spec) -------
     def page(
-        self, path: str, offset: int = 0, limit: int = 100, max_page: int = 10000
+        self,
+        path: str,
+        offset: int = 0,
+        limit: int = 100,
+        max_page: int = 10000,
+        total: int | None = None,
     ) -> tuple[list[dict], int]:
         """In-plan offset/limit pagination over a persisted result —
         replaces the reference's collect-everything-then-slice
-        (BatchRoutes.scala:147-149). Returns (rows, total)."""
-        df = self.spark.read.format(self.fmt).load(path)
-        total = df.count()
+        (BatchRoutes.scala:147-149). Returns (rows, total). A caller
+        that knows ``total`` (the snapshot's ``row_count``) saves the
+        count job, and the read too when the page is past the end."""
         limit = min(limit, max_page)
+        if total is not None and offset >= total:
+            return [], total
+        df = self.spark.read.format(self.fmt).load(path)
+        if total is None:
+            total = df.count()
         page_df = df.orderBy(*df.columns[:1]).offset(offset).limit(limit)
         return [row.asDict(recursive=True) for row in page_df.collect()], total
+
+
+def _snapshot_schema(source: StructType) -> StructType:
+    """The schema a category-partitioned snapshot of ``source`` reads
+    back with: the partition column last, every column nullable (as
+    file sources read them)."""
+    fields = [f for f in source.fields if f.name != "category"]
+    fields += [source["category"]]
+    return StructType([StructField(f.name, f.dataType, True) for f in fields])

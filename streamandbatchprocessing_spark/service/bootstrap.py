@@ -92,8 +92,10 @@ def build_runtime(
     cfg = config or config_mod.load()
     spark = spark or build_spark(app_name=cfg.app_name, master=cfg.spark.master)
     registry = BatchRegistry()
+    # Batches read the table the stream appends to (both default to parquet).
     runner = BatchJobRunner(
-        spark, registry, base_dir=cfg.tables.batch_base_path
+        spark, registry, base_dir=cfg.tables.batch_base_path,
+        source_loader=lambda: spark.read.parquet(cfg.batch.source_path),
     )
     if source_factory is None:
         def source_factory(topic):  # pragma: no cover — needs Kafka jars

@@ -36,6 +36,8 @@ class BatchJobRecord:
     raw_path: str | None = None
     agg_path: str | None = None
     error: str | None = None
+    #: seconds per run phase: source, snapshot_write, analysis_write
+    phase_s: dict[str, float] | None = None
 
     def to_dict(self) -> dict:
         d = self.__dict__.copy()

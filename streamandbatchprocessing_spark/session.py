@@ -19,10 +19,20 @@ Scale notes (100 TB mindset):
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "streamandbatchprocessing-spark"
+
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+
+
+def is_local_master(master: str) -> bool:
+    """True for ``local`` and ``local[...]``: driver and executors share
+    one JVM. ``local-cluster[...]`` runs separate executor JVMs, so it
+    counts as a cluster."""
+    return _LOCAL_MASTER.fullmatch(master) is not None
 
 
 def default_parallelism() -> int:
@@ -79,6 +89,17 @@ def build_spark(
                 builder.config("spark.scheduler.mode", "FAIR")
                 .config("spark.scheduler.allocation.file", pool_file)
             )
+    if is_local_master(master):
+        # List partition dirs on the driver. Above the threshold (32 paths
+        # by default) Spark lists them in a Spark job, one task per dir;
+        # on a local master those tasks run on the same JVM's threads, so
+        # the job adds no parallelism, only a stage that queues in the
+        # FAIR pools behind the stream. Cluster masters keep the
+        # distributed listing that object stores with many dirs need.
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1),
+        )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

@@ -126,3 +126,41 @@ def test_stop_endpoint_runs_sequence_then_on_stop(spark, tmp_path):
         _time.sleep(0.05)
     assert order[0] == "streams"
     assert order[-1] == "on_stop"
+
+
+def test_built_runtime_runs_a_batch_over_the_stream_table(spark, tmp_path):
+    """``build_runtime`` wires the runner to ``batch.source_path`` (the
+    table the stream appends to), so ``/batch/run`` through the served
+    app completes without an injected loader."""
+    import time as _time
+
+    from streamandbatchprocessing_spark.service.bootstrap import build_runtime
+
+    from .factories import transactions_df
+
+    p = tmp_path / "conf.json"
+    p.write_text(json.dumps({"tables": {"base_path": str(tmp_path / "lake")}}))
+    cfg = config_mod.load(path=str(p), env={})
+    transactions_df(spark, 800).write.partitionBy("event_date").parquet(
+        cfg.batch.source_path
+    )
+    rt = build_runtime(config=cfg, spark=spark, source_factory=lambda t: None)
+    try:
+        client = rt.app.test_client()
+        resp = client.post("/batch/run", json={
+            "analysisType": "revenue_by_region",
+            "startDate": "2024-01-01",
+            "endDate": "2024-12-31",
+        })
+        assert resp.status_code == 202
+        batch_id = resp.get_json()["batchId"]
+        deadline = _time.time() + 120
+        while _time.time() < deadline:
+            record = client.get(f"/batch/status/{batch_id}").get_json()
+            if record["status"] in ("COMPLETED", "FAILED"):
+                break
+            _time.sleep(0.2)
+        assert record["status"] == "COMPLETED", record.get("error")
+        assert record["row_count"] > 0
+    finally:
+        rt.pool.shutdown(wait=True)

@@ -257,3 +257,108 @@ def test_list_status_filter_and_validation(client):
     bad = client.get("/batch/list?status=BOGUS")
     assert bad.status_code == 400
     assert bad.get_json()["error"] == "INVALID_REQUEST"
+
+
+def test_empty_window_completes_with_zero_rows_and_pages(client):
+    """A window that matches no rows leaves a snapshot dir with no
+    files; the known-schema read-back makes the batch COMPLETED with
+    row_count 0, and both pages answer 200 with total 0."""
+    resp = client.post(
+        "/batch/run",
+        json={
+            "analysisType": "revenue_by_category",
+            "startDate": "1999-01-01",
+            "endDate": "1999-01-31",
+        },
+    )
+    batch_id = resp.get_json()["batchId"]
+    record = _wait_done(client, batch_id)
+    assert record["status"] == "COMPLETED", record.get("error")
+    assert record["row_count"] == 0
+    for suffix in ("", "/aggregated"):
+        page = client.get(f"/batch/data/{batch_id}{suffix}")
+        assert page.status_code == 200, page.get_json()
+        body = page.get_json()
+        assert (body["total"], body["rows"], body["hasMore"]) == (0, [], False)
+
+
+def test_full_report_aggregated_page_picks_one_analysis(client):
+    from streamandbatchprocessing_spark.operators.analytics import ANALYSES
+
+    resp = client.post(
+        "/batch/run",
+        json={
+            "analysisType": "full_report",
+            "startDate": "2024-03-01",
+            "endDate": "2024-03-31",
+        },
+    )
+    batch_id = resp.get_json()["batchId"]
+    assert _wait_done(client, batch_id)["status"] == "COMPLETED"
+    for qs in ("", "?analysis=nope"):
+        bad = client.get(f"/batch/data/{batch_id}/aggregated{qs}")
+        assert bad.status_code == 400
+        body = bad.get_json()
+        assert body["error"] == "INVALID_REQUEST"
+        assert all(name in body["message"] for name in ANALYSES)
+    page = client.get(
+        f"/batch/data/{batch_id}/aggregated?analysis=revenue_by_region&limit=5"
+    )
+    assert page.status_code == 200, page.get_json()
+    assert page.get_json()["total"] > 0
+    assert "total_revenue" in page.get_json()["rows"][0]
+
+
+def test_record_carries_phase_seconds(client):
+    resp = client.post(
+        "/batch/run",
+        json={
+            "analysisType": "fraud_analysis",
+            "startDate": "2024-01-01",
+            "endDate": "2024-06-30",
+        },
+    )
+    record = _wait_done(client, resp.get_json()["batchId"])
+    assert record["status"] == "COMPLETED", record.get("error")
+    phases = record["phase_s"]
+    assert set(phases) == {"source", "snapshot_write", "analysis_write"}
+    assert all(v >= 0 for v in phases.values())
+    assert sum(phases.values()) <= record["completed_at"] - record["started_at"]
+
+
+@pytest.mark.parametrize(
+    "window, filters",
+    [
+        (("2024-03-01", "2024-03-31"), {"region": "west"}),
+        (("2024-01-01", "2024-12-31"), {}),
+        (("1999-01-01", "1999-01-31"), {}),
+    ],
+)
+def test_row_count_equals_independent_count(spark, tmp_path, window, filters):
+    """row_count is observed on the snapshot write; it must equal a
+    separate count over the source table, the empty window included."""
+    from pyspark.sql import functions as F
+
+    table = str(tmp_path / "table")
+    transactions_df(spark, 1200).write.partitionBy("event_date").parquet(table)
+    registry = BatchRegistry()
+    runner = BatchJobRunner(
+        spark, registry, str(tmp_path / "base"),
+        source_loader=lambda: spark.read.parquet(table),
+    )
+    batch_id = new_batch_id()
+    registry.register(
+        BatchJobRecord(
+            batch_id=batch_id, analysis_type="revenue_by_category",
+            start_date=window[0], end_date=window[1], filters=filters,
+        )
+    )
+    runner.run(batch_id, *window, "revenue_by_category", filters)
+    record = registry.get(batch_id)
+    assert record.status is BatchStatus.COMPLETED, record.error
+    expected = spark.read.parquet(table).filter(F.col("event_date").between(*window))
+    for column, value in filters.items():
+        expected = expected.filter(F.col(column) == value)
+    assert record.row_count == expected.count()
+    if record.row_count:
+        assert spark.read.parquet(record.raw_path).count() == record.row_count
