@@ -2,46 +2,16 @@
 
 from __future__ import annotations
 
-import os
 import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..config import env_int  # also imported from here by the query modules
 from ..session import ensure_query_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-
-def env_int(name: str, default: int, *, minimum: int = 0) -> int:
-    """Validated integer deployment knob (the ``$SBP_*`` levers).
-
-    One parse discipline for every knob, applied at import: a
-    malformed value fails with a message naming the variable and the
-    accepted range instead of a bare ``ValueError`` from ``int()``
-    deep in a module import, and out-of-range values (negatives for
-    the emission caps, zero for knobs that require a positive working
-    set) are rejected the same way. By convention ``0`` means
-    "disable the bound" for every cap-style knob (``minimum=0``);
-    knobs where zero is meaningless pass ``minimum=1``.
-    """
-    raw = os.environ.get(name)
-    if raw is None:
-        return default
-    try:
-        value = int(raw)
-    except ValueError:
-        raise ValueError(
-            f"${name}={raw!r} is not an integer; expected an int "
-            f">= {minimum} (default {default})"
-        ) from None
-    if value < minimum:
-        raise ValueError(
-            f"${name}={value} is out of range; expected >= {minimum} "
-            f"(default {default}"
-            + (", 0 disables the bound)" if minimum == 0 else ")")
-        )
-    return value
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}

@@ -19,7 +19,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 
 from ..operators.analytics import ANALYSES, VALID_ANALYSIS_TYPES
-from .batch_job import BatchJobRunner, new_batch_id
+from .batch_job import BatchJobRunner, clear_job_group, new_batch_id
 from .registry import BatchRegistry, BatchStatus
 
 try:
@@ -136,7 +136,12 @@ def create_app(
             return _error(
                 "INVALID_REQUEST", "offset and limit must be >= 0", 400
             )
-        rows, total = runner.page(path, offset=offset, limit=limit, total=total)
+        sc = runner.spark.sparkContext
+        sc.setJobGroup(batch_id, f"page {which}")
+        try:
+            rows, total = runner.page(path, offset=offset, limit=limit, total=total)
+        finally:
+            clear_job_group(sc)
         return jsonify(
             {
                 "batchId": batch_id,

@@ -19,8 +19,19 @@ Deliberate fixes of the reference's physical anti-patterns
      analysis from compact, category-partitioned files. The read-back
      uses the schema the runner wrote, so no schema-inference job runs,
      and an empty snapshot (no files) reads as zero rows.
-  3. Scheduler pool set per-thread via ``setLocalProperty`` (works from
-     Python threads under Py4J pinned-thread mode, on by default).
+  3. Scheduler pool and job group (the batch id) set per-thread via
+     ``setLocalProperty`` (works from Python threads under Py4J
+     pinned-thread mode, on by default), so event logs and
+     ``statusTracker().getJobIdsForGroup`` attribute a batch's jobs.
+  4. The snapshot is rebalanced by ``category`` before it is written.
+     Without it each input split writes one file per category it sees:
+     a 7-day, one-filter window (4–7k rows, 4–5 splits) wrote about 50
+     parquet files, which the analysis scan and the raw page then read
+     back. AQE coalesces a small rebalance to one file per category and
+     splits a large or skewed one into advisory-sized files, so the
+     file count follows the bytes, not the split count. Files are
+     dear on a local filesystem without the Hadoop native library:
+     each ``create`` (with its checksum twin) spawns processes.
 
 Every batch is a handful of small Spark jobs that queue in the FAIR
 ``batch-pool`` behind the stream, so the runner issues only the jobs
@@ -85,6 +96,7 @@ class BatchJobRunner:
     ) -> None:
         sc = self.spark.sparkContext
         sc.setLocalProperty("spark.scheduler.pool", "batch-pool")
+        sc.setJobGroup(batch_id, f"{analysis_type} {start_date}..{end_date}")
         try:
             t0 = time.time()
             self.registry.update(batch_id, status=BatchStatus.RUNNING, started_at=t0)
@@ -95,10 +107,11 @@ class BatchJobRunner:
             # Snapshot partitioned by category: ~10 partitions whose
             # values downstream filters prune on (BatchJob.scala:65-69).
             # Fix 1: the write itself counts the rows it writes.
+            # Fix 4: rebalanced by category, one file per category.
             written = Observation()
-            source.observe(written, F.count(F.lit(1)).alias("rows")).write.format(
-                self.fmt
-            ).partitionBy("category").mode("overwrite").save(raw)
+            source.hint("rebalance", "category").observe(
+                written, F.count(F.lit(1)).alias("rows")
+            ).write.format(self.fmt).partitionBy("category").mode("overwrite").save(raw)
             row_count = written.get["rows"]
             t2 = time.time()
 
@@ -145,6 +158,7 @@ class BatchJobRunner:
             persist_record(self.base_dir, record)
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
+            clear_job_group(sc)
 
     def _build_source(
         self,
@@ -188,6 +202,14 @@ class BatchJobRunner:
             total = df.count()
         page_df = df.orderBy(*df.columns[:1]).offset(offset).limit(limit)
         return [row.asDict(recursive=True) for row in page_df.collect()], total
+
+
+def clear_job_group(sc) -> None:
+    """Undo ``sc.setJobGroup`` on this thread (PySpark has no
+    ``clearJobGroup``): the pool thread or request thread goes back to
+    untagged jobs."""
+    for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+        sc.setLocalProperty(key, None)
 
 
 def _snapshot_schema(source: StructType) -> StructType:

@@ -22,6 +22,8 @@ import os
 import shutil
 import tempfile
 
+from ..config import env_int
+
 _STAGED_DIRS: list[str] = []
 _HOOKED = False
 
@@ -48,10 +50,9 @@ _FAST_EPHEMERAL_ROOTS = ("/dev/shm",)
 #: #3) — so anything with a size hint above the cap, or above the
 #: tmpfs' free space with 2x slack, falls back to the disk-backed
 #: system temp root. Checkpoint/sentinel metadata (no hint) is tiny by
-#: construction and stays fast. 0 disables tmpfs staging entirely.
-_STATE_STAGING_MAX_BYTES = int(
-    os.environ.get("SBP_STATE_STAGING_MAX_BYTES", str(1 << 30))
-)
+#: construction and stays fast. 0 disables tmpfs staging entirely; a
+#: malformed or negative value fails at import, naming the variable.
+_STATE_STAGING_MAX_BYTES = env_int("SBP_STATE_STAGING_MAX_BYTES", 1 << 30)
 
 
 def _fast_root(size_hint_bytes: int | None = None) -> str | None:

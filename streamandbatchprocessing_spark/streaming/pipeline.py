@@ -22,6 +22,7 @@ from __future__ import annotations
 import itertools
 import os
 import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,8 +39,9 @@ from ..sources.staging import staging_dir
 
 _MEM_COUNTER = itertools.count()
 
-#: Serializes the shuffle-partition save/set/restore in run_to_memory —
-#: two overlapping drains must not interleave their restores. RLock so
+#: Serializes the shuffle-partition save/set/restore of
+#: :func:`shuffle_partitions` (drains, the live dashboard's start) —
+#: two overlapping callers must not interleave their restores. RLock so
 #: a nested drain on the same thread (e.g. a foreachBatch body that
 #: itself drains) degrades to re-entry instead of deadlock; the nested
 #: save/restore pair is then correctly LIFO within the one thread.
@@ -279,16 +281,28 @@ def run_to_memory(
     # (harmless at fixture scale — AQE re-coalesces batch shuffles);
     # callers that must not perturb the session pass
     # ``state_partitions=None``.
+    with shuffle_partitions(spark, state_partitions):
+        query = writer.start()
+        query.awaitTermination()
+    return spark.table(name)
+
+
+@contextmanager
+def shuffle_partitions(spark: SparkSession, n: int):
+    """Run the body with the session's ``spark.sql.shuffle.partitions``
+    at ``n``, restoring the old value after it (under
+    ``_DRAIN_CONF_LOCK``). A stream started in the body pins ``n`` as
+    its state-partition count in a fresh checkpoint: the query clones
+    the session conf when ``start()`` builds it, so restoring right
+    after ``start()`` returns leaves the running query at ``n``."""
     conf_key = "spark.sql.shuffle.partitions"
     with _DRAIN_CONF_LOCK:
         old_parts = spark.conf.get(conf_key)
-        spark.conf.set(conf_key, str(state_partitions))
+        spark.conf.set(conf_key, str(n))
         try:
-            query = writer.start()
-            query.awaitTermination()
+            yield
         finally:
             spark.conf.set(conf_key, old_parts)
-    return spark.table(name)
 
 
 def dashboard_plan(stream: DataFrame) -> DataFrame:

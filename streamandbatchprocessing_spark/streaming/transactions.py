@@ -6,10 +6,22 @@ transaction stream, (1) an append-mode raw sink partitioned by
 windowed dashboard aggregate — both checkpointed, both running in the
 ``streaming-pool`` FAIR pool; plus the handle management of
 ``routes/StreamRoutes.scala:19-21,73-138``.
+
+The dashboard's state is sized by its key space, not by the cores. It
+is keyed by (5-min window sliding by 1 min, ``category``) under a
+10-min watermark, so it holds about 15 windows × the categories
+whatever the input rate, and its partial aggregation runs map-side
+before the state exchange. Under the session default (2 × cores state
+partitions) every micro-batch ran that many state tasks, each
+committing its own state-store version (a delta file plus its
+checksum) for a handful of rows; with one partition a micro-batch
+commits once. A restart keeps the count pinned in the checkpoint's
+offset log, so older checkpoints keep theirs.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Callable
 
@@ -17,6 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.analytics import realtime_dashboard
 from ..schemas import with_ingest_columns
+from .pipeline import shuffle_partitions
+
+#: State partitions of the dashboard query in a fresh checkpoint. Its
+#: state is bounded by its key space, not by the input rate (see the
+#: module docstring), so one partition holds it at any scale.
+DASHBOARD_STATE_PARTITIONS = 1
 
 
 def start_transaction_pipeline(
@@ -35,9 +53,9 @@ def start_transaction_pipeline(
     try:
         enriched = with_ingest_columns(source)
 
-        def _writer(df: DataFrame, name: str, mode: str, partition_by=None):
+        def _writer(df: DataFrame, name: str, mode: str, sink: str, partition_by=None):
             writer = (
-                df.writeStream.format(fmt)
+                df.writeStream.format(sink)
                 .queryName(name)
                 .outputMode(mode)
                 .option(
@@ -52,7 +70,7 @@ def start_transaction_pipeline(
             return writer
 
         raw_query = _writer(
-            enriched, "raw_transactions", "append", ["event_date"]
+            enriched, "raw_transactions", "append", fmt, ["event_date"]
         ).start(os.path.join(base_dir, "stream", "transactions"))
 
         try:
@@ -62,25 +80,15 @@ def start_transaction_pipeline(
             # complete mode and is chosen automatically when its JARs
             # are present).
             dash = realtime_dashboard(enriched)
-            dash_writer = (
-                dash.writeStream.queryName("stream_aggregations")
-                .outputMode("complete")
-                .option(
-                    "checkpointLocation",
-                    os.path.join(base_dir, "checkpoints", "stream_aggregations"),
-                )
-            )
-            if fmt == "delta":
-                dash_writer = dash_writer.format("delta")
-                target = os.path.join(base_dir, "stream", "stream_aggregations")
-                if trigger_available_now:
-                    dash_writer = dash_writer.trigger(availableNow=True)
-                dash_query = dash_writer.start(target)
-            else:
-                dash_writer = dash_writer.format("memory")
-                if trigger_available_now:
-                    dash_writer = dash_writer.trigger(availableNow=True)
-                dash_query = dash_writer.start()
+            sink = "delta" if fmt == "delta" else "memory"
+            with shuffle_partitions(spark, DASHBOARD_STATE_PARTITIONS):
+                dash_writer = _writer(dash, "stream_aggregations", "complete", sink)
+                if sink == "delta":
+                    dash_query = dash_writer.start(
+                        os.path.join(base_dir, "stream", "stream_aggregations")
+                    )
+                else:
+                    dash_query = dash_writer.start()
         except Exception:
             # A half-started pipeline is worse than none: the raw query
             # would keep running with no handle anyone tracks, and its
@@ -92,9 +100,38 @@ def start_transaction_pipeline(
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
 
 
+def last_progress(query) -> dict | None:
+    """The operator's view of a query's last micro-batch: rates, the
+    trigger's duration, the watermark (event-time queries) and, per
+    state operator, its rows, memory, commit time and partition count.
+    ``None`` before the first progress."""
+    progress = query.lastProgress
+    if progress is None:
+        return None
+    p = json.loads(progress.json)
+    out = {
+        "batchId": p["batchId"],
+        "numInputRows": p.get("numInputRows"),
+        "inputRowsPerSecond": p.get("inputRowsPerSecond"),
+        "processedRowsPerSecond": p.get("processedRowsPerSecond"),
+        "durationMs": {"triggerExecution": p["durationMs"].get("triggerExecution")},
+    }
+    if "watermark" in p.get("eventTime", {}):
+        out["eventTime"] = {"watermark": p["eventTime"]["watermark"]}
+    if p["stateOperators"]:
+        out["stateOperators"] = [
+            {k: op.get(k) for k in (
+                "numRowsTotal", "memoryUsedBytes", "commitTimeMs", "numShufflePartitions",
+            )}
+            for op in p["stateOperators"]
+        ]
+    return out
+
+
 class StreamManager:
     """Query-handle lifecycle for the REST layer (StreamRoutes parity):
-    start → handles; stop-all; status via isActive/id/name."""
+    start → handles; stop-all; status via isActive/id/name, plus each
+    query's :func:`last_progress`."""
 
     def __init__(
         self, spark: SparkSession, source_factory: Callable[[str | None], DataFrame],
@@ -147,7 +184,12 @@ class StreamManager:
         return {
             "active": self.is_active(),
             "queries": [
-                {"id": str(q.id), "name": q.name, "isActive": q.isActive}
+                {
+                    "id": str(q.id),
+                    "name": q.name,
+                    "isActive": q.isActive,
+                    "lastProgress": last_progress(q),
+                }
                 for q in self._queries
             ],
         }

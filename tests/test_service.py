@@ -5,7 +5,9 @@ a real Spark batch job on synthetic transactions."""
 
 from __future__ import annotations
 
+import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -362,3 +364,75 @@ def test_row_count_equals_independent_count(spark, tmp_path, window, filters):
     assert record.row_count == expected.count()
     if record.row_count:
         assert spark.read.parquet(record.raw_path).count() == record.row_count
+
+
+def _run_batch(spark, tmp_path, table, window, filters, analysis="revenue_by_category"):
+    registry = BatchRegistry()
+    runner = BatchJobRunner(
+        spark, registry, str(tmp_path / "base"),
+        source_loader=lambda: spark.read.parquet(table),
+    )
+    batch_id = new_batch_id()
+    registry.register(
+        BatchJobRecord(
+            batch_id=batch_id, analysis_type=analysis,
+            start_date=window[0], end_date=window[1], filters=filters,
+        )
+    )
+    runner.run(batch_id, *window, analysis, filters)
+    record = registry.get(batch_id)
+    assert record.status is BatchStatus.COMPLETED, record.error
+    return record
+
+
+def test_snapshot_holds_one_file_per_category(spark, tmp_path):
+    """A one-filter, 7-day window read from many small input splits is
+    rebalanced by category before the write: one parquet file per
+    ``category=`` dir, the same rows as the filtered source."""
+    from pyspark.sql import functions as F
+
+    table = str(tmp_path / "table")
+    transactions_df(spark, 6000).repartition(8).write.partitionBy("event_date").parquet(table)
+    window, filters = ("2024-03-03", "2024-03-09"), {"payment_method": "credit_card"}
+    record = _run_batch(spark, tmp_path, table, window, filters)
+    dirs = [d for d in os.listdir(record.raw_path) if d.startswith("category=")]
+    assert len(dirs) > 1
+    for d in dirs:
+        files = [f for f in os.listdir(os.path.join(record.raw_path, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    expected = spark.read.parquet(table).filter(
+        F.col("event_date").between(*window) & (F.col("payment_method") == "credit_card")
+    ).drop("batch_id", "processing_timestamp")
+    got = spark.read.parquet(record.raw_path).select(*expected.columns)
+    assert record.row_count == expected.count() > 0
+    assert got.exceptAll(expected).count() == 0
+    assert expected.exceptAll(got).count() == 0
+
+
+def test_batch_and_page_jobs_carry_the_batch_id(spark, runner):
+    """The run and its pages run under ``setJobGroup(batch_id)``, and
+    both threads are untagged again afterwards."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    pool = ThreadPoolExecutor(max_workers=1)
+    try:
+        client = create_app(runner, pool=pool).test_client()
+        resp = client.post(
+            "/batch/run",
+            json={
+                "analysisType": "revenue_by_region",
+                "startDate": "2024-03-01",
+                "endDate": "2024-03-31",
+            },
+        )
+        batch_id = resp.get_json()["batchId"]
+        assert _wait_done(client, batch_id)["status"] == "COMPLETED"
+        run_jobs = set(tracker.getJobIdsForGroup(batch_id))
+        assert run_jobs
+        assert pool.submit(sc.getLocalProperty, "spark.jobGroup.id").result() is None
+        page = client.get(f"/batch/data/{batch_id}/aggregated")
+        assert page.status_code == 200
+        assert set(tracker.getJobIdsForGroup(batch_id)) > run_jobs
+        assert sc.getLocalProperty("spark.jobGroup.id") is None
+    finally:
+        pool.shutdown(wait=True)

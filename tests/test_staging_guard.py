@@ -15,7 +15,11 @@ by construction) keep the fast root.
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import tempfile
+
+import pytest
 
 from streamandbatchprocessing_spark.sources import staging
 
@@ -27,8 +31,6 @@ def _root_of(path: str) -> str:
 def test_oversized_hint_falls_back_to_disk(monkeypatch):
     fast = staging._fast_root()
     if fast is None:
-        import pytest
-
         pytest.skip("host has no tmpfs root")
     monkeypatch.setattr(staging, "_STATE_STAGING_MAX_BYTES", 1024)
     small = staging.staging_dir(
@@ -44,8 +46,6 @@ def test_oversized_hint_falls_back_to_disk(monkeypatch):
 def test_free_space_slack_guard(monkeypatch):
     fast = staging._fast_root()
     if fast is None:
-        import pytest
-
         pytest.skip("host has no tmpfs root")
     st = os.statvfs(fast)
     free = st.f_bavail * st.f_frsize
@@ -67,8 +67,6 @@ def test_zero_cap_disables_fast_root(monkeypatch):
 def test_hintless_state_dirs_keep_fast_root():
     fast = staging._fast_root()
     if fast is None:
-        import pytest
-
         pytest.skip("host has no tmpfs root")
     d = staging.staging_dir("sbp-test-guard-", kind="state")
     assert _root_of(d) == fast, d
@@ -85,3 +83,29 @@ def test_explicit_root_overrides_guard(monkeypatch):
             assert _root_of(d) == override, d
         finally:
             staging.set_staging_root(None)
+
+
+def _staging_cap(value: str) -> subprocess.CompletedProcess:
+    """Import the staging module in a fresh interpreter with
+    ``$SBP_STATE_STAGING_MAX_BYTES`` set; prints the parsed cap."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return subprocess.run(
+        [sys.executable, "-c",
+         "from streamandbatchprocessing_spark.sources import staging as s; "
+         "print(s._STATE_STAGING_MAX_BYTES, s._fast_root() is None)"],
+        cwd=root, capture_output=True, text=True, timeout=120,
+        env=dict(os.environ, SBP_STATE_STAGING_MAX_BYTES=value),
+    )
+
+
+@pytest.mark.parametrize("value", ["1GiB", "-1"])
+def test_malformed_cap_fails_naming_the_variable(value):
+    proc = _staging_cap(value)
+    assert proc.returncode != 0
+    assert "$SBP_STATE_STAGING_MAX_BYTES" in proc.stderr, proc.stderr
+
+
+def test_zero_cap_from_env_disables_fast_root():
+    proc = _staging_cap("0")
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.split() == ["0", "True"]

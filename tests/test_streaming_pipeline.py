@@ -6,6 +6,7 @@ complete-mode dashboard — and the StreamManager lifecycle."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 
@@ -145,6 +146,104 @@ def test_failed_second_query_start_stops_the_first(
         )
     active_names = {q.name for q in spark.streams.active}
     assert "raw_transactions" not in active_names
+
+
+def test_stream_status_reports_last_progress(spark, tx_source_dir, tmp_path):
+    """``/stream/status`` carries each query's last progress; after a
+    drain the dashboard reports its one state partition, and the
+    session's shuffle-partition value is back to what it was."""
+    from streamandbatchprocessing_spark.service.api import create_app
+    from streamandbatchprocessing_spark.service.batch_job import BatchJobRunner
+    from streamandbatchprocessing_spark.service.registry import BatchRegistry
+
+    base = str(tmp_path / "status")
+    session_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    manager = StreamManager(
+        spark,
+        source_factory=lambda topic: _file_stream(spark, tx_source_dir),
+        base_dir=base,
+    )
+    client = create_app(
+        BatchJobRunner(spark, BatchRegistry(), base), stream_manager=manager
+    ).test_client()
+    assert client.post("/stream/start", json={}).status_code == 200
+    try:
+        assert spark.conf.get("spark.sql.shuffle.partitions") == session_parts
+        deadline = time.time() + 60
+        for q in spark.streams.active:
+            q.processAllAvailable()
+            # The progress of the last trigger lands just after its commit.
+            while q.lastProgress is None and time.time() < deadline:
+                time.sleep(0.05)
+        queries = {q["name"]: q for q in client.get("/stream/status").get_json()["queries"]}
+    finally:
+        client.post("/stream/stop")
+    raw, dash = queries["raw_transactions"], queries["stream_aggregations"]
+    for q in (raw, dash):
+        progress = q["lastProgress"]
+        assert {"batchId", "numInputRows", "inputRowsPerSecond",
+                "processedRowsPerSecond", "durationMs"} <= set(progress)
+        assert progress["durationMs"]["triggerExecution"] >= 0
+    assert "stateOperators" not in raw["lastProgress"]
+    assert "watermark" in dash["lastProgress"]["eventTime"]
+    [state] = dash["lastProgress"]["stateOperators"]
+    assert state["numShufflePartitions"] == 1
+    assert state["numRowsTotal"] > 0
+    assert {"memoryUsedBytes", "commitTimeMs"} <= set(state)
+
+
+def test_last_progress_is_null_before_the_first_progress():
+    from streamandbatchprocessing_spark.streaming.transactions import last_progress
+
+    class Fresh:
+        lastProgress = None
+
+    assert last_progress(Fresh()) is None
+
+
+@pytest.mark.parametrize("first_partitions", [None, 8])
+def test_pipeline_restarts_from_its_checkpoint(
+    spark, tmp_path, monkeypatch, first_partitions
+):
+    """Drain half the source, stop, add the rest and restart on the same
+    checkpoint: the raw sink holds every source row exactly once, and
+    the dashboard counts each kept row in its 5 sliding windows. A
+    checkpoint first started at 8 state partitions keeps 8 on restart
+    (the count is pinned in its offset log)."""
+    from pyspark.sql import functions as F
+
+    from streamandbatchprocessing_spark.streaming import transactions as tx
+
+    rows = transactions_df(spark, 800).drop("event_date", "processing_timestamp")
+    src = str(tmp_path / "src")
+    base = str(tmp_path / "pipe")
+    cut = F.col("event_timestamp") < F.lit("2024-03-11").cast("timestamp")
+
+    def drain():
+        queries = start_transaction_pipeline(
+            spark, spark.readStream.schema(rows.schema).parquet(src), base,
+            trigger_available_now=True,
+        )
+        for q in queries:
+            q.awaitTermination()
+        return queries
+
+    rows.filter(cut).write.parquet(src)
+    if first_partitions is not None:
+        monkeypatch.setattr(tx, "DASHBOARD_STATE_PARTITIONS", first_partitions)
+    drain()
+    monkeypatch.undo()
+    rows.filter(~cut).write.mode("append").parquet(src)
+    _, dash = drain()
+
+    raw = spark.read.parquet(os.path.join(base, "stream", "transactions"))
+    assert raw.count() == raw.select("transaction_id").distinct().count() == 800
+    assert raw.select("transaction_id").exceptAll(rows.select("transaction_id")).count() == 0
+    kept = raw.filter(raw.transaction_status.isin("completed", "pending")).count()
+    total = spark.table("stream_aggregations").groupBy().sum("txn_count").first()[0]
+    assert total == 5 * kept
+    [state] = tx.last_progress(dash)["stateOperators"]
+    assert state["numShufflePartitions"] == (first_partitions or 1)
 
 
 def test_dedup_within_watermark_bounds_state(spark, sf_dir):
