@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from streamandbatchprocessing_spark.queries import QUERIES  # noqa: E402
 from streamandbatchprocessing_spark.queries.registry import (  # noqa: E402
+    has_session_artifact,
     release_session_artifacts,
 )
 from streamandbatchprocessing_spark.session import build_spark  # noqa: E402
@@ -350,6 +351,12 @@ def main() -> None:
     phase_probe: dict[str, float] = {}
     phase_probe["pre_artifacts"] = round(_probe(spark), 3)
     artifact_build: dict[str, float] = {}
+    # Artifacts the headline reps already built (e.g. ``sig`` via c02):
+    # their entry times a warm noop write of the cached value, not a build.
+    artifact_warm = [
+        aname for aname, _ in _artifact_builders()
+        if has_session_artifact(spark, sf_dir, aname)
+    ]
     for aname, builder in _artifact_builders():
         try:
             t0 = time.perf_counter()
@@ -386,6 +393,7 @@ def main() -> None:
                "extra_reps": extra_reps,
                "rep_loadavg": rep_loadavg, "rep_probe_secs": rep_probe,
                "artifact_build_secs": artifact_build,
+               "artifact_build_warm": artifact_warm,
                "phase_probe_secs": phase_probe,
                "extra_loadavg_1m": extra_loadavg_1m,
                "final_loadavg": _loadavg()}

@@ -278,15 +278,24 @@ def _ensure_checkpoint_dir(spark: SparkSession) -> None:
     """Set a SparkContext checkpoint dir if the host application has
     not: ``$SBP_CHECKPOINT_DIR`` when given (a real deployment points
     this at durable shared storage — reliable checkpoints MUST be
-    readable by every executor), else an atexit-cleaned staging dir
-    (corpus-scaled data ⇒ ``kind="bulk"``, disk-backed)."""
+    readable by every executor). Only a local master, whose one JVM
+    is every executor, may fall back to an atexit-cleaned staging dir
+    (corpus-scaled data ⇒ ``kind="bulk"``, disk-backed); on any other
+    master a driver-local dir would fake the recovery the reliable
+    regime exists for, so that is an error."""
     sc = spark.sparkContext
     if sc._jsc.sc().checkpointDir().isDefined():  # noqa: SLF001
         return
-    sc.setCheckpointDir(
-        os.environ.get("SBP_CHECKPOINT_DIR")
-        or staging_dir("sbp-reliable-ckpt-", kind="bulk")
-    )
+    path = os.environ.get("SBP_CHECKPOINT_DIR")
+    if not path:
+        if not is_local_master(sc.master):
+            raise RuntimeError(
+                f"the reliable pairs regime on master {sc.master!r} needs a "
+                "checkpoint dir every executor can read: set "
+                "$SBP_CHECKPOINT_DIR or SparkContext.setCheckpointDir"
+            )
+        path = staging_dir("sbp-reliable-ckpt-", kind="bulk")
+    sc.setCheckpointDir(path)
 
 
 def _materialize_lineage_free(spark: SparkSession, df: DataFrame) -> DataFrame:

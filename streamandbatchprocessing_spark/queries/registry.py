@@ -110,6 +110,22 @@ def _unpersist_value(value, *, force: bool = False) -> None:
                 pass  # session already stopped
 
 
+def _artifact_key(spark: SparkSession, sf_dir: str, kind: str) -> tuple:
+    return (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        kind,
+        *(_conf_or_default(spark, k) for k in _ARTIFACT_PLAN_CONF),
+    )
+
+
+def has_session_artifact(spark: SparkSession, sf_dir: str, kind: str) -> bool:
+    """True when :func:`session_artifact` would return ``kind`` for this
+    session, corpus dir and plan-conf variant without building it."""
+    with _ARTIFACT_LOCK:
+        return _artifact_key(spark, sf_dir, kind) in _SESSION_ARTIFACTS
+
+
 def session_artifact(spark: SparkSession, sf_dir: str, kind: str, build):
     """Memoized session-lifetime artifact: ``build()`` runs once per
     (application, corpus dir, artifact kind, plan-conf variant); its
@@ -118,12 +134,7 @@ def session_artifact(spark: SparkSession, sf_dir: str, kind: str, build):
     conf variants are retained per (application, corpus dir, kind) —
     least-recently-used beyond that are unpersisted and rebuilt on
     re-entry."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        kind,
-        *(_conf_or_default(spark, k) for k in _ARTIFACT_PLAN_CONF),
-    )
+    key = _artifact_key(spark, sf_dir, kind)
     with _ARTIFACT_LOCK:
         if key in _SESSION_ARTIFACTS:
             # Refresh LRU position for the variant cap.

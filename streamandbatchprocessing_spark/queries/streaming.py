@@ -18,9 +18,11 @@ from .dedup import _CMS_D, _CMS_MIN_FRAC, _CMS_W
 from ..streaming.pipeline import (
     dashboard_plan,
     events_stream,
+    purchase_click_semi_join_plan,
     run_to_memory,
     session_windows_plan,
     streaming_dedup_plan,
+    user_totals_plan,
 )
 from .registry import query
 
@@ -147,52 +149,7 @@ def f04_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is one (count, cents) pair per user key, partitioned by
     the groupBy — bounded, shuffle-once; production adds a timeout to
     evict idle keys."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..streaming.pipeline import events_stream, run_to_memory
-
-    out_schema = "user_id bigint, n_events bigint, total_cents bigint"
-    # nv = count of non-null values folded in: SUM over a group whose
-    # values are ALL NULL is NULL in SQL, and 0 is a legitimate sum —
-    # only the count can distinguish them.
-    state_schema = "n bigint, cents bigint, nv bigint"
-
-    def update(key, pdfs, state: GroupState):
-        n, cents, nv = state.get if state.exists else (0, 0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            # Half-AWAY-from-zero like the oracle's round(); pandas
-            # .round() is half-to-even and differs on exact .5 cents.
-            # NULL values are excluded exactly as SQL SUM excludes
-            # them — a NaN through astype('int64') is platform garbage
-            # (observed: int64 min leaking into totals), never a sum.
-            v = (pdf["value"] * 100).to_numpy()
-            v = v[~np.isnan(v)]
-            nv += len(v)
-            cents += int(
-                np.copysign(np.floor(np.abs(v) + 0.5), v).astype("int64").sum()
-            )
-        state.update((n, cents, nv))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_cents": pd.array(
-                    [cents if nv else None], dtype="Int64"
-                ),
-            }
-        )
-
-    stream = events_stream(spark, sf_dir)
-    stateful = stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    stateful = user_totals_plan(events_stream(spark, sf_dir))
     result = run_to_memory(stateful, output_mode="update", name_prefix="f04_state")
     # One emitted row per key per micro-batch: keep the final state row.
     from pyspark.sql import Window
@@ -865,34 +822,7 @@ def f14_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (interleaved sf0.001/sf0.1 A/B — state-store machinery dominates
     a 2-batch drain over one tiny file); kept for the structural win
     at production rates, where the source side is a real ingest."""
-    from ..streaming.pipeline import events_stream, run_to_memory
-
-    stream = events_stream(spark, sf_dir)
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "10 minutes")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .withWatermark("ts", "10 minutes")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("c_ts"),
-        )
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 5 MINUTES"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "left_semi",
-    )
+    joined = purchase_click_semi_join_plan(events_stream(spark, sf_dir))
     result = run_to_memory(joined, output_mode="append", name_prefix="f14_semi")
     return result.select("purchase_id", "user_id").orderBy("purchase_id")
 

@@ -76,8 +76,9 @@ def _fast_root(size_hint_bytes: int | None = None) -> str | None:
 
 def set_staging_root(root: str | None) -> None:
     """Override where staged dirs are created (``None`` = the per-kind
-    defaults). Exists for the staging-placement A/B harness
-    (scripts/stream_drain_ab.py); deployments use ``$SBP_STAGING_DIR``."""
+    defaults), in-process: for tests and placement A/Bs (the tmpfs
+    verdict is in OPTIMIZATION_r12.md, item 13). Deployments use
+    ``$SBP_STAGING_DIR``."""
     global _STAGING_ROOT
     _STAGING_ROOT = root
 

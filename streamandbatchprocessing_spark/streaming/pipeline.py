@@ -373,6 +373,90 @@ def streaming_dedup_plan(stream: DataFrame) -> DataFrame:
     )
 
 
+def user_totals_plan(stream: DataFrame) -> DataFrame:
+    """Per-user running totals in explicit GroupState
+    (``applyInPandasWithState``, update mode, no timeout): one
+    ``(user_id, n_events, total_cents)`` row per key per micro-batch.
+    Money accumulates in integer cents inside pandas, so state merge
+    order cannot perturb floats."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    out_schema = "user_id bigint, n_events bigint, total_cents bigint"
+    # nv = count of non-null values folded in: SUM over a group whose
+    # values are ALL NULL is NULL in SQL, and 0 is a legitimate sum —
+    # only the count can distinguish them.
+    state_schema = "n bigint, cents bigint, nv bigint"
+
+    def update(key, pdfs, state: GroupState):
+        n, cents, nv = state.get if state.exists else (0, 0, 0)
+        for pdf in pdfs:
+            n += len(pdf)
+            # Half-AWAY-from-zero like the oracle's round(); pandas
+            # .round() is half-to-even and differs on exact .5 cents.
+            # NULL values are excluded exactly as SQL SUM excludes
+            # them — a NaN through astype('int64') is platform garbage
+            # (observed: int64 min leaking into totals), never a sum.
+            v = (pdf["value"] * 100).to_numpy()
+            v = v[~np.isnan(v)]
+            nv += len(v)
+            cents += int(
+                np.copysign(np.floor(np.abs(v) + 0.5), v).astype("int64").sum()
+            )
+        state.update((n, cents, nv))
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]],
+                "n_events": [n],
+                "total_cents": pd.array(
+                    [cents if nv else None], dtype="Int64"
+                ),
+            }
+        )
+
+    return stream.groupBy("user_id").applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def purchase_click_semi_join_plan(stream: DataFrame) -> DataFrame:
+    """Stream-stream LEFT SEMI join of one events stream with itself:
+    purchases ``(purchase_id, user_id, p_ts)`` with at least one
+    same-user click in the 5 minutes up to the purchase, each emitted
+    once. Both sides are watermarked at 10 minutes, which bounds the
+    join state."""
+    purchases = (
+        stream.filter(F.col("event_type") == "purchase")
+        .withWatermark("ts", "10 minutes")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id"),
+            F.col("ts").alias("p_ts"),
+        )
+    )
+    clicks = (
+        stream.filter(F.col("event_type") == "click")
+        .withWatermark("ts", "10 minutes")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user_id"),
+            F.col("ts").alias("c_ts"),
+        )
+    )
+    return purchases.join(
+        clicks,
+        (F.col("user_id") == F.col("c_user_id"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 5 MINUTES"))
+        & (F.col("c_ts") <= F.col("p_ts")),
+        "left_semi",
+    )
+
+
 def stateful_totals_with_eviction_plan(
     stream: DataFrame, timeout_ms: int = 30 * 60 * 1000
 ) -> DataFrame:

@@ -66,6 +66,11 @@ def test_bench_emits_compact_final_headline_line():
     assert all(v >= 0 for v in extras["artifact_build_secs"].values()), (
         extras["artifact_build_secs"]
     )
+    # Entries whose artifact a headline query already built time a warm
+    # read, and say so: c02 builds the signatures.
+    warm = extras["artifact_build_warm"]
+    assert set(warm) <= set(extras["artifact_build_secs"]), warm
+    assert "sig" in warm, warm
     assert set(extras["phase_probe_secs"]) == {
         "pre_artifacts", "pre_extras", "post_extras"
     }

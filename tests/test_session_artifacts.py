@@ -425,6 +425,34 @@ def test_pairs_materialize_mode_follows_master(spark, monkeypatch):
     assert dedup._pairs_materialize_mode(spark) == "reliable"
 
 
+def test_reliable_checkpoint_computes_its_input_once(spark, monkeypatch):
+    """The eager reliable checkpoint writes its files in the one job
+    that computes the frame, so the candidate stream's 4-band self-join
+    runs once without a persist before the checkpoint (Spark 4.1's
+    ``Dataset.checkpoint`` calls ``doCheckpoint`` directly, with no
+    separate count job), and reads after it come from the checkpoint.
+    A Python UDF counts the rows it evaluates."""
+    from pyspark.sql.types import LongType
+
+    monkeypatch.setattr(dedup, "_PAIRS_MATERIALIZE", "reliable")
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        evaluated.add(1)
+        return x
+
+    df = spark.range(0, 100, numPartitions=4).select(
+        F.udf(tick, LongType())("id").alias("id")
+    )
+    out = dedup._materialize_lineage_free(spark, df)
+    try:
+        assert evaluated.value == 100
+        assert sorted(r.id for r in out.collect()) == list(range(100))
+        assert evaluated.value == 100
+    finally:
+        out.unpersist()
+
+
 def test_full_release_force_drops_checkpoint_blocks(spark, sf_dir):
     """The round-12 advisor's eviction finding: localCheckpoint blocks
     are invisible to DataFrame.unpersist, so the FULL-release path

@@ -702,3 +702,110 @@ def test_cms_grid_survives_midstream_crash(spark, sf_dir, tmp_path):
     )
     want = sorted((r["d"], r["b"], r["c"]) for r in grid(ev).collect())
     assert got == want
+
+
+def _events_in_time_ordered_files(spark, sf_dir, tmp_path, n_files=4):
+    """The events fixture, plus a same-user click 2 minutes before two
+    purchases in three (so the semi join has matches to emit), written
+    as ``n_files`` single-file time slices with increasing mtimes: one
+    micro-batch each under ``maxFilesPerTrigger=1``, in event-time
+    order, so no row arrives behind the watermark."""
+    import glob as _glob
+
+    from pyspark.sql import functions as F
+
+    from streamandbatchprocessing_spark.sources.batch import load_table
+
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+    clicks = ev.filter(
+        (F.col("event_type") == "purchase") & (F.col("event_id") % 3 != 0)
+    ).select(
+        (F.col("event_id") + 10_000_000).alias("event_id"),
+        (F.col("ts") - F.expr("INTERVAL 2 MINUTES")).alias("ts"),
+        "user_id",
+        F.lit("click").alias("event_type"),
+        "value",
+        "props",
+    )
+    ev = ev.unionByName(clicks)
+    lo, hi = ev.select(
+        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
+    ).first()
+    part = ((F.unix_micros("ts") - lo) * n_files / (hi - lo + 1)).cast("int")
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    base = time.time() - 100
+    for i in range(n_files):
+        pdir = str(tmp_path / f"part{i}")
+        ev.filter(part == i).coalesce(1).write.parquet(pdir)
+        dst = f"{src}/{i:02d}.parquet"
+        os.rename(_glob.glob(f"{pdir}/part-*.parquet")[0], dst)
+        os.utime(dst, (base + 10 * i, base + 10 * i))
+    return src
+
+
+@pytest.mark.parametrize(
+    "plan_name, output_mode",
+    [
+        ("purchase_click_semi_join_plan", "append"),  # f14
+        ("user_totals_plan", "update"),  # f04
+    ],
+)
+def test_stateful_drain_restarts_after_midstream_crash(
+    spark, sf_dir, tmp_path, plan_name, output_mode
+):
+    """f14's stream-stream semi join and f04's applyInPandasWithState
+    totals through a crash and restart. The sink of micro-batch 2 fails
+    after the batch ran, so its state version is already on disk; the
+    query restarts on the same checkpoint, resumes at batch 2 and
+    commits that state version again over the file the crashed run
+    left. Every micro-batch's output must equal an uninterrupted run's."""
+    import glob as _glob
+
+    from streamandbatchprocessing_spark.streaming import pipeline
+
+    plan = getattr(pipeline, plan_name)
+    src = _events_in_time_ordered_files(spark, sf_dir, tmp_path)
+    schema = spark.read.parquet(src).schema
+
+    def drain(ck: str, fail_at: int | None = None) -> dict:
+        out: dict = {}
+
+        def sink(batch_df, batch_id: int) -> None:
+            out[batch_id] = sorted(tuple(r) for r in batch_df.collect())
+            if batch_id == fail_at:
+                raise RuntimeError("injected crash")
+
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        q = (
+            plan(stream).writeStream.outputMode(output_mode)
+            .foreachBatch(sink)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination()
+        except Exception:
+            pass  # the crashing run dies on the injected fault
+        finally:
+            if q.isActive:
+                q.stop()
+        return out
+
+    want = drain(str(tmp_path / "ck_ref"))
+    assert any(want.values()), want
+
+    ck = str(tmp_path / "ck")
+    crashed = drain(ck, fail_at=2)
+    assert sorted(crashed) == [0, 1, 2], sorted(crashed)
+    assert _glob.glob(f"{ck}/state/**/3.delta", recursive=True)
+    resumed = drain(ck)
+    assert min(resumed) == 2, sorted(resumed)
+    assert {**crashed, **resumed} == want
