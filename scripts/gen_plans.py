@@ -2,6 +2,12 @@
 plan-shape queries that tests/test_plans.py asserts on.
 
 Usage: python scripts/gen_plans.py [sf_dir]   (default /root/testdata/sf0.01)
+
+``dump`` writes ``.explain('formatted')`` of the named queries to
+``plans/<round>/<query>_<tag>.txt``, the before/after evidence files
+of an optimization round (inputs from ``$SPARK_GRAFT_SF_DIR``):
+
+       python scripts/gen_plans.py dump <round> <before|after> q1 q2 ...
 """
 
 from __future__ import annotations
@@ -9,7 +15,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from streamandbatchprocessing_spark.queries import QUERIES  # noqa: E402
 from streamandbatchprocessing_spark.session import build_spark  # noqa: E402
@@ -581,6 +588,23 @@ ANNOTATED = {
 }
 
 
+def dump(round_dir: str, tag: str, names: list[str]) -> None:
+    spark = build_spark(app_name="dump-plans", enable_fair_scheduler=False,
+                        extra_conf={"spark.ui.enabled": "false"})
+    out_dir = os.path.join(REPO, "plans", round_dir)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        df = QUERIES[name](spark, os.environ["SPARK_GRAFT_SF_DIR"])
+        text = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+            df._jdf.queryExecution(), "formatted"
+        )
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(text)
+        print(f"wrote {path} ({len(text)} chars)")
+    spark.stop()
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = build_spark(
@@ -599,12 +623,14 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()  # finalize AQE
         plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
         out += ["", f"## {name}", "", note, "", "```", plan.rstrip(), "```"]
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote PLANS.md with {len(ANNOTATED)} plans")
     spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["dump"]:
+        dump(sys.argv[2], sys.argv[3], sys.argv[4:])
+    else:
+        main()

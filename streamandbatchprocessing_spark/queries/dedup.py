@@ -2329,8 +2329,10 @@ def c20_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     reordered the tokset joins (db-side first, da-side LAST) so the
     da join's own exchange satisfies the window's clustering and the
     cap costs only a LOCAL sort + WindowGroupLimit — no exchange,
-    plan-pinned (tests/test_plans.py). Measured at sf1.0
-    (scripts/c20_ab_capfree.py, round 11, same-session best-of-2):
+    plan-pinned (tests/test_plans.py). Measured at sf1.0 (round 11,
+    same-session best-of-2; the numbers and the r12/r13 re-measures
+    are recorded in COVERAGE.md, OPTIMIZATION_r12.md and
+    OPTIMIZATION_r13.md):
     reordered-capped 454 s vs round-10-capped 495 s with
     bit-identical emission (396,810 rows). Round 12 re-measured the
     cap's residual with a per-rep INTERLEAVED C,A,C,A protocol on an

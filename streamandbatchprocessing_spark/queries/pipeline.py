@@ -566,8 +566,8 @@ def p06_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume is linear in matching train rows — no pair expansion exists
     in this shape (contrast c04, which must enumerate doc PAIRS).
 
-    Measured A/B at sf1.0 (round 10, best-of-2, scripts/
-    p06_ab_bloom.py — the round-9 verdict's next-round #5): Bloom
+    Measured A/B at sf1.0 (round 10, best-of-2, the round-9 verdict's
+    next-round #5; recorded in COVERAGE.md and OPTIMIZATION_r12.md): Bloom
     pre-screen 7.52 s vs intersect-before-explode 18.14 s (deployed
     r09 shape) vs explode-all + BHJ 33.87 s. At sf10 (100x docs) the
     deployed Bloom path runs 54.3 s quiet best-of-3 under the COLLECT

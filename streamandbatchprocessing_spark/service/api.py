@@ -18,8 +18,10 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark.sql.types import StructType
+
 from ..operators.analytics import ANALYSES, VALID_ANALYSIS_TYPES
-from .batch_job import BatchJobRunner, clear_job_group, new_batch_id
+from .batch_job import BatchJobRunner, clear_job_group, new_batch_id, stop_batches
 from .registry import BatchRegistry, BatchStatus
 
 try:
@@ -50,7 +52,8 @@ def create_app(
     batch pool) — the bootstrap passes the spark-stop/exit step here,
     mirroring ``ControlRoutes.scala:50-76`` → ``Main.scala:43-51``.
     ``stop_grace_seconds`` is the reference's response-flush pause before
-    the drain begins (tests pass 0). A caller-owned ``pool`` lets the
+    the drain begins (tests pass 0); batches still running after it are
+    cancelled. A caller-owned ``pool`` lets the
     bootstrap drain it from the signal/atexit path too.
     """
     if Flask is None:
@@ -114,19 +117,23 @@ def create_app(
             return _error(
                 "BATCH_NOT_READY", f"status={record.status.value}", 409
             )
-        path, total = record.raw_path, record.row_count
+        path, name, total = record.raw_path, "raw", record.row_count
         if which == "agg":
-            path, total = record.agg_path, None
-            if record.analysis_type == "full_report":
+            path = record.agg_path
+            name = record.analysis_type
+            if name == "full_report":
                 # One subdir per analysis; a page is of one of them.
-                analysis = request.args.get("analysis")
-                if analysis not in ANALYSES:
+                name = request.args.get("analysis")
+                if name not in ANALYSES:
                     return _error(
                         "INVALID_REQUEST",
                         f"full_report needs ?analysis=<name>; valid: {list(ANALYSES)}",
                         400,
                     )
-                path = os.path.join(path, analysis)
+                path = os.path.join(path, name)
+            total = (record.agg_row_count or {}).get(name)
+        # Records persisted before schemas were recorded read with inference.
+        schema = (record.schemas or {}).get(name)
         offset = request.args.get("offset", 0, type=int)
         limit = min(request.args.get("limit", DEFAULT_PAGE, type=int), MAX_PAGE)
         if offset < 0 or limit < 0:
@@ -139,7 +146,10 @@ def create_app(
         sc = runner.spark.sparkContext
         sc.setJobGroup(batch_id, f"page {which}")
         try:
-            rows, total = runner.page(path, offset=offset, limit=limit, total=total)
+            rows, total = runner.page(
+                path, offset=offset, limit=limit, total=total,
+                schema=schema and StructType.fromJson(schema),
+            )
         finally:
             clear_job_group(sc)
         return jsonify(
@@ -227,8 +237,9 @@ def create_app(
         # Reference sequence (ControlRoutes.scala:50-76): stop streaming
         # queries synchronously (their count goes in the response), then
         # hand the rest to a shutdown thread so the HTTP response can
-        # flush: grace pause → drain in-flight batches (pool shutdown
-        # waits on running futures) → on_stop (spark.stop / exit).
+        # flush: grace pause, in which running batches may finish → stop
+        # the batches (queued ones never start, running ones have their
+        # Spark jobs cancelled) → on_stop (spark.stop / exit).
         queries_stopped = 0
         if stream_manager is not None:
             # Reference counts only queries that were ACTIVE at stop
@@ -240,7 +251,7 @@ def create_app(
         def _drain_and_stop():
             if stop_grace_seconds:
                 time.sleep(stop_grace_seconds)
-            pool.shutdown(wait=True)
+            stop_batches(runner, pool)
             if on_stop is not None:
                 on_stop()
 

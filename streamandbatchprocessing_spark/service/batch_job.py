@@ -12,7 +12,10 @@ Deliberate fixes of the reference's physical anti-patterns
   1. row_count is observed on the snapshot write (an ``Observation``
      counting the rows as they are written), not a second pass over the
      source lineage (BatchJob.scala:65-71 rescans) nor a ``count()`` job
-     over the snapshot. The raw page's ``total`` is that same count.
+     over the snapshot. The raw page's ``total`` is that same count;
+     each aggregate's row count is observed on its write too, and the
+     schema of every output goes on the record (and ``meta.json``), so
+     a page runs its own job only: no count, no schema inference.
   2. Analyses read the persisted snapshot, not the source lineage —
      ``full_report`` in the reference recomputes the filtered scan 8×
      (BatchJob.scala:76); here the snapshot is scanned once per
@@ -99,7 +102,10 @@ class BatchJobRunner:
         sc.setJobGroup(batch_id, f"{analysis_type} {start_date}..{end_date}")
         try:
             t0 = time.time()
-            self.registry.update(batch_id, status=BatchStatus.RUNNING, started_at=t0)
+            if self.registry.update_if(
+                batch_id, BatchStatus.PENDING, status=BatchStatus.RUNNING, started_at=t0
+            ) is None:
+                return  # failed by a shutdown before this thread got to it
             source = self._build_source(batch_id, start_date, end_date, filters or {})
             t1 = time.time()
 
@@ -108,57 +114,58 @@ class BatchJobRunner:
             # values downstream filters prune on (BatchJob.scala:65-69).
             # Fix 1: the write itself counts the rows it writes.
             # Fix 4: rebalanced by category, one file per category.
-            written = Observation()
-            source.hint("rebalance", "category").observe(
-                written, F.count(F.lit(1)).alias("rows")
-            ).write.format(self.fmt).partitionBy("category").mode("overwrite").save(raw)
-            row_count = written.get["rows"]
+            raw_schema = _snapshot_schema(source.schema)
+            row_count = _write_counted(
+                source.hint("rebalance", "category"), self.fmt, raw, "category"
+            )
             t2 = time.time()
 
             # Fix 2: analyses read the snapshot back, with its known schema.
-            snapshot = (
-                self.spark.read.format(self.fmt)
-                .schema(_snapshot_schema(source.schema))
-                .load(raw)
-            )
+            snapshot = self.spark.read.format(self.fmt).schema(raw_schema).load(raw)
             agg = self.agg_path(batch_id)
             results = run_analysis(analysis_type, snapshot)
-            if analysis_type == "full_report":
-                for name, df in results.items():
-                    df.write.format(self.fmt).mode("overwrite").save(
-                        os.path.join(agg, name)
-                    )
-            else:
-                results[analysis_type].write.format(self.fmt).mode(
-                    "overwrite"
-                ).save(agg)
+            schemas = {"raw": raw_schema.jsonValue()}
+            agg_rows = {}
+            for name, df in results.items():
+                # Each analysis's schema and row count go on the record,
+                # so its pages need no inference or count job either.
+                path = os.path.join(agg, name) if analysis_type == "full_report" else agg
+                schemas[name] = df.schema.jsonValue()
+                agg_rows[name] = _write_counted(df, self.fmt, path)
             t3 = time.time()
 
-            record = self.registry.update(
+            self._finish(
                 batch_id,
                 status=BatchStatus.COMPLETED,
                 completed_at=time.time(),
                 row_count=row_count,
                 raw_path=raw,
                 agg_path=agg,
+                schemas=schemas,
+                agg_row_count=agg_rows,
                 phase_s={
                     "source": t1 - t0,
                     "snapshot_write": t2 - t1,
                     "analysis_write": t3 - t2,
                 },
             )
-            persist_record(self.base_dir, record)
         except Exception as exc:  # noqa: BLE001 — status machine contract
-            record = self.registry.update(
+            self._finish(
                 batch_id,
                 status=BatchStatus.FAILED,
                 completed_at=time.time(),
                 error=f"{type(exc).__name__}: {exc}\n{traceback.format_exc(limit=5)}",
             )
-            persist_record(self.base_dir, record)
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
             clear_job_group(sc)
+
+    def _finish(self, batch_id: str, **changes) -> None:
+        """Record and persist a terminal state, unless a shutdown already
+        failed the batch while it ran."""
+        record = self.registry.update_if(batch_id, BatchStatus.RUNNING, **changes)
+        if record is not None:
+            persist_record(self.base_dir, record)
 
     def _build_source(
         self,
@@ -188,20 +195,55 @@ class BatchJobRunner:
         limit: int = 100,
         max_page: int = 10000,
         total: int | None = None,
+        schema: StructType | None = None,
     ) -> tuple[list[dict], int]:
         """In-plan offset/limit pagination over a persisted result —
         replaces the reference's collect-everything-then-slice
         (BatchRoutes.scala:147-149). Returns (rows, total). A caller
-        that knows ``total`` (the snapshot's ``row_count``) saves the
-        count job, and the read too when the page is past the end."""
+        that knows ``total`` and ``schema`` (both on the batch record)
+        saves the count job and the schema-inference job, and the read
+        too when the page is past the end."""
         limit = min(limit, max_page)
         if total is not None and offset >= total:
             return [], total
-        df = self.spark.read.format(self.fmt).load(path)
+        reader = self.spark.read.format(self.fmt)
+        df = (reader.schema(schema) if schema is not None else reader).load(path)
         if total is None:
             total = df.count()
         page_df = df.orderBy(*df.columns[:1]).offset(offset).limit(limit)
         return [row.asDict(recursive=True) for row in page_df.collect()], total
+
+
+def stop_batches(runner: BatchJobRunner, pool, grace_s: float = 0.0) -> None:
+    """Shut the batch pool down in bounded time: ``pool.shutdown(wait=True)``
+    would wait forever on a hung batch. Queued batches never start.
+    Running ones get ``grace_s`` to finish; then their Spark jobs are
+    cancelled by job group. Both end FAILED with the reason. A thread
+    stuck outside Spark keeps running, but its record stays FAILED."""
+    pool.shutdown(wait=False, cancel_futures=True)
+    registry = runner.registry
+
+    def fail(status: BatchStatus, reason: str) -> list[str]:
+        failed = []
+        for record in registry.list_by_status(status):
+            record = registry.update_if(
+                record.batch_id, status, status=BatchStatus.FAILED,
+                completed_at=time.time(), error=reason,
+            )
+            if record is not None:
+                persist_record(runner.base_dir, record)
+                failed.append(record.batch_id)
+        return failed
+
+    fail(BatchStatus.PENDING, "service stopped before the batch started")
+    deadline = time.time() + grace_s
+    while registry.list_by_status(BatchStatus.RUNNING) and time.time() < deadline:
+        time.sleep(0.05)
+    sc = runner.spark.sparkContext
+    for batch_id in fail(
+        BatchStatus.RUNNING, f"service stopped; cancelled after a {grace_s:g} s grace"
+    ):
+        sc.cancelJobGroup(batch_id)
 
 
 def clear_job_group(sc) -> None:
@@ -210,6 +252,17 @@ def clear_job_group(sc) -> None:
     untagged jobs."""
     for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
         sc.setLocalProperty(key, None)
+
+
+def _write_counted(df: DataFrame, fmt: str, path: str, partition_by: str | None = None) -> int:
+    """Overwrite ``path`` with ``df`` and return the rows written, counted
+    by an ``Observation`` on the write itself (no second job)."""
+    written = Observation()
+    writer = df.observe(written, F.count(F.lit(1)).alias("rows")).write.format(fmt)
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.mode("overwrite").save(path)
+    return written.get["rows"]
 
 
 def _snapshot_schema(source: StructType) -> StructType:

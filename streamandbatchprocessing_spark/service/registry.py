@@ -38,6 +38,11 @@ class BatchJobRecord:
     error: str | None = None
     #: seconds per run phase: source, snapshot_write, analysis_write
     phase_s: dict[str, float] | None = None
+    #: schema (``StructType.jsonValue``) of each written output, keyed
+    #: ``raw`` and by analysis name: pages read them back without inference
+    schemas: dict[str, dict] | None = None
+    #: rows written per analysis (one entry, or eight for full_report)
+    agg_row_count: dict[str, int] | None = None
 
     def to_dict(self) -> dict:
         d = self.__dict__.copy()
@@ -75,6 +80,20 @@ class BatchRegistry:
     def update(self, batch_id: str, **changes) -> BatchJobRecord:
         with self._lock:
             record = self._records[batch_id]
+            updated = replace(record, **changes)
+            self._records[batch_id] = updated
+            return updated
+
+    def update_if(
+        self, batch_id: str, expected: BatchStatus, **changes
+    ) -> BatchJobRecord | None:
+        """``update`` only while the record is in the ``expected`` status;
+        None (and no change) otherwise. A batch failed by a shutdown stays FAILED
+        whatever its thread does later."""
+        with self._lock:
+            record = self._records[batch_id]
+            if record.status is not expected:
+                return None
             updated = replace(record, **changes)
             self._records[batch_id] = updated
             return updated

@@ -30,14 +30,47 @@ rename the FileContext path ends in, and spawns no ``readlink``. It
 also writes a ``.crc`` next to each log file. Cluster masters keep
 Spark's default: their checkpoints live on HDFS, where FileContext's
 rename-with-overwrite is one atomic call and no process is spawned.
+
+Local masters also write every file through ``NioLocalFileSystem``
+(``jvm/NioLocalFileSystem.java``). Without the Hadoop native library,
+``RawLocalFileSystem.setPermission`` runs ``chmod`` as a process, and
+every non-append create and mkdirs ends in it: checkpoint logs, state
+store deltas, ``.crc`` files, parquet parts and their committer dirs
+(330 spawns per f14 drain at sf0.01, 49 for a REST batch and its two
+pages). The class is
+Hadoop's checksummed ``LocalFileSystem`` over a ``RawLocalFileSystem``
+whose ``setPermission`` sets the same 9 mode bits with one
+``chmod(2)`` through ``java.nio``; other modes and filesystems without
+POSIX attributes keep the stock call. File modes and ``.crc`` files are
+unchanged. With ``hive-exec`` among Spark's jars, the stock ``file``
+class is Hive's ``ProxyLocalFileSystem`` (registered last through
+ServiceLoader), a ``FilterFileSystem`` over the same
+``LocalFileSystem``, so nothing else changes either. The source is
+compiled with ``javac`` against ``pyspark/jars`` on first use and cached
+under ``$XDG_CACHE_HOME`` (or ``~/.cache``), keyed by the source and
+the ``javac`` version. It is local-only: it goes on the driver's
+classpath, and a cluster's executors would not have it. Without
+``javac``, when the compile fails, or when a JVM is already running
+(its classpath is fixed), Spark's default class stays in place.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import logging
 import os
 import re
+import shutil
+import subprocess
+import tempfile
+import zipfile
 
+import pyspark
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 DEFAULT_APP_NAME = "streamandbatchprocessing-spark"
 
@@ -47,6 +80,10 @@ FS_CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+
+NIO_LOCAL_FILESYSTEM = "streamandbatchprocessing_spark.jvm.NioLocalFileSystem"
+_NIO_SOURCE = os.path.join(os.path.dirname(__file__), "jvm", "NioLocalFileSystem.java")
+DRIVER_CLASSPATH = "spark.driver.extraClassPath"
 
 
 def is_local_master(master: str) -> bool:
@@ -60,6 +97,53 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def nio_filesystem_jar() -> str | None:
+    """The compiled ``NioLocalFileSystem`` jar, built once per source and
+    ``javac`` version; None, with one log line, when it cannot be built."""
+    javac = shutil.which("javac")
+    try:
+        if javac is None:
+            raise OSError("javac not found on PATH")
+        version = subprocess.run(
+            [javac, "-version"], capture_output=True, text=True, check=True
+        )
+        with open(_NIO_SOURCE, "rb") as f:
+            key = hashlib.sha256(
+                f.read() + (version.stdout + version.stderr).encode()
+            ).hexdigest()[:16]
+        cache = os.path.join(
+            os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+            "streamandbatchprocessing_spark",
+        )
+        jar = os.path.join(cache, f"nio-local-fs-{key}.jar")
+        if os.path.exists(jar):
+            return jar
+        jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
+        api = glob.glob(os.path.join(jars, "hadoop-client-api-*.jar"))
+        if not api:
+            raise OSError(f"no hadoop-client-api jar in {jars}")
+        os.makedirs(cache, exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=cache) as classes:
+            subprocess.run(
+                [javac, "--release", "17", "-nowarn", "-cp", api[0],
+                 "-d", classes, _NIO_SOURCE],
+                capture_output=True, text=True, check=True,
+            )
+            fd, part = tempfile.mkstemp(dir=cache, suffix=".part")
+            with os.fdopen(fd, "wb") as out, zipfile.ZipFile(out, "w") as z:
+                for root, _, files in os.walk(classes):
+                    for name in files:
+                        path = os.path.join(root, name)
+                        z.write(path, os.path.relpath(path, classes))
+            os.replace(part, jar)
+        return jar
+    except (OSError, subprocess.CalledProcessError) as exc:
+        detail = (getattr(exc, "stderr", None) or str(exc)).strip().splitlines()
+        log.warning("NioLocalFileSystem not built, keeping Spark's local "
+                    "filesystem: %s", detail[-1] if detail else exc)
+        return None
+
+
 def build_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -70,6 +154,7 @@ def build_spark(
     """Create (or get) a SparkSession with the engine's defaults."""
     cpus = default_parallelism()
     master = master or f"local[{cpus}]"
+    extra = dict(extra_conf or {})
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -127,7 +212,15 @@ def build_spark(
             "spark.sql.streaming.checkpointFileManagerClass",
             FS_CHECKPOINT_FILE_MANAGER,
         )
-    for key, value in (extra_conf or {}).items():
+        # Only a new JVM can load the class; an existing one would fail
+        # every file access on it.
+        jar = nio_filesystem_jar() if SparkContext._gateway is None else None  # noqa: SLF001
+        if jar is not None:
+            own = extra.pop(DRIVER_CLASSPATH, None)
+            builder = builder.config(
+                "spark.hadoop.fs.file.impl", NIO_LOCAL_FILESYSTEM
+            ).config(DRIVER_CLASSPATH, os.pathsep.join(filter(None, (own, jar))))
+    for key, value in extra.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
 

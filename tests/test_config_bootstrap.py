@@ -89,8 +89,8 @@ def test_runtime_shutdown_ordering(spark, tmp_path):
     order = []
     rt.stream_manager = _FakeStreams(order)
     real_pool_shutdown = rt.pool.shutdown
-    rt.pool.shutdown = lambda wait=True: (
-        order.append("pool"), real_pool_shutdown(wait=wait))[1]
+    rt.pool.shutdown = lambda **kw: (
+        order.append("pool"), real_pool_shutdown(**kw))[1]
     rt.spark = type("S", (), {"stop": lambda self: order.append("spark")})()
     log = rt.shutdown()
     assert order == ["streams", "pool", "spark"]

@@ -436,3 +436,149 @@ def test_batch_and_page_jobs_carry_the_batch_id(spark, runner):
         assert sc.getLocalProperty("spark.jobGroup.id") is None
     finally:
         pool.shutdown(wait=True)
+
+
+def _jobs(spark, group):
+    """Job ids of ``group`` once the listener bus has seen every event."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pages_run_one_job_each(spark, runner):
+    """Pages read with the schema and row count recorded at write time:
+    no schema-inference job, no count job, just the page's own job. The
+    record survives a restart through ``meta.json``."""
+    from pyspark.sql.types import StructType
+
+    from streamandbatchprocessing_spark.service.maintenance import rebuild_registry
+
+    client = create_app(runner).test_client()
+    ids = {}
+    for analysis in ("revenue_by_category", "full_report"):
+        resp = client.post(
+            "/batch/run",
+            json={"analysisType": analysis, "startDate": "2024-03-01",
+                  "endDate": "2024-03-31"},
+        )
+        ids[analysis] = resp.get_json()["batchId"]
+        assert _wait_done(client, ids[analysis])["status"] == "COMPLETED"
+    pages = [
+        (ids["revenue_by_category"], "", "raw"),
+        (ids["revenue_by_category"], "/aggregated", "revenue_by_category"),
+        (ids["full_report"], "/aggregated?analysis=revenue_by_region", "revenue_by_region"),
+    ]
+    restarted = BatchJobRunner(
+        spark, rebuild_registry(runner.base_dir), runner.base_dir, fmt="parquet"
+    )
+    for app_runner in (runner, restarted):
+        app = create_app(app_runner).test_client()
+        for batch_id, suffix, name in pages:
+            record = app_runner.registry.get(batch_id)
+            path = record.raw_path if name == "raw" else runner.agg_path(batch_id)
+            if record.analysis_type == "full_report" and name != "raw":
+                path = os.path.join(path, name)
+            expected = spark.read.parquet(path)
+            assert StructType.fromJson(record.schemas[name]).names == expected.columns
+            before = _jobs(spark, batch_id)
+            page = app.get(f"/batch/data/{batch_id}{suffix}")
+            assert page.status_code == 200, page.get_json()
+            assert len(_jobs(spark, batch_id) - before) == 1, (batch_id, suffix)
+            body = page.get_json()
+            assert body["total"] == expected.count() > 0
+            assert len(body["rows"]) == min(body["total"], 100)
+            assert set(body["rows"][0]) == set(expected.columns)
+
+
+def _blocked_batches(spark, tmp_path, loader, n=2):
+    """A runner whose one pool thread runs the first of ``n`` submitted
+    batches (its source ``loader`` blocks) while the rest queue."""
+    registry = BatchRegistry()
+    runner = BatchJobRunner(spark, registry, str(tmp_path / "base"), source_loader=loader)
+    pool = ThreadPoolExecutor(max_workers=1)
+    ids = []
+    for _ in range(n):
+        batch_id = new_batch_id()
+        registry.register(
+            BatchJobRecord(
+                batch_id=batch_id, analysis_type="revenue_by_category",
+                start_date="2024-03-01", end_date="2024-03-31",
+            )
+        )
+        pool.submit(runner.run, batch_id, "2024-03-01", "2024-03-31", "revenue_by_category")
+        ids.append(batch_id)
+    return runner, pool, ids
+
+
+def test_stop_is_bounded_with_a_hung_batch(spark, tmp_path):
+    """``/stop`` returns and finishes its shutdown within a bound although
+    a batch's source never returns: the queued batch is dropped, the
+    running one failed after the grace, both with a reason."""
+    import threading
+
+    started, release = threading.Event(), threading.Event()
+
+    def hung_source():
+        started.set()
+        release.wait(120)
+        raise RuntimeError("released after the test")
+
+    runner, pool, (running, queued) = _blocked_batches(spark, tmp_path, hung_source)
+    stopped = threading.Event()
+    try:
+        assert started.wait(30)
+        client = create_app(
+            runner, on_stop=stopped.set, stop_grace_seconds=0.2, pool=pool
+        ).test_client()
+        t0 = time.time()
+        assert client.post("/stop").status_code == 200
+        assert stopped.wait(10), "shutdown did not finish"
+        assert time.time() - t0 < 10
+        for batch_id, reason in ((running, "cancelled after"), (queued, "before the batch started")):
+            record = runner.registry.get(batch_id)
+            assert record.status is BatchStatus.FAILED
+            assert reason in record.error
+            assert os.path.exists(os.path.join(runner.base_dir, "batches", batch_id, "meta.json"))
+    finally:
+        release.set()
+        pool.shutdown(wait=True)
+    # The released thread's own failure does not overwrite the recorded reason.
+    assert "cancelled after" in runner.registry.get(running).error
+
+
+def test_runtime_shutdown_cancels_a_batch_stuck_in_a_spark_job(spark, tmp_path):
+    """``Runtime.shutdown`` gives a running batch its grace, then cancels
+    its job group: the shutdown returns in bounded time and the pool
+    thread, stuck in a Spark task, ends too."""
+    import threading
+    from types import SimpleNamespace
+
+    from pyspark.sql import functions as F
+
+    from streamandbatchprocessing_spark.service.bootstrap import Runtime
+
+    @F.udf("double")
+    def slow(x):
+        time.sleep(120)
+        return x
+
+    source = transactions_df(spark, 20).withColumn("total_amount", slow("total_amount"))
+    runner, pool, (running,) = _blocked_batches(spark, tmp_path, lambda: source, n=1)
+    deadline = time.time() + 60
+    while not _jobs(spark, running) and time.time() < deadline:
+        time.sleep(0.1)
+    assert _jobs(spark, running), "the batch never started its Spark job"
+    stub = SimpleNamespace(stop=lambda: None)
+    runtime = Runtime(
+        config=None,
+        spark=SimpleNamespace(stop=lambda: None, sparkContext=SimpleNamespace(applicationId="none")),
+        registry=runner.registry, runner=runner, stream_manager=stub, pool=pool,
+    )
+    t0 = time.time()
+    assert runtime.shutdown(grace_s=0.5)[-1] == "spark_stopped"
+    assert time.time() - t0 < 10
+    record = runner.registry.get(running)
+    assert record.status is BatchStatus.FAILED and "cancelled after a 0.5 s grace" in record.error
+    drained = threading.Thread(target=pool.shutdown)
+    drained.start()
+    drained.join(60)
+    assert not drained.is_alive(), "the cancelled Spark job kept the pool thread"
