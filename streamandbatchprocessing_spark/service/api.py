@@ -21,7 +21,13 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql.types import StructType
 
 from ..operators.analytics import ANALYSES, VALID_ANALYSIS_TYPES
-from .batch_job import BatchJobRunner, clear_job_group, new_batch_id, stop_batches
+from .batch_job import (
+    STOP_GRACE_S,
+    BatchJobRunner,
+    clear_job_group,
+    new_batch_id,
+    stop_batches,
+)
 from .registry import BatchRegistry, BatchStatus
 
 try:
@@ -42,7 +48,7 @@ def create_app(
     runner: BatchJobRunner,
     stream_manager=None,
     on_stop=None,
-    stop_grace_seconds: float = 2.0,
+    stop_grace_seconds: float = STOP_GRACE_S,
     pool: ThreadPoolExecutor | None = None,
 ) -> "Flask":
     """Build the service app around a BatchJobRunner and an optional

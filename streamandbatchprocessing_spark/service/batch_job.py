@@ -115,6 +115,8 @@ class BatchJobRunner:
             # Fix 1: the write itself counts the rows it writes.
             # Fix 4: rebalanced by category, one file per category.
             raw_schema = _snapshot_schema(source.schema)
+            if self._stopped(batch_id):
+                return
             row_count = _write_counted(
                 source.hint("rebalance", "category"), self.fmt, raw, "category"
             )
@@ -131,6 +133,8 @@ class BatchJobRunner:
                 # so its pages need no inference or count job either.
                 path = os.path.join(agg, name) if analysis_type == "full_report" else agg
                 schemas[name] = df.schema.jsonValue()
+                if self._stopped(batch_id):
+                    return
                 agg_rows[name] = _write_counted(df, self.fmt, path)
             t3 = time.time()
 
@@ -159,6 +163,12 @@ class BatchJobRunner:
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
             clear_job_group(sc)
+
+    def _stopped(self, batch_id: str) -> bool:
+        """True once a shutdown has failed the batch: it starts no further
+        write. Spark itself rejects a cancelled group's later jobs, but
+        not the shuffle stages AQE submits ahead of them."""
+        return self.registry.get(batch_id).status is not BatchStatus.RUNNING
 
     def _finish(self, batch_id: str, **changes) -> None:
         """Record and persist a terminal state, unless a shutdown already
@@ -214,12 +224,21 @@ class BatchJobRunner:
         return [row.asDict(recursive=True) for row in page_df.collect()], total
 
 
+#: How long a stop waits for running batches before cancelling them, on
+#: ``/stop`` (the reference's response-flush pause) and on
+#: ``Runtime.shutdown`` alike. It bounds the stop; it is not meant to let
+#: a batch finish (one takes about 5.5 s beside the live stream), since a
+#: batch cut off here ends FAILED with the reason, which its client sees.
+STOP_GRACE_S = 2.0
+
+
 def stop_batches(runner: BatchJobRunner, pool, grace_s: float = 0.0) -> None:
     """Shut the batch pool down in bounded time: ``pool.shutdown(wait=True)``
     would wait forever on a hung batch. Queued batches never start.
-    Running ones get ``grace_s`` to finish; then their Spark jobs are
-    cancelled by job group. Both end FAILED with the reason. A thread
-    stuck outside Spark keeps running, but its record stays FAILED."""
+    Running ones get ``grace_s`` to finish; then their job groups are
+    cancelled, with every job they would start later too. Both end FAILED
+    with the reason. A thread stuck outside Spark keeps running, but its
+    record stays FAILED and it starts no further Spark job."""
     pool.shutdown(wait=False, cancel_futures=True)
     registry = runner.registry
 
@@ -239,11 +258,13 @@ def stop_batches(runner: BatchJobRunner, pool, grace_s: float = 0.0) -> None:
     deadline = time.time() + grace_s
     while registry.list_by_status(BatchStatus.RUNNING) and time.time() < deadline:
         time.sleep(0.05)
-    sc = runner.spark.sparkContext
-    for batch_id in fail(
-        BatchStatus.RUNNING, f"service stopped; cancelled after a {grace_s:g} s grace"
-    ):
-        sc.cancelJobGroup(batch_id)
+    reason = f"service stopped; cancelled after a {grace_s:g} s grace"
+    # PySpark has no cancelJobGroupAndFutureJobs: a thread between two
+    # jobs (in its loader, or between the snapshot and aggregate writes)
+    # would otherwise start its next write after the cancel.
+    jsc = runner.spark.sparkContext._jsc.sc()  # noqa: SLF001
+    for batch_id in fail(BatchStatus.RUNNING, reason):
+        jsc.cancelJobGroupAndFutureJobs(batch_id, reason)
 
 
 def clear_job_group(sc) -> None:

@@ -26,7 +26,7 @@ from ..session import build_spark
 from ..sources.kafka import transaction_stream
 from ..streaming.transactions import StreamManager
 from .api import create_app
-from .batch_job import BatchJobRunner, stop_batches
+from .batch_job import STOP_GRACE_S, BatchJobRunner, stop_batches
 from .registry import BatchRegistry
 
 
@@ -46,10 +46,10 @@ class Runtime:
     _stopped: bool = False
     _stop_lock: threading.Lock = field(default_factory=threading.Lock)
 
-    def shutdown(self, grace_s: float = 2.0) -> list[str]:
+    def shutdown(self) -> list[str]:
         """Reference ordering (Main.scala:74-80): stop streaming queries
-        → drain the batch pool (in-flight batches get ``grace_s``, then
-        are cancelled; queued ones never start) → stop Spark.
+        → drain the batch pool (in-flight batches get ``STOP_GRACE_S``,
+        then are cancelled; queued ones never start) → stop Spark.
         Idempotent — /stop, SIGTERM and atexit can all race into it;
         the lock makes the gate atomic (a bare check-then-set has a
         window where two paths both enter) AND makes a racing caller
@@ -61,7 +61,7 @@ class Runtime:
             self._stopped = True
             self.stream_manager.stop()
             self.shutdown_log.append("streams_stopped")
-            stop_batches(self.runner, self.pool, grace_s)
+            stop_batches(self.runner, self.pool, STOP_GRACE_S)
             self.shutdown_log.append("pool_drained")
             # Release THIS application's session-lifetime artifacts
             # (shared dedup/ANN index builds) before stopping Spark, so

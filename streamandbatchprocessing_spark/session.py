@@ -46,12 +46,13 @@ unchanged. With ``hive-exec`` among Spark's jars, the stock ``file``
 class is Hive's ``ProxyLocalFileSystem`` (registered last through
 ServiceLoader), a ``FilterFileSystem`` over the same
 ``LocalFileSystem``, so nothing else changes either. The source is
-compiled with ``javac`` against ``pyspark/jars`` on first use and cached
-under ``$XDG_CACHE_HOME`` (or ``~/.cache``), keyed by the source and
-the ``javac`` version. It is local-only: it goes on the driver's
-classpath, and a cluster's executors would not have it. Without
-``javac``, when the compile fails, or when a JVM is already running
-(its classpath is fixed), Spark's default class stays in place.
+compiled with ``javac`` against ``pyspark/jars`` on first use into a
+class directory cached under ``$XDG_CACHE_HOME`` (or ``~/.cache``),
+keyed by the source and the ``javac`` version. It is local-only: it
+goes on the driver's classpath, and a cluster's executors would not
+have it. Without ``javac``, when the compile fails, or when a JVM is
+already running (its classpath is fixed; spark-submit and the pyspark
+shell start one before Python), Spark's default class stays in place.
 """
 
 from __future__ import annotations
@@ -64,7 +65,6 @@ import re
 import shutil
 import subprocess
 import tempfile
-import zipfile
 
 import pyspark
 from pyspark import SparkContext
@@ -97,9 +97,10 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def nio_filesystem_jar() -> str | None:
-    """The compiled ``NioLocalFileSystem`` jar, built once per source and
-    ``javac`` version; None, with one log line, when it cannot be built."""
+def nio_filesystem_classes() -> str | None:
+    """The directory of compiled ``NioLocalFileSystem`` classes, built once
+    per source and ``javac`` version; None, with one log line, when it
+    cannot be built."""
     javac = shutil.which("javac")
     try:
         if javac is None:
@@ -115,28 +116,29 @@ def nio_filesystem_jar() -> str | None:
             os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
             "streamandbatchprocessing_spark",
         )
-        jar = os.path.join(cache, f"nio-local-fs-{key}.jar")
-        if os.path.exists(jar):
-            return jar
+        classes = os.path.join(cache, f"nio-local-fs-{key}")
+        if os.path.isdir(classes):
+            return classes
         jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
         api = glob.glob(os.path.join(jars, "hadoop-client-api-*.jar"))
         if not api:
             raise OSError(f"no hadoop-client-api jar in {jars}")
         os.makedirs(cache, exist_ok=True)
-        with tempfile.TemporaryDirectory(dir=cache) as classes:
+        staged = tempfile.mkdtemp(dir=cache)
+        try:
             subprocess.run(
                 [javac, "--release", "17", "-nowarn", "-cp", api[0],
-                 "-d", classes, _NIO_SOURCE],
+                 "-d", staged, _NIO_SOURCE],
                 capture_output=True, text=True, check=True,
             )
-            fd, part = tempfile.mkstemp(dir=cache, suffix=".part")
-            with os.fdopen(fd, "wb") as out, zipfile.ZipFile(out, "w") as z:
-                for root, _, files in os.walk(classes):
-                    for name in files:
-                        path = os.path.join(root, name)
-                        z.write(path, os.path.relpath(path, classes))
-            os.replace(part, jar)
-        return jar
+            try:
+                os.replace(staged, classes)
+            except OSError:
+                if not os.path.isdir(classes):  # no concurrent build got there first
+                    raise
+        finally:
+            shutil.rmtree(staged, ignore_errors=True)
+        return classes
     except (OSError, subprocess.CalledProcessError) as exc:
         detail = (getattr(exc, "stderr", None) or str(exc)).strip().splitlines()
         log.warning("NioLocalFileSystem not built, keeping Spark's local "
@@ -213,13 +215,18 @@ def build_spark(
             FS_CHECKPOINT_FILE_MANAGER,
         )
         # Only a new JVM can load the class; an existing one would fail
-        # every file access on it.
-        jar = nio_filesystem_jar() if SparkContext._gateway is None else None  # noqa: SLF001
-        if jar is not None:
+        # every file access on it. spark-submit and the pyspark shell
+        # start the JVM first and hand its port over in the environment.
+        jvm_running = (
+            SparkContext._gateway is not None  # noqa: SLF001
+            or "PYSPARK_GATEWAY_PORT" in os.environ
+        )
+        classes = None if jvm_running else nio_filesystem_classes()
+        if classes is not None:
             own = extra.pop(DRIVER_CLASSPATH, None)
             builder = builder.config(
                 "spark.hadoop.fs.file.impl", NIO_LOCAL_FILESYSTEM
-            ).config(DRIVER_CLASSPATH, os.pathsep.join(filter(None, (own, jar))))
+            ).config(DRIVER_CLASSPATH, os.pathsep.join(filter(None, (own, classes))))
     for key, value in extra.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

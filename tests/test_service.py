@@ -12,7 +12,12 @@ from concurrent.futures import ThreadPoolExecutor
 import pytest
 
 from streamandbatchprocessing_spark.service.api import create_app
-from streamandbatchprocessing_spark.service.batch_job import BatchJobRunner, new_batch_id
+from streamandbatchprocessing_spark.service.batch_job import (
+    BatchJobRunner,
+    clear_job_group,
+    new_batch_id,
+    stop_batches,
+)
 from streamandbatchprocessing_spark.service.registry import (
     BatchJobRecord,
     BatchRegistry,
@@ -574,11 +579,50 @@ def test_runtime_shutdown_cancels_a_batch_stuck_in_a_spark_job(spark, tmp_path):
         registry=runner.registry, runner=runner, stream_manager=stub, pool=pool,
     )
     t0 = time.time()
-    assert runtime.shutdown(grace_s=0.5)[-1] == "spark_stopped"
+    assert runtime.shutdown()[-1] == "spark_stopped"
     assert time.time() - t0 < 10
     record = runner.registry.get(running)
-    assert record.status is BatchStatus.FAILED and "cancelled after a 0.5 s grace" in record.error
+    assert record.status is BatchStatus.FAILED and "cancelled after a 2 s grace" in record.error
     drained = threading.Thread(target=pool.shutdown)
     drained.start()
     drained.join(60)
     assert not drained.is_alive(), "the cancelled Spark job kept the pool thread"
+
+
+def test_stopped_batch_starts_no_job_after_its_loader_returns(spark, tmp_path):
+    """A batch stopped between Spark jobs (here in its source loader)
+    starts none once the loader returns: its job group is cancelled with
+    the jobs it would start later, so nothing is written for the FAILED
+    record."""
+    import glob
+    import threading
+
+    started, release = threading.Event(), threading.Event()
+    source = transactions_df(spark, 20)
+
+    def late_source():
+        started.set()
+        release.wait(120)
+        return source
+
+    runner, pool, (running,) = _blocked_batches(spark, tmp_path, late_source, n=1)
+    try:
+        assert started.wait(30)
+        stop_batches(runner, pool)
+    finally:
+        release.set()
+        pool.shutdown(wait=True)
+    assert _jobs(spark, running) == set()
+    # A job the thread might still submit in the group is rejected too.
+    sc = spark.sparkContext
+    sc.setJobGroup(running, "late")
+    try:
+        with pytest.raises(Exception, match="SPARK_JOB_CANCELLED"):
+            spark.range(3).collect()
+    finally:
+        clear_job_group(sc)
+    record = runner.registry.get(running)
+    assert record.status is BatchStatus.FAILED and "cancelled after" in record.error
+    batch_dir = os.path.join(runner.base_dir, "batches", running)
+    assert not glob.glob(os.path.join(batch_dir, "**", "*.parquet"), recursive=True)
+    assert not os.path.exists(runner.agg_path(running))

@@ -20,7 +20,7 @@ from .factories import transactions_df
 LISTING = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
 FILE_IMPL = "spark.hadoop.fs.file.impl"
-FAKE_JAR = "/jars/nio-local-fs.jar"
+FAKE_CLASSES = "/cache/nio-local-fs"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -83,22 +83,29 @@ def test_driver_side_listing_only_on_local_masters(monkeypatch, master, listed_o
     assert conf.get(FILE_IMPL) == (
         session.NIO_LOCAL_FILESYSTEM if listed_on_driver else None
     )
-    assert conf.get(session.DRIVER_CLASSPATH) == (FAKE_JAR if listed_on_driver else None)
+    assert conf.get(session.DRIVER_CLASSPATH) == (FAKE_CLASSES if listed_on_driver else None)
 
 
 def _no_jvm_yet(monkeypatch):
     """Record the builder's conf as if no JVM were running, with the
-    filesystem jar already built."""
+    filesystem classes already built."""
     monkeypatch.setattr(session.SparkSession, "builder", _RecordingBuilder())
     monkeypatch.setattr(session.SparkContext, "_gateway", None)
-    monkeypatch.setattr(session, "nio_filesystem_jar", lambda: FAKE_JAR)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    monkeypatch.setattr(session, "nio_filesystem_classes", lambda: FAKE_CLASSES)
 
 
-def test_local_filesystem_needs_a_new_jvm(monkeypatch):
+@pytest.mark.parametrize("jvm", ["python_gateway", "spark_submit"])
+def test_local_filesystem_needs_a_new_jvm(monkeypatch, jvm):
     # A running JVM's classpath is fixed: naming the class would make
-    # every local file access fail with ClassNotFoundException.
+    # every local file access fail with ClassNotFoundException. Under
+    # spark-submit or the pyspark shell the JVM starts before Python,
+    # which finds it through PYSPARK_GATEWAY_PORT.
     _no_jvm_yet(monkeypatch)
-    monkeypatch.setattr(session.SparkContext, "_gateway", object())
+    if jvm == "python_gateway":
+        monkeypatch.setattr(session.SparkContext, "_gateway", object())
+    else:
+        monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "45678")
     conf = session.build_spark(master="local[2]")
     assert FILE_IMPL not in conf and session.DRIVER_CLASSPATH not in conf
 
@@ -119,7 +126,7 @@ def test_extra_classpath_is_appended_to(monkeypatch):
     conf = session.build_spark(
         master="local[2]", extra_conf={session.DRIVER_CLASSPATH: "/a.jar:/b.jar"}
     )
-    assert conf[session.DRIVER_CLASSPATH] == f"/a.jar:/b.jar{os.pathsep}{FAKE_JAR}"
+    assert conf[session.DRIVER_CLASSPATH] == f"/a.jar:/b.jar{os.pathsep}{FAKE_CLASSES}"
 
 
 def test_local_session_lists_on_driver(spark):
@@ -275,7 +282,7 @@ def test_local_writes_spawn_no_processes(tmp_path, sf_dir):
 
 
 def test_session_without_javac_keeps_sparks_local_filesystem(tmp_path):
-    """With no ``javac`` on PATH (and no cached jar), a new session
+    """With no ``javac`` on PATH (and no cached classes), a new session
     starts on Spark's stock local filesystem and says so once."""
     path = []
     for i, d in enumerate(os.environ["PATH"].split(os.pathsep)):
