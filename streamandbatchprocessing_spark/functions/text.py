@@ -1,6 +1,12 @@
 """Text analysis Column builders (token counting, shingles, quality,
 language ID) — JVM built-ins only in the fixture-facing paths.
 
+:func:`tokens` is THE corpus tokenizer: every Spark-side query and
+shared corpus artifact that splits document text into words goes
+through it (``tests/test_textops.py`` enforces that no other module
+splits on a single space), so the word, shingle and set measures all
+describe the same tokens as their ``string_split(text, ' ')`` oracles.
+
 The language-ID heuristic is a real stopword/character n-gram scorer
 meant for natural text; the driver fixture documents are synthetic
 word-salad with a 31-word English vocabulary, so correctness queries
@@ -14,12 +20,12 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def tokens(text: Column) -> Column:
-    """Whitespace tokenization. DuckDB: ``string_split(text, ' ')``."""
+def tokens(text: Column | str) -> Column:
+    """Single-space tokenization. DuckDB: ``string_split(text, ' ')``."""
     return F.split(text, " ")
 
 
-def distinct_tokens(text: Column) -> Column:
+def distinct_tokens(text: Column | str) -> Column:
     return F.array_distinct(tokens(text))
 
 

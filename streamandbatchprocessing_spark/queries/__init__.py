@@ -25,219 +25,13 @@ from . import layout  # noqa: F401
 from .registry import ORACLES, QUERIES
 
 #: Explicit scoring order. The external driver scores the FIRST 50
-#: entries of ``queries()`` in insertion order. Rounds 1–2 greened
-#: a01–a09 + b01–b29 + g01–g12; round 4 greened the full c/d/e/f/m/p
-#: families + b30 (48 hash + c06/m02 rows-only). Round 5's window
-#: swaps in every query without a driver verdict: c11_quantile_sketch
-#: (upgraded from rows-only to a quantile_disc/cont oracle, dedup.py)
-#: and g13_value_correlation (added post-rotation in round 4), plus
-#: this round's new operators — e11_dsir_importance,
-#: f10_streaming_quantiles, f11_lambda_unified_totals,
-#: g14_conversion_funnel, g15_cohort_retention,
-#: p09_quality_percentile_gate, b31_zorder_box_scan, e12_passage_dedup,
-#: d08_label_centroids, g16_range_click_attribution,
-#: g17_time_weighted_value, p10_weighted_sample, g18_session_stats,
-#: d07_mmr_diversified_topk, m06_payload_dedup. Seventeen already-green
-#: r04 entries rotate out to make room (p04, p05, p07, p08, e04, e05,
-#: m03, m04, d02, d03, c08, c01, e01, m01, d01, p03, e02 — every
-#: family keeps stronger in-window siblings).
-#: After this round every registered query has a driver verdict.
-#: Rotated-out queries stay registered after slot 50: each carries a
-#: green CORRECTNESS row and keeps its local strict-oracle test, which
-#: is bit-exact with the driver's compare.
-#:
-#: Mid-round-5 update: twelve operators added this round (c12 CMS heavy
-#: hitters, c13 Bloom pre-screen, e13 bigram-LM scoring, e14 token
-#: entropy, f12 full-outer stream-stream join, p11 column profiling,
-#: b32 partition-pruned layout, g19 gap-fill interpolation, g20 SCD2
-#: history, d09 ANN recall eval, g21 rolling z-score anomaly, b33
-#: dynamic partition pruning) swap in for twelve r04-greened entries
-#: (c03-c06, d05, d06, e03, e06-e09, p06 — each family
-#: keeps in-window siblings and every rotated-out query keeps its
-#: local strict-oracle test; c06's rows-only verdict and e09's hash
-#: verdict both stand from r04).
-#: Round-7 rotation: the seventeen never-scored round-7 operators (c19
-#: cross-source dup matrix, c20 containment pairs, d12 filtered ANN,
-#: d13 norm profile, d14 cell balance, d15 PQ rerank, e17 trigram
-#: novelty, e18 quality rules, e19 collocation lift, f14 stream semi
-#: join, m10 chunk dedup, p17 dedup-adjusted mix, p18 length
-#: histogram, p19 dataset card, g25 hour-of-week profile, g26 RFM
-#: segments, b34 compaction plan) swap in for seventeen r06-greened
-#: entries (c09, c10, c15, c16, d04, d07, e12, e16, f02, f03, f06,
-#: f07, f09, m02, m05, p11, g13 — every family keeps in-window
-#: siblings and every rotated-out query keeps its local strict-oracle
-#: test). c18 stays in: its blocking key changed this round (composite
-#: key), so its output differs from the r06-scored rows and needs a
-#: fresh verdict.
-#: Mid-round-7 update: five more operators (c21 candidate-degree
-#: profile, m11 magic-byte census, g27 top event paths, g28 rolling
-#: 7-day actives, p20 epoch plan) swap in for five r06-greened
-#: re-confirmation entries (f10, f11, g14, m06, p13 — each family
-#: keeps in-window siblings and every rotated-out query keeps its
-#: local strict-oracle test). Second mid-round-7 update: c22 dup-group
-#: histogram, d16 retrieval margin profile, and e20 charclass profile
-#: swap in for three more r06-green re-confirmations (c14, g15, p15);
-#: then g29 revenue-pareto swaps in for g22 (same policy). Third
-#: mid-round-7 update: d17 dim-variance profile, g30 new-vs-returning
-#: actives, and p21 shard manifest swap in for three more r06-green
-#: re-confirmations (d11, g23, p14 — d12–d17, g24–g30, and
-#: p16–p21 keep each family covered in-window). Fourth mid-round-7
-#: update: d18 centroid separation, m12 payload size histogram, and
-#: g31 inter-arrival profile swap in for three more r06-green
-#: re-confirmations (f13, m08, g24 — f01/f08/f12/f14 keep streaming
-#: covered in-window; every rotated-out query keeps its local
-#: strict-oracle test). Fifth mid-round-7 update: p22 quality survival
-#: curve and g32 ship-latency profile swap in for two more r06-green
-#: re-confirmations (c02, p02 — c07/c17/c18/c19–c22 keep dedup
-#: covered in-window, p01/p12/p16–p22 the pipeline family). Sixth
-#: mid-round-7 update: g33 brand-basket lift swaps in for one more
-#: r06-green re-confirmation (b30 — b33/b34 keep the layout family
-#: covered in-window). Seventh mid-round-7 update: d19 PQ codebook
-#: utilization swaps in for one more r06-green re-confirmation (m07 —
-#: m09–m12 keep the multimodal family covered in-window). Eighth
-#: mid-round-7 update: d20 IVF assignment margin swaps in for one more
-#: r06-green re-confirmation (p16 — p17–p22 keep the pipeline family
-#: covered in-window). Ninth mid-round-7 update: e21 source-language
-#: purity swaps in for one more r06-green re-confirmation (c17 —
-#: c07/c18–c22 keep the dedup family covered in-window). Tenth
-#: mid-round-7 update: g34 cohort LTV swaps in for one more r06-green
-#: re-confirmation (m09 — m10–m12 keep the multimodal family covered
-#: in-window). Eleventh mid-round-7 update: p23 length x quality grid
-#: swaps in for one more r06-green re-confirmation (p01 — p12/p17–p23
-#: keep the pipeline family covered in-window). Twelfth mid-round-7
-#: update: c23 simhash bit bias swaps in for one more r06-green
-#: re-confirmation (c07 — c18–c23 keep the dedup family covered
-#: in-window). Thirteenth mid-round-7 update: d21 embedding drift
-#: swaps in for one more re-confirmation (p12 — its rows-only-by-design
-#: verdict stands from r06 and its accuracy-vs-exact test is local;
-#: p17–p23 keep the pipeline family covered in-window). Fourteenth
-#: mid-round-7 update: b35 range-clustered scan swaps in for one more
-#: r06-green re-confirmation (b33 — b34/b35 keep the layout family
-#: covered in-window). Fifteenth mid-round-7 update: f15 streaming
-#: latest-state swaps in for one more r06-green re-confirmation (f08
-#: — f01/f12/f14/f15 keep the streaming family covered in-window).
-#: Round-8 rotation: the eight operators registered beyond the
-#: saturated round-7 window (c24 dup label conflicts, c25 minhash
-#: fn-family census, d22 nearest-centroid confusion, d23 PQ distortion
-#: profile, e22 vocab growth curve, g35 purchase-frequency curve, m13
-#: HRW placement plan, p24 split balance audit) swap in for eight
-#: r07-greened re-confirmations (c21, c22, d13, d16, e20, g25, m11,
-#: p18 — every family keeps in-window siblings and every rotated-out
-#: query keeps its local strict-oracle test). After this rotation
-#: every registered query either carries a driver verdict or sits
-#: inside the scoring window.
-#: Round-9 rotation: the 13 queries whose PHYSICAL BUILD moved onto the
-#: round-8 ``session_artifact`` plumbing AFTER their last driver verdict
-#: (c02, c03, c04, c07, c08, c09, c10, c14, c15, c16 — consumers of the
-#: shared MinHash signature / banded-candidate / token-set artifacts in
-#: queries/dedup.py — and d04, d05, d06 — consumers of the shared
-#: quantized-vector / k-means / PQ artifacts in queries/similarity.py)
-#: rotate in for fresh verdicts on the rewritten plumbing, per the c18
-#: precedent (rewritten queries earn fresh verdicts even when outputs
-#: are pinned bit-identical by tests/test_session_artifacts.py). They
-#: swap out 13 r08-greened re-confirmations whose code is UNCHANGED
-#: since their verdict: c18, c19, c20, c23, c24, c25, d14, d17, d18,
-#: d19, d20, d21, d23 — dedup keeps 10 in-window siblings, similarity
-#: keeps d04/d05/d06/d10/d12/d15/d22, and every rotated-out query keeps
-#: its local strict-oracle test.
-#: Mid-round-9 update: six NEW operators (c26 LSH band-plan S-curve,
-#: d24 cosine→label reliability curve, e23 token burstiness, g36
-#: order-value reconciliation, m14 HRW rebalance audit, p25
-#: context-length fit) swap in for six green re-confirmations whose
-#: code is unchanged since their verdict (d22, e22 — both r08-green —
-#: m12, p20, g26, g27 — r07-green; every family keeps in-window
-#: siblings and every rotated-out query keeps its local strict-oracle
-#: test). The 13 artifact-rewritten queries all keep their slots.
-#: Second mid-round-9 update: three more NEW operators (c27 dedup
-#: threshold sweep, e24 source vocabulary JSD matrix, g37 order-status
-#: consistency audit) swap in for three more green re-confirmations
-#: unchanged since their verdict (m10, g28, b34 — all r07-green;
-#: m13/m14 keep multimodal covered, g29–g37 analytics, b35 layout).
-#: Third mid-round-9 update: two more NEW operators (d25 SQ bit-width
-#: distortion sweep, p26 train/val split leakage audit) swap in for
-#: two more r07-green re-confirmations (d15, p17 — d04–d12/d24 keep
-#: similarity covered, p19/p21–p26 the pipeline family). Fourth:
-#: p27 tokenizer fertility census swaps in for p19 (r07-green;
-#: p21–p27 keep the pipeline family covered).
-#: Round-10 rotation (the round-9 verdict's #1, same c18 precedent):
-#: the 12 queries whose PHYSICAL BUILD changed after their last driver
-#: verdict rotate in for fresh verdicts — the round-9 late rewrites
-#: p06 (intersect-before-explode), c20 (tokset-artifact injectivity
-#: audit; ALSO gains the round-10 emission bound), the five k-means
-#: artifact consumers d11/d14/d18/d20/d22 (derived `_ivf_k_for` +
-#: projected seed collect, similarity.py), the four aliased self-join
-#: sites c01/d09/p01/p17, and c18 (round-10 enforced emission bound,
-#: _FUZZY_TOPN). They swap out 12 r09-greened re-confirmations whose
-#: code is UNCHANGED since their verdict: c03, c04, c08, c10, c15,
-#: c16, d05, d06, p21, p22, g29, g30 — dedup keeps
-#: c02/c07/c09/c14/c26/c27 in-window siblings, similarity keeps
-#: d04/d10/d12/d24/d25, pipeline keeps p23–p27, analytics keeps
-#: g31–g37; every rotated-out query keeps its local strict-oracle
-#: test.
-#: Round-12 rotation (the round-11 verdict's #1 — freshness, not new
-#: code): CORRECTNESS_r11 greened all 50 round-10/11 window entries
-#: (fifth consecutive all-green round; the cumulative record covers
-#: all 212 registered queries), so the window turns to the 12 queries
-#: whose LAST OFFICIAL driver record is the since-fixed round-3
-#: TIMESTAMP_NTZ loader error (a02–a09, b11, g09, g10, g12 — each
-#: last officially green in round 2, nine rounds ago, and green in
-#: every round-11 replica/perturbation run since the fix), the 28
-#: other queries whose last official green is round 2 (b02, b04–b08,
-#: b10, b13–b15, b17–b20, b23–b29, g01, g03, g05–g08, g11), and the 9
-#: whose last official green is round 3 (b01, b03, b09, b12, b16,
-#: b21, b22, g02, g04). The 50th slot is c18, whose probe-regime gate
-#: was rewritten this round (planner-derived trial plan replacing the
-#: round-11 size model — same physical plan at every tested conf, but
-#: the build changed, so per the c18 precedent it earns a fresh
-#: verdict). All 49 rotated-out round-10/11 entries are r10+r11
-#: double-green, unchanged since their verdict, and keep their local
-#: strict-oracle tests; the c/d/e/f/m/p families cede window coverage
-#: for one round — every member is r9–r11 official-green and covered
-#: by the full-registry replica + perturbation sweep the gate records
-#: in COVERAGE.md.
-#: LATE-ROUND-12 REVISION (degenerate-input hardening): the mid-round
-#: sweep over zero-row and null-hostile fixtures
-#: (scripts/degenerate_sweep.py; COVERAGE.md round-12 section) changed
-#: the build of 36 queries (try_divide/when-otherwise null semantics,
-#: hierarchical rollup/cube, F.get blocking keys, state-function NaN
-#: handling, explicit-schema partitioned reads, empty-panel guards)
-#: and the ORACLE text of 7 more (json_valid guards, concat_ws
-#: parity, NULLS FIRST pins, coalesce on empty). Per the c18
-#: precedent every post-verdict change earns a fresh verdict, so they
-#: take the freshness fills' slots; the round-11 verdict's #1 ask —
-#: the 12 stale-error queries a02–a09/b11/g09/g10/g12 — keeps its 12
-#: slots (a02/a05/g10 are also oracle-changed). The UNICODE sweep
-#: added two more changes: c11 (6dp-quantized continuous quantiles —
-#: R-7 interpolation diverges in the last ulp between engines) takes
-#: a slot; g08 (full-case ß→SS oracle pin) was already in. Three
-#: guard-only changes stay OUTSIDE the window for space, their
-#: real-data plans bit-identical and their builds covered by
-#: in-window siblings sharing the same artifact code path: d03 (its
-#: empty-panel guard mirrors in-window d05's), d15 (consumes the same
-#: _pq_adc_scores artifact as in-window d06) and f08 (same staged
-#: source + interval-join machinery as in-window f12); all three are
-#: green in this round's full-registry replica and keep local
-#: strict-oracle tests. The evicted round-2/3 freshness fills (b01–b29 set, g01,
-#: g02, g04–g07) are unchanged-since-verdict, replica-green, and next
-#: in line for round 13.
-#: Round-13 rotation (the round-12 verdict's #9, same c18 precedent):
-#: CORRECTNESS_r12 greened all 50 round-12 entries; the queries whose
-#: physical build changed THIS round rotate in for fresh verdicts —
-#: c15 (reads the session-shared signature artifact instead of an
-#: inline rebuild) and, per the round-9 "rewritten plumbing" rule, the
-#: candidate-stream representatives c14 (first consumer: sig + pairs +
-#: count artifacts) and c20 (heaviest consumer: pairs + toksets) after
-#: the artifact's materialization function gained the round-13
-#: reliable-checkpoint regime gate (the local-master path compiles to
-#: the identical round-12 plan — pinned by tests/test_plans.py — but
-#: the build changed, so they earn fresh verdicts). They swap out
-#: three r12-green entries unchanged since their verdict: a03 (a02/
-#: a04–a09 keep the family covered in-window), e06 (e13/e17/e19/e21
-#: keep textops covered), g03 (g08–g12/g17/g35–g37 keep analytics
-#: covered); all three stay registered with their strict-oracle tests.
+#: entries of ``queries()`` in insertion order; these names come first,
+#: every other query follows in registration order. The window holds
+#: the queries whose build or oracle changed since their last driver
+#: verdict (git log and CHANGES.md record each rotation); a query
+#: rotated out stays registered with its local strict-oracle test.
 PRIORITY_ORDER: tuple[str, ...] = (
-    # stale-error set (round-11 verdict #1): last official record is
-    # the round-3 loader error; last official green round 2
+    # oldest driver records: a since-fixed timestamp loader error
     "a02_type_category_grid",
     "a04_user_segmentation", "a05_anomaly_hotspots",
     "a06_hourly_trends", "a07_type_performance",
@@ -245,7 +39,7 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "b11_asof_last_click",
     "g09_multigrain_time_rollup", "g10_json_extraction",
     "g12_sql_interface",
-    # build changed this round: ANSI-null/empty-input hardening
+    # build changed: ANSI-null/empty-input hardening
     "b07_priority_rollup", "b16_returnflag_cube",
     "b32_partition_pruned_scan", "b33_dynamic_partition_prune",
     "c11_quantile_sketch", "c13_bloom_prefilter",
@@ -264,8 +58,8 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "p04_stratified_sample", "p13_curriculum_buckets",
     "p19_dataset_card", "p22_quality_survival_curve",
     "p24_split_balance_audit", "p26_split_leakage_audit",
-    # oracle text changed this round (json_valid / concat_ws /
-    # NULLS FIRST / empty-coalesce pins) — same Spark build
+    # oracle text changed (json_valid / concat_ws / NULLS FIRST /
+    # empty-coalesce pins) — same Spark build
     "e17_trigram_novelty",
     "e21_source_language_purity", "g08_part_name_features",
     "m01_binary_payload_stats", "p11_column_profile",

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hash60, minhash_hashes
 from ..functions.aggregates import pround, pround_sql
+from ..functions.text import shingles, tokens
 from ..plans import static_plan
 from ..session import is_local_master
 from ..sources.batch import load_table
@@ -130,10 +131,29 @@ def _minhash_oracle() -> str:
     """
 
 
+def corpus_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus token projection ``(doc_id, source, toks)`` over
+    ``documents``. The four shared text artifacts (signatures, token
+    sets, SimHash fingerprints, shingles) all derive from it, so each
+    of their plans splits ``text`` once per document. A plain
+    projection, not a memoized artifact: each build scans the corpus
+    once either way, and a cached token copy would cost memory and a
+    release path."""
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", tokens("text").alias("toks")
+    )
+
+
 def _sig_df(docs: DataFrame) -> DataFrame:
-    """MinHash(16) signature per doc: explode distinct tokens, hash each
-    token ONCE (md5), derive the 16-function family arithmetically, MIN
-    per function. One shuffle (groupBy doc_id).
+    """MinHash(16) signature per doc of a ``(doc_id, text)`` frame."""
+    return _sig_of_tokens(docs.select("doc_id", tokens("text").alias("toks")))
+
+
+def _sig_of_tokens(toks: DataFrame) -> DataFrame:
+    """MinHash(16) signature per doc of a ``(doc_id, toks)`` frame:
+    explode distinct tokens, hash each token ONCE (md5), derive the
+    16-function family arithmetically, MIN per function. One shuffle
+    (groupBy doc_id).
 
     The family is PROJECTED before the groupBy rather than inlined into
     the 16 ``min(...)`` aggregate expressions: ProjectExec's codegen
@@ -141,9 +161,7 @@ def _sig_df(docs: DataFrame) -> DataFrame:
     HashAggregate's update expressions get no CSE — inlining made the
     plan evaluate md5 32× per token (measured 0.66s vs 0.40s for this
     stage at sf0.1)."""
-    tok = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("tok")
-    )
+    tok = toks.select("doc_id", F.explode(F.array_distinct("toks")).alias("tok"))
     hashes = minhash_hashes(F.col("tok"), _N_HASHES)
     projected = tok.select(
         "doc_id", *[h.alias(f"x{i}") for i, h in enumerate(hashes)]
@@ -241,7 +259,7 @@ def shared_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed signature artifact)."""
     return _session_artifact(
         spark, sf_dir, "sig",
-        lambda: _sig_df(load_table(spark, sf_dir, "documents")),
+        lambda: _sig_of_tokens(corpus_tokens(spark, sf_dir)),
     )
 
 
@@ -279,10 +297,9 @@ def _ensure_checkpoint_dir(spark: SparkSession) -> None:
     not: ``$SBP_CHECKPOINT_DIR`` when given (a real deployment points
     this at durable shared storage — reliable checkpoints MUST be
     readable by every executor). Only a local master, whose one JVM
-    is every executor, may fall back to an atexit-cleaned staging dir
-    (corpus-scaled data ⇒ ``kind="bulk"``, disk-backed); on any other
-    master a driver-local dir would fake the recovery the reliable
-    regime exists for, so that is an error."""
+    is every executor, may fall back to an atexit-cleaned staging dir;
+    on any other master a driver-local dir would fake the recovery the
+    reliable regime exists for, so that is an error."""
     sc = spark.sparkContext
     if sc._jsc.sc().checkpointDir().isDefined():  # noqa: SLF001
         return
@@ -294,7 +311,7 @@ def _ensure_checkpoint_dir(spark: SparkSession) -> None:
                 "checkpoint dir every executor can read: set "
                 "$SBP_CHECKPOINT_DIR or SparkContext.setCheckpointDir"
             )
-        path = staging_dir("sbp-reliable-ckpt-", kind="bulk")
+        path = staging_dir("sbp-reliable-ckpt-")
     sc.setCheckpointDir(path)
 
 
@@ -391,8 +408,8 @@ def shared_toksets(spark: SparkSession, sf_dir: str) -> DataFrame:
     <3e-4 collision probability — a trillion-token deployment would
     widen to two independent 64-bit hashes). The DuckDB oracles keep
     intersecting the raw STRING lists, so the hash compare
-    cross-checks the mapping every round. For real corpora (no oracle
-    cross-check, no fixture test), set
+    cross-checks the mapping on every oracle run. For real corpora (no
+    oracle cross-check, no fixture test), set
     ``SBP_VERIFY_TOKEN_HASH_INJECTIVITY=1``: the artifact build then
     runs one corpus-wide ``countDistinct(token) ==
     countDistinct(xxhash64(token))`` audit and raises on any
@@ -400,10 +417,10 @@ def shared_toksets(spark: SparkSession, sf_dir: str) -> DataFrame:
     at build, never per consumer."""
 
     def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
+        corpus = corpus_tokens(spark, sf_dir)
         if os.environ.get("SBP_VERIFY_TOKEN_HASH_INJECTIVITY") == "1":
             audit = (
-                docs.select(F.explode(F.split("text", " ")).alias("tok"))
+                corpus.select(F.explode("toks").alias("tok"))
                 .agg(
                     F.countDistinct("tok").alias("n_tok"),
                     F.countDistinct(F.xxhash64("tok")).alias("n_hash"),
@@ -417,10 +434,10 @@ def shared_toksets(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"{audit['n_hash']} distinct hashes); widen to the "
                     "two-hash mapping before trusting set-size measures"
                 )
-        return docs.select(
+        return corpus.select(
             "doc_id",
             F.array_distinct(
-                F.transform(F.split("text", " "), lambda t: F.xxhash64(t))
+                F.transform("toks", lambda t: F.xxhash64(t))
             ).alias("toks"),
         )
 
@@ -549,11 +566,10 @@ def _simhash_oracle() -> str:
 
 def shared_simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-shared persisted (doc_id, simhash) fingerprint table —
-    the SimHash twin of ``shared_sig`` (round-12 optimization): c03
-    reads it on both sides of each of its 4 block joins and c23's
-    census reads it twice (total + bit explode), so the corpus
-    tokenize+md5+bit-sum pass is a build-once pipeline checkpoint,
-    not a per-consumer rebuild."""
+    the SimHash twin of ``shared_sig``: c03 reads it on both sides of
+    each of its 4 block joins and c23's census reads it twice (total +
+    bit explode), so the corpus tokenize+md5+bit-sum pass is a
+    build-once pipeline checkpoint, not a per-consumer rebuild."""
     return _session_artifact(
         spark, sf_dir, "simhash_fp", lambda: _simhash_fp(spark, sf_dir)
     )
@@ -563,10 +579,8 @@ def _simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, simhash) — the Spark twin of ``_simhash_fp_cte``: one
     explode + one doc_id groupBy, linear; shared by c03 and c23 via
     ``shared_simhash_fp``."""
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split("text", " "))).alias("tok"),
+    tok = corpus_tokens(spark, sf_dir).select(
+        "doc_id", F.explode(F.array_distinct("toks")).alias("tok")
     )
     h = tok.withColumn("hv", hash60(F.col("tok")))
     bit_sums = [
@@ -601,8 +615,7 @@ def c03_simhash_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on doc_id."""
     # fp feeds both sides of each of the 4 block joins — the session-
     # shared persisted fingerprint artifact, so the corpus
-    # tokenize+hash pass runs once per corpus snapshot (round 12;
-    # previously a per-query persist_tracked rebuild).
+    # tokenize+hash pass runs once per corpus snapshot.
     fp = shared_simhash_fp(spark, sf_dir)
     parts = [
         fp.alias("a")
@@ -641,34 +654,26 @@ def c03_simhash_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MAX_SHINGLE_DF = 64
 
 
-def shingles_col():
-    """Per-document distinct 3-shingle array — THE single definition
-    shared by c04 (the pair join), c16 (the DF spectrum that justifies
-    c04's cap), e17 (novelty), and the c16 accounting test, so the
-    spectrum can never drift from the cost model it describes."""
-    return F.array_distinct(
-        F.expr(
-            "CASE WHEN size(split(text, ' ')) < 3 THEN array() "
-            "ELSE transform(sequence(0, size(split(text, ' ')) - 3), "
-            "i -> concat_ws(' ', slice(split(text, ' '), i + 1, 3))) END"
-        )
-    )
-
-
 def shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-shared exploded distinct-3-shingle stream ``(doc_id,
-    source, g)``. Shingle GENERATION (higher-order transform/slice/
-    concat — Catalyst interprets these) dominates every consumer's
-    downstream work, and three operators read the same stream: c04's
-    posting lists, c16's DF spectrum, e17's novelty join. One persisted
-    pass — the shingle table a production dedup pipeline materializes
-    alongside its signatures. Docs under 3 tokens emit no rows;
+    source, g)`` — the one shingle definition (``functions/text.shingles``
+    over the corpus tokens) behind c04's posting lists, c16's DF
+    spectrum (which justifies c04's cap) and e17's novelty join, so the
+    spectrum can never drift from the cost model it describes. Shingle
+    GENERATION (higher-order transform/slice/concat — Catalyst
+    interprets these) dominates every consumer's downstream work, so it
+    is one persisted pass — the shingle table a production dedup
+    pipeline materializes alongside its signatures. The tokens are a
+    projected column, so ``text`` is split once per document, not once
+    per shingle inside the lambda. Docs under 3 tokens emit no rows;
     consumers that must report them restore via a doc-panel left join
     (e17's move)."""
     return _session_artifact(
         spark, sf_dir, "shingles",
-        lambda: load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", F.explode(shingles_col()).alias("g")
+        lambda: corpus_tokens(spark, sf_dir).select(
+            "doc_id",
+            "source",
+            F.explode(F.array_distinct(shingles(F.col("toks")))).alias("g"),
         ),
     )
 
@@ -714,7 +719,7 @@ def c04_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs either way). Union sizes come from per-doc set sizes, so no
     pairwise set materialization."""
     # The exploded shingle stream is the session-shared artifact; the
-    # per-doc set size comes from a count over it (shingles_col is
+    # per-doc set size comes from a count over it (the shingles are
     # array_distinct'd, so rows per doc == set size) — only docs that
     # appear in a pair need a size, and pair members have shingles by
     # construction.
@@ -1415,7 +1420,7 @@ def c13_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         # NULL, matching the oracle's array_to_string(NULL) → NULL th
         # (NULL th never matches anything in either engine).
         F.md5(
-            F.array_join(F.slice(F.split("text", " "), 1, _BF_PREFIX), " ")
+            F.array_join(F.slice(tokens("text"), 1, _BF_PREFIX), " ")
         ).alias("th"),
     )
     corpus = docs.filter(F.col("doc_id") % _BF_BATCH_MOD != 0)
@@ -1925,7 +1930,7 @@ def _c18_blocked(part: DataFrame) -> DataFrame:
     """The composite-blocking-key projection both the trial plan and
     the real join build from — ONE definition so the regime probe
     below plans exactly the frame the query joins."""
-    toks = F.split("p_name", " ")
+    toks = tokens("p_name")
     return part.select(
         "p_partkey", "p_name",
         # F.get (not getItem): a single-token or empty name has no

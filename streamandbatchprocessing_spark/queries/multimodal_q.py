@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.aggregates import pround
+from ..functions.text import tokens
 from ..sources.batch import load_table
 from .registry import persist_tracked, query
 
@@ -269,7 +270,7 @@ def m05_crossmodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+        F.size(tokens("text")).cast("long").alias("n_tokens"),
     )
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash60
-from ..functions.text import LANG_STOPWORDS
+from ..functions.text import LANG_STOPWORDS, tokens
 from ..functions.aggregates import pround, pround_sql
 from ..functions.windows import panel_window, panel_window_all
 from ..sources.batch import load_table
@@ -111,8 +111,8 @@ def p01_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         "text",
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
-        F.split(F.lower("text"), " ").alias("ltoks"),
+        F.size(tokens("text")).cast("long").alias("n_tokens"),
+        tokens(F.lower("text")).alias("ltoks"),
     )
     s1 = s0.filter(F.col("n_tokens") >= 15)
     s2 = s1.filter(
@@ -207,7 +207,7 @@ def p03_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "doc_id",
         "source",
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+        F.size(tokens("text")).cast("long").alias("n_tokens"),
     )
     w = (
         Window.partitionBy("source")
@@ -312,7 +312,7 @@ def p04_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate = (F.substring("source", -1, 1).try_cast("long") + 1) * 50
     t = docs.select(
         "source",
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+        F.size(tokens("text")).cast("long").alias("n_tokens"),
         rate.alias("rate_permille"),
         bucket.alias("bucket"),
     )
@@ -389,7 +389,7 @@ def p05_mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     avail = (
         docs.select(
             "source",
-            F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+            F.size(tokens("text")).cast("long").alias("n_tokens"),
         )
         .groupBy("source")
         .agg(
@@ -608,7 +608,7 @@ def p06_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         "END"
     )
     g = docs.select(
-        "doc_id", F.split("text", " ").alias("toks")
+        "doc_id", tokens("text").alias("toks")
     ).select("doc_id", grams.alias("gs"))
     ev = g.filter(F.col("doc_id") < _EVAL_N).select(
         # The panel side DOES distinct its grams: n_grams is defined
@@ -739,7 +739,7 @@ def p07_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     s = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(F.split("text", " "))).cast("long").alias("n_tokens"),
+        F.sum(F.size(tokens("text"))).cast("long").alias("n_tokens"),
     )
     tot = s.agg(F.sum("n_tokens").alias("t"))
     w = s.crossJoin(F.broadcast(tot)).select(
@@ -1405,7 +1405,7 @@ def p16_budget_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
     argument). Σ alloc == budget by construction on both engines."""
     docs = load_table(spark, sf_dir, "documents")
     tk = docs.groupBy("source").agg(
-        F.sum(F.size(F.split("text", " "))).cast("long").alias("n_tokens")
+        F.sum(F.size(tokens("text"))).cast("long").alias("n_tokens")
     )
     tot = tk.agg(F.sum("n_tokens").cast("long").alias("total"))
     q = tk.crossJoin(F.broadcast(tot)).select(
@@ -1491,7 +1491,7 @@ def p17_dedup_adjusted_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select(
         "doc_id", "source",
         F.col("text").alias("text"),
-        F.size(F.split("text", " ")).cast("long").alias("n_toks"),
+        F.size(tokens("text")).cast("long").alias("n_toks"),
     )
     canon = d.groupBy("text").agg(F.min("doc_id").alias("kid"))
     # Explicit aliases: canon derives from d (the c01/p01 same-lineage
@@ -1573,7 +1573,7 @@ def p18_token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one linear scan into a |sources| x ~17-bucket aggregate —
     map-side combinable, bounded output, zero joins."""
     docs = load_table(spark, sf_dir, "documents")
-    n = F.size(F.split("text", " ")).cast("long")
+    n = F.size(tokens("text")).cast("long")
     b = docs.select(
         "source", n.alias("n"),
         F.length(F.bin(n)).cast("int").alias("log2_bucket"),
@@ -1647,7 +1647,7 @@ def p19_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id", "text", "lang", "source",
-        F.size(F.split("text", " ")).cast("long").alias("n_toks"),
+        F.size(tokens("text")).cast("long").alias("n_toks"),
         F.length("text").cast("long").alias("n_chars"),
     )
     base = d.agg(
@@ -1740,7 +1740,7 @@ def p20_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two 6dp-rounded ratios is exact int64."""
     docs = load_table(spark, sf_dir, "documents")
     tk = docs.groupBy("source").agg(
-        F.sum(F.size(F.split("text", " "))).cast("long")
+        F.sum(F.size(tokens("text"))).cast("long")
         .alias("available_tokens")
     )
     k = tk.agg(F.count(F.lit(1)).cast("long").alias("n_src"))
@@ -1831,7 +1831,7 @@ def p21_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = docs.select(
         F.pmod(hash60(F.col("doc_id").cast("string")), F.lit(n_shards))
         .alias("shard_id"),
-        F.size(F.split("text", " ")).cast("long").alias("n_toks"),
+        F.size(tokens("text")).cast("long").alias("n_toks"),
         F.col("n_chars").cast("long").alias("nb"),
     )
     return (
@@ -2255,7 +2255,7 @@ def p25_context_length_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     more pair of map-side counters, not another scan."""
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
-        "source", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
+        "source", F.size(tokens("text")).cast("long").alias("n_tokens")
     )
     aggs = [
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -2562,7 +2562,7 @@ def p27_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select(
         "source", "lang",
         F.length("text").cast("long").alias("n_chars"),
-        F.size(F.split("text", " ")).cast("long").alias("n_ws"),
+        F.size(tokens("text")).cast("long").alias("n_ws"),
         F.size(
             F.expr(f"regexp_extract_all(lower(text), '{_BPE_RE}', 0)")
         ).cast("long").alias("n_bpe"),

@@ -18,7 +18,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash60, md5_prefix
-from ..functions.text import LANG_STOPWORDS, langid_from_tokens, langid_scores
+from ..functions.text import (
+    LANG_STOPWORDS,
+    count_matching,
+    distinct_tokens,
+    langid_from_tokens,
+    langid_scores,
+    tokens,
+)
 from ..functions.aggregates import pround, pround_sql
 from ..functions.windows import panel_window
 from ..sources.batch import load_table
@@ -51,7 +58,7 @@ _STOP_IN = ", ".join(f"'{w}'" for w in _STOPWORDS)
 def e01_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token counts + type-token ratio per document."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
+    toks = tokens("text")
     return (
         docs.select(
             "doc_id",
@@ -72,14 +79,13 @@ def quality_scored_docs(docs: DataFrame, *extra_cols: str) -> DataFrame:
     bit-identical across engines and safe for hash-gated reuse (e02's
     report, p09's percentile gate). Returns doc_id [+ ``extra_cols``
     passed through], n_chars, n_tokens, stop_hits, avg_token_len."""
-    toks = F.split(F.col("text"), " ")
+    toks = tokens("text")
     return docs.select(
         "doc_id",
         *extra_cols,
         F.length("text").cast("long").alias("n_chars"),
         F.size(toks).cast("long").alias("n_tokens"),
-        F.expr(f"CAST(size(filter(split(text, ' '), t -> t IN ({_STOP_IN}))) AS LONG)")
-        .alias("stop_hits"),
+        count_matching(toks, _STOPWORDS).cast("long").alias("stop_hits"),
     ).withColumn(
         "avg_token_len",
         pround((F.col("n_chars") - F.col("n_tokens") + 1) * 1.0 / F.col("n_tokens"), 6),
@@ -208,7 +214,7 @@ def e03_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     size via explode→countDistinct. Integer sums are exact, so no
     decimal detour is needed."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
+    toks = tokens("text")
     t = docs.select("doc_id", "lang", "n_chars", toks.alias("toks"))
     vocab = (
         t.select("lang", F.explode("toks").alias("tok"))
@@ -251,7 +257,7 @@ def e04_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-permutation token MinHash — the building blocks the dedup family
     composes. All md5-derived, hence engine-portable."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.array_distinct(F.split(F.col("text"), " "))
+    toks = distinct_tokens("text")
     per_tok = docs.select("doc_id", F.explode(toks).alias("tok"))
     mh = per_tok.groupBy("doc_id").agg(
         F.min(md5_prefix(F.col("tok"), seed="fp:")).alias("minhash_token")
@@ -307,7 +313,7 @@ def e05_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = docs.select(
         "doc_id",
         pieces.alias("pieces"),
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_ws_tokens"),
+        F.size(tokens("text")).cast("long").alias("n_ws_tokens"),
     )
     is_word = "x -> x rlike '^[a-z]+$'"
     is_num = "x -> x rlike '^[0-9]+$'"
@@ -383,7 +389,7 @@ def e06_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle splits on a single space, so predicted/best must come from
     # the same token multiset (a regex-split argmax next to a
     # space-split score diverges on tabs/newlines/double spaces).
-    toks = F.split(F.lower(F.col("text")), " ")
+    toks = tokens(F.lower("text"))
     best = F.greatest(*langid_scores(toks).values())
     scored = docs.select(
         "lang",
@@ -459,7 +465,7 @@ def e07_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (~2·len splits per doc — measured 5.1 s vs 0.5 s at sf0.1, the
     # round-2 no-CSE gotcha in by-index HOF form).
     toks = F.col("toks")
-    base = docs.select("doc_id", F.split("text", " ").alias("toks")).select(
+    base = docs.select("doc_id", tokens("text").alias("toks")).select(
         "doc_id",
         F.size(toks).cast("long").alias("n_tokens"),
         pround(
@@ -552,7 +558,7 @@ def e08_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
-        "doc_id", "source", F.explode(F.split("text", " ")).alias("term")
+        "doc_id", "source", F.explode(tokens("text")).alias("term")
     )
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     df = t.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
@@ -632,7 +638,7 @@ def e09_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     n = docs.select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+        F.size(tokens("text")).cast("long").alias("n_tokens"),
     ).select(
         "doc_id",
         "n_tokens",
@@ -782,7 +788,7 @@ def e11_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     xxhash64 1:1)."""
     docs = load_table(spark, sf_dir, "documents")
     tb = docs.select(
-        "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
+        "doc_id", "lang", F.explode(tokens("text")).alias("tok")
     ).select(
         "doc_id", "lang",
         F.pmod(
@@ -888,7 +894,7 @@ def e12_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     n = docs.select(
         "doc_id",
-        F.split("text", " ").alias("toks"),
+        tokens("text").alias("toks"),
     ).select(
         "doc_id",
         "toks",
@@ -978,7 +984,7 @@ def e13_bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent and engine-identical.
     """
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select("doc_id", F.split("text", " ").alias("toks"))
+    t = docs.select("doc_id", tokens("text").alias("toks"))
     toks = F.col("toks")
     uni = (
         t.select(F.explode_outer("toks").alias("w"))
@@ -1082,7 +1088,7 @@ def e14_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     cnt = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+        docs.select("doc_id", F.explode(tokens("text")).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1153,7 +1159,7 @@ def e16_zipf_head_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers before one rounded division."""
     docs = load_table(spark, sf_dir, "documents")
     counts = (
-        docs.select(F.explode(F.split("text", " ")).alias("token"))
+        docs.select(F.explode(tokens("text")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
     )
@@ -1225,9 +1231,9 @@ def e17_trigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     global df count, then the df=1 join back) plus one per-doc
     aggregate — no pairwise anything; df counting is map-side
     combinable and the df=1 filter prunes the join's probe output to
-    the novel tail. Same shingle definition as c04/c16 (shared
-    expression), so the novelty report and the dedup cost model
-    describe the same objects."""
+    the novel tail. Same shingle stream as c04/c16
+    (``dedup.shared_shingles``), so the novelty report and the dedup
+    cost model describe the same objects."""
     from .dedup import shared_shingles
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1238,7 +1244,7 @@ def e17_trigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plus c04/c16 read the same stream in the same session. It is the
     # session-shared shingle artifact (dedup.shared_shingles).
     x = shared_shingles(spark, sf_dir).select("doc_id", "g")
-    # shingles_col is array_distinct'd, so per-doc rows of x ARE the
+    # The shingles are array_distinct'd, so per-doc rows of x ARE the
     # distinct shingles — size == count. Docs under 3 tokens emit no
     # rows; the left join from the doc panel restores them with 0.
     sz = docs.select("doc_id").join(
@@ -1325,7 +1331,7 @@ def e18_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     all until the final sort), integers and one 6dp-rounded division,
     so the gate runs at scan speed on any corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
+    toks = tokens("text")
     lens = F.transform(toks, lambda w: F.length(w))
     n_words = F.size(toks).cast("long")
     sum_len = F.aggregate(lens, F.lit(0), lambda a, x: a + x)
@@ -1403,7 +1409,7 @@ def e19_collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps only the 50-row head — no global sort of the bigram
     space."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
+    toks = tokens("text")
     t = docs.select("doc_id", toks.alias("toks"))
     u = t.select(F.explode("toks").alias("w"))
     uc = u.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("cw"))
@@ -1661,7 +1667,7 @@ def e22_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     x = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(F.split("text", " "))).alias("tok"),
+        F.explode(distinct_tokens("text")).alias("tok"),
     )
     x = persist_tracked(x)
     f = x.groupBy("tok").agg(F.min("doc_id").cast("long").alias("first_doc"))
@@ -1748,7 +1754,7 @@ def e23_token_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pc = (
         docs.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("tok")
+            "doc_id", F.explode(tokens("text")).alias("tok")
         )
         .groupBy("tok", "doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -1880,7 +1886,7 @@ def _e24_frame(
     docs = load_table(spark, sf_dir, "documents")
     c = (
         docs.select(
-            "source", F.explode(F.split("text", " ")).alias("tok")
+            "source", F.explode(tokens("text")).alias("tok")
         )
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))

@@ -179,16 +179,7 @@ def events_stream_staged(
             "events_stream (staged batch accounting assumes one data "
             "file per the docstring)"
         )
-    # The staged dir holds a full COPY of the data file (corpus-scaled,
-    # unlike the checkpoint dirs' tiny metadata), so pass its size as
-    # the placement hint: on a host whose tmpfs cannot hold it (64 MB
-    # Docker /dev/shm, a big SF) the stage falls back to the disk root
-    # instead of ENOSPC-ing mid-drain or silently eating executor RAM
-    # (round-12 advisor's finding).
-    stage = staging_dir(
-        "sbp-staged-events-", kind="state",
-        size_hint_bytes=os.path.getsize(src),
-    )
+    stage = staging_dir("sbp-staged-events-")
     dst = os.path.join(stage, "00-events.parquet")
     shutil.copyfile(src, dst)
     unit = _events_ts_unit(sf_dir) or "ns"
@@ -228,12 +219,19 @@ def events_stream_staged(
     return _normalize_event_ts(raw, unit)
 
 
+#: State partitions of every drain's stateful operators in its fresh
+#: checkpoint. Streaming state exchanges are never AQE-coalesced, and
+#: 64 state tasks per micro-batch is pure scheduling overhead on
+#: fixture-sized input (measured 2.8 s → 1.5 s at sf0.1). The live
+#: dashboard's count is ``transactions.DASHBOARD_STATE_PARTITIONS``.
+DRAIN_STATE_PARTITIONS = 8
+
+
 def run_to_memory(
     df: DataFrame,
     output_mode: str = "complete",
     name_prefix: str = "sbp_mem",
     trigger_once: bool = False,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion with an
     ``availableNow`` trigger into a memory sink; return the sink table.
@@ -248,19 +246,17 @@ def run_to_memory(
     engine always considers another batch runnable, so availableNow
     (and ``processAllAvailable``) never terminate on finite input.
 
-    ``state_partitions`` bounds the stateful-operator partition count
-    for THIS drain (streaming state exchanges are never AQE-coalesced;
-    a fresh checkpoint pins whatever ``spark.sql.shuffle.partitions``
-    says at start, and 64 state tasks per micro-batch is pure scheduling
-    overhead on fixture-sized input — measured 2.8 s → 1.5 s at sf0.1).
-    The session conf is restored after the drain; a production
+    The drain starts under :data:`DRAIN_STATE_PARTITIONS` shuffle
+    partitions, which its fresh checkpoint pins; the session conf is
+    restored after the drain. Concurrent BATCH queries on the same
+    session observe the reduced value meanwhile (harmless at
+    fixture scale — AQE re-coalesces batch shuffles). A production
     deployment instead sizes the session conf once for its key
-    cardinality and keeps it for the checkpoint's lifetime. ``None``
-    leaves the session value untouched.
+    cardinality and keeps it for the checkpoint's lifetime.
     """
     spark = df.sparkSession
     name = f"{name_prefix}_{next(_MEM_COUNTER)}"
-    checkpoint = staging_dir("sbp-stream-ckpt-", kind="state")
+    checkpoint = staging_dir("sbp-stream-ckpt-")
     writer = (
         df.writeStream.format("memory")
         .queryName(name)
@@ -270,18 +266,7 @@ def run_to_memory(
     writer = writer.trigger(once=True) if trigger_once else writer.trigger(
         availableNow=True
     )
-    if state_partitions is None:
-        query = writer.start()
-        query.awaitTermination()
-        return spark.table(name)
-    # The conf toggle is session-global: serialize drains under a lock
-    # so overlapping get→set→restore interleavings can't strand the
-    # session at the drain value. Concurrent BATCH queries on the same
-    # session still observe the reduced value for the drain's duration
-    # (harmless at fixture scale — AQE re-coalesces batch shuffles);
-    # callers that must not perturb the session pass
-    # ``state_partitions=None``.
-    with shuffle_partitions(spark, state_partitions):
+    with shuffle_partitions(spark, DRAIN_STATE_PARTITIONS):
         query = writer.start()
         query.awaitTermination()
     return spark.table(name)

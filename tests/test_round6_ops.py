@@ -82,13 +82,17 @@ def test_c16_spectrum_accounts_for_every_posting(spark, sf_dir):
     c04's cost model."""
     from streamandbatchprocessing_spark.sources.batch import load_table
 
-    from streamandbatchprocessing_spark.queries.dedup import shingles_col
+    from streamandbatchprocessing_spark.functions.text import shingles, tokens
 
     spec = QUERIES["c16_shingle_df_spectrum"](spark, sf_dir).collect()
     assert spec
     total_postings = sum(r["df"] * r["n_shingles"] for r in spec)
     docs = load_table(spark, sf_dir, "documents")
-    expected = docs.select(F.explode(shingles_col()).alias("g")).count()
+    expected = (
+        docs.select(tokens("text").alias("toks"))
+        .select(F.explode(F.array_distinct(shingles(F.col("toks")))).alias("g"))
+        .count()
+    )
     assert total_postings == expected
     for r in spec:
         assert r["pair_cost"] == r["n_shingles"] * r["df"] * (r["df"] - 1) // 2

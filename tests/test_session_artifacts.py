@@ -58,6 +58,25 @@ def test_shared_toksets_sizes_match_string_sets(spark, sf_dir):
     assert _rows(hashed) == _rows(strings)
 
 
+def test_text_artifacts_split_text_once(spark, sf_dir):
+    # The four corpus text artifacts derive from one token projection
+    # (dedup.corpus_tokens), so each plan splits ``text`` exactly once
+    # per document; an inline split inside the shingle lambda would
+    # run once per shingle.
+    for build in (
+        dedup.shared_sig,
+        dedup.shared_toksets,
+        dedup.shared_simhash_fp,
+        dedup.shared_shingles,
+    ):
+        df = build(spark, sf_dir)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+        # A materialized adaptive plan prints its initial plan after
+        # the final one; count the plan that ran.
+        ran = plan.split("== Initial Plan ==")[0]
+        assert ran.count("split(") == 1, (build.__name__, plan)
+
+
 def test_memo_hits_and_is_conf_keyed(spark, sf_dir):
     a = dedup.shared_sig(spark, sf_dir)
     b = dedup.shared_sig(spark, sf_dir)

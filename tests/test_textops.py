@@ -5,6 +5,9 @@ and THESE tests exercise the heuristic itself)."""
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -96,3 +99,28 @@ def test_e06_consistent_on_messy_whitespace(spark, tmp_path):
         for lang, pred, n, hits in con.sql(_langid_oracle()).fetchall()
     }
     assert got == want
+
+
+# ``split(<expr>, " ")`` / ``split(text, ' ')`` in Python or Spark SQL
+# text, <expr> nesting calls two deep; ``string_split`` (the DuckDB oracles) has no word boundary
+# before ``split`` and does not match.
+_SINGLE_SPACE_SPLIT = re.compile(
+    r"""\bsplit\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*?,\s*(["']) \1\s*\)"""
+)
+
+
+def test_single_space_split_only_in_the_tokenizer():
+    """functions/text.tokens is the one corpus tokenizer: no other
+    module splits on a single space inline."""
+    pkg = Path(tokens.__code__.co_filename).resolve().parents[1]
+    offenders = [
+        f"{path.relative_to(pkg)}: {m.group(0)}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.name != "text.py" or path.parent.name != "functions"
+        for m in _SINGLE_SPACE_SPLIT.finditer(path.read_text())
+    ]
+    assert not offenders, "\n".join(offenders)
+    # the pattern itself catches both spellings
+    assert _SINGLE_SPACE_SPLIT.search('F.split(F.lower(F.col("text")), " ")')
+    assert _SINGLE_SPACE_SPLIT.search("size(split(\n  text, ' ')) < 3")
+    assert not _SINGLE_SPACE_SPLIT.search("string_split(text, ' ')")
