@@ -1232,6 +1232,49 @@ def cms_bucket(key, d):
     )
 
 
+def _cms_depths():
+    return F.array(*[F.lit(i) for i in range(_CMS_D)])
+
+
+def cms_grid(events: DataFrame) -> DataFrame:
+    """Raw event rows → the count-min cells ``(d, b, c)`` over
+    ``user_id``: each row adds one to its cell in every depth row. A
+    plain aggregate, so it runs on a batch or a streaming DataFrame."""
+    return (
+        events.select(F.col("user_id").cast("string").alias("k"))
+        .select("k", F.explode(_cms_depths()).alias("d"))
+        .select("d", cms_bucket(F.col("k"), F.col("d")).alias("b"))
+        .groupBy("d", "b")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
+
+
+def cms_heavy_hitters(cand: DataFrame, sketch: DataFrame) -> DataFrame:
+    """Probe the candidate keys ``(k, true_n)`` against the sketch
+    cells ``(d, b, c)``: a key's estimate is the MIN of its d cells, and
+    it is reported as ``(user_id, true_n, est_n)`` when the estimate is
+    at least ``_CMS_MIN_FRAC`` of all events."""
+    tot = cand.agg(F.sum("true_n").alias("n"))
+    est = (
+        cand.select("k", F.explode(_cms_depths()).alias("d"))
+        .withColumn("b", cms_bucket(F.col("k"), F.col("d")))
+        .join(F.broadcast(sketch), ["d", "b"])
+        .groupBy("k")
+        .agg(F.min("c").alias("est_n"))
+    )
+    return (
+        cand.join(est, "k")
+        .crossJoin(F.broadcast(tot))
+        .filter(F.col("est_n") * 1.0 >= F.col("n") * F.lit(_CMS_MIN_FRAC))
+        .select(
+            F.col("k").cast("long").alias("user_id"),
+            "true_n",
+            "est_n",
+        )
+        .orderBy("user_id")
+    )
+
+
 @query(
     "c12_heavy_hitters_cms",
     oracle=f"""
@@ -1293,38 +1336,17 @@ def c12_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     keyed = ev.select(F.col("user_id").cast("string").alias("k"))
-    depths = F.array(*[F.lit(i) for i in range(_CMS_D)])
-    bucket = cms_bucket
-
     cand = persist_tracked(
         keyed.groupBy("k").agg(F.count(F.lit(1)).alias("true_n"))
     )
     sketch = (
-        cand.select("true_n", F.explode(depths).alias("d"),
+        cand.select("true_n", F.explode(_cms_depths()).alias("d"),
                     F.col("k").alias("sk"))
-        .select("d", bucket(F.col("sk"), F.col("d")).alias("b"), "true_n")
+        .select("d", cms_bucket(F.col("sk"), F.col("d")).alias("b"), "true_n")
         .groupBy("d", "b")
         .agg(F.sum("true_n").alias("c"))
     )
-    tot = cand.agg(F.sum("true_n").alias("n"))
-    est = (
-        cand.select("k", F.explode(depths).alias("d"))
-        .withColumn("b", bucket(F.col("k"), F.col("d")))
-        .join(F.broadcast(sketch), ["d", "b"])
-        .groupBy("k")
-        .agg(F.min("c").alias("est_n"))
-    )
-    return (
-        cand.join(est, "k")
-        .crossJoin(F.broadcast(tot))
-        .filter(F.col("est_n") * 1.0 >= F.col("n") * F.lit(_CMS_MIN_FRAC))
-        .select(
-            F.col("k").cast("long").alias("user_id"),
-            "true_n",
-            "est_n",
-        )
-        .orderBy("user_id")
-    )
+    return cms_heavy_hitters(cand, sketch)
 
 
 # ---------------------------------------------------------------------------

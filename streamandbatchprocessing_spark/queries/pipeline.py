@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hash60
 from ..functions.text import LANG_STOPWORDS, tokens
-from ..functions.aggregates import pround, pround_sql
+from ..functions.aggregates import davg, dsum, pround, pround_sql
 from ..functions.windows import panel_window, panel_window_all
 from ..sources.batch import load_table
 from .dedup import _agree_col, _band_pairs, _CC_MIN_AGREE, _sig_df
@@ -1213,11 +1213,7 @@ def p13_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_tokens").cast("long").alias("sum_tokens"),
-            pround(
-                F.sum(F.col("quality_score").cast("decimal(25,6)"))
-                .cast("double") / F.count("quality_score"),
-                6,
-            ).alias("avg_quality"),
+            pround(davg("quality_score"), 6).alias("avg_quality"),
         )
         .orderBy("phase", "shard")
     )
@@ -1661,8 +1657,7 @@ def p19_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = quality_scored_docs(docs).select(
         quality_score_col().alias("quality_score")
     ).agg(
-        F.sum(F.col("quality_score").cast("decimal(25,6)")).cast("double")
-        .alias("qsum"),
+        dsum("quality_score", "qsum"),
         F.count(F.lit(1)).alias("qn"),
     )
     return base.crossJoin(F.broadcast(q)).select(

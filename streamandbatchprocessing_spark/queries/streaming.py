@@ -13,17 +13,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.aggregates import dsum
+from ..functions.pii import oracle_pii_count, oracle_scrub, pii_count, scrub
 from ..sources.batch import load_table
-from .dedup import _CMS_D, _CMS_MIN_FRAC, _CMS_W
 from ..streaming.pipeline import (
     dashboard_plan,
     events_stream,
-    purchase_click_semi_join_plan,
+    events_stream_staged,
+    final_update_rows,
+    latest_state_plan,
+    purchase_click_join_plan,
     run_to_memory,
     session_windows_plan,
+    stateful_totals_with_eviction_plan,
     streaming_dedup_plan,
     user_totals_plan,
 )
+from .dedup import _CMS_D, _CMS_MIN_FRAC, _CMS_W, cms_grid, cms_heavy_hitters
 from .registry import query
 
 _DSUM = "CAST(SUM(CAST({x} AS DECIMAL(25,6))) AS DOUBLE)"
@@ -146,21 +152,12 @@ def f04_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     order can't perturb floats; availableNow drains the fixture in one
     run and the final state equals the batch aggregate (the oracle).
 
-    Scale: state is one (count, cents) pair per user key, partitioned by
+    Scale: state is one (n, cents, nv) triple per user key, partitioned by
     the groupBy — bounded, shuffle-once; production adds a timeout to
     evict idle keys."""
     stateful = user_totals_plan(events_stream(spark, sf_dir))
     result = run_to_memory(stateful, output_mode="update", name_prefix="f04_state")
-    # One emitted row per key per micro-batch: keep the final state row.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        result.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .orderBy("user_id")
-    )
+    return final_update_rows(result, ["user_id"]).orderBy("user_id")
 
 
 @query(
@@ -180,45 +177,13 @@ def f04_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def f05_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join (SURVEY.md T8 extension — absent from
-    the reference): each purchase joined to the same user's clicks in the
-    trailing 5 minutes, both sides unbounded streams.
-
-    The watermark + time-bounded join condition is what makes this
-    feasible at scale: Spark keeps only ~(watermark + interval) of each
-    side in the join state store and evicts the rest, so state is
-    bounded by rate × window, not by history. The batch equivalent (b17)
+    """Stream-stream INNER interval join (SURVEY.md T8 extension — absent
+    from the reference): each purchase paired with each of the same
+    user's clicks in the trailing 5 minutes, both sides unbounded
+    streams (``purchase_click_join_plan``). The batch equivalent (b17)
     computes the same pairs with a range-frame window; the oracle is the
-    plain SQL theta join.
-    """
-    from ..streaming.pipeline import events_stream, run_to_memory
-
-    purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "10 minutes")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    clicks = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .withWatermark("ts", "10 minutes")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("c_ts"),
-        )
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 5 MINUTES"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-    )
+    plain SQL theta join."""
+    joined = purchase_click_join_plan(events_stream(spark, sf_dir), "inner")
     result = run_to_memory(joined, output_mode="append", name_prefix="f05_ssj")
     return result.select("purchase_id", "click_id", "user_id").orderBy(
         "purchase_id", "click_id"
@@ -255,8 +220,6 @@ def p02_streaming_ingest_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     are unique, so the batch oracle is the plain filtered window
     aggregate — which is the invariant a correct dedup must preserve on
     duplicate-free input."""
-    from ..streaming.pipeline import events_stream, run_to_memory
-
     plan = (
         events_stream(spark, sf_dir)
         .filter(
@@ -265,11 +228,7 @@ def p02_streaming_ingest_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark(["event_id"])
         .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(25,6)")).cast("double")
-            .alias("total_value"),
-        )
+        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
         .select(
             F.col("window.start").alias("window_start"),
             "event_type",
@@ -278,18 +237,8 @@ def p02_streaming_ingest_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     result = run_to_memory(plan, output_mode="update", name_prefix="p02_funnel")
-    # update mode may re-emit a window across micro-batches: keep the
-    # final (max-count) emission per (window, type).
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("window_start", "event_type").orderBy(
-        F.desc("n_events")
-    )
-    return (
-        result.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .orderBy("window_start", "event_type")
+    return final_update_rows(result, ["window_start", "event_type"]).orderBy(
+        "window_start", "event_type"
     )
 
 
@@ -321,22 +270,12 @@ def f06_idle_key_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     are finalized, never the totals. The eviction path itself is
     wall-clock-dependent, so it is proven by the timeout test
     (tests/test_streaming_pipeline.py), not the oracle compare."""
-    from ..streaming.pipeline import (
-        events_stream,
-        run_to_memory,
-        stateful_totals_with_eviction_plan,
-    )
-
     stateful = stateful_totals_with_eviction_plan(events_stream(spark, sf_dir))
     result = run_to_memory(
         stateful, output_mode="update", name_prefix="f06_evict", trigger_once=True
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
-        result.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+        final_update_rows(result, ["user_id"])
         .select("user_id", "n_events", "total_cents", "n_types")
         .orderBy("user_id")
     )
@@ -369,21 +308,13 @@ def f07_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by |segments| × |event types|, not by input volume. Exact
     decimal accumulation for the value total, as everywhere (dsum
     rule)."""
-    from ..streaming.pipeline import events_stream, run_to_memory
-
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("segment"),
     )
     enriched = events_stream(spark, sf_dir).join(F.broadcast(dim), "user_id")
-    agg = (
-        enriched.groupBy("segment", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(25,6)"))
-            .cast("double")
-            .alias("total_value"),
-        )
+    agg = enriched.groupBy("segment", "event_type").agg(
+        F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value")
     )
     result = run_to_memory(agg, output_mode="complete", name_prefix="f07_enrich")
     return result.orderBy("segment", "event_type")
@@ -409,46 +340,12 @@ def f08_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream interval join — f05's inner join plus
     the null-padded row for every purchase with NO click in its trailing
     5 minutes (the attribution query's "unattributed conversions" side).
-
-    Outer emission is watermark-driven: a purchase's null row may only
-    be emitted once the watermark proves no qualifying click can still
-    arrive, and emission happens in a batch AFTER the watermark advance.
-    On finite input that means the tail would be withheld forever, so
-    the source is staged with sentinel files (see
-    ``events_stream_staged``): the first micro-batch carries the real
-    events plus the first sentinel (advancing both branch watermarks
-    past them), and the second flushes every expired left row. State
-    stays bounded by rate × (watermark + interval) exactly as in f05 —
-    the outer variant adds no state, only deferred emission. Sentinel
-    rows carry ``user_id = -1`` and are dropped from the result."""
-    from ..streaming.pipeline import events_stream_staged, run_to_memory
-
-    stream = events_stream_staged(spark, sf_dir)
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "10 minutes")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .withWatermark("ts", "10 minutes")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("c_ts"),
-        )
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 5 MINUTES"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "leftOuter",
-    )
+    The outer join adds no state, only deferred emission: a null row is
+    emitted in a batch after the watermark proves no click can still
+    arrive, so the source is staged with sentinel files
+    (``events_stream_staged``) that flush it; their ``user_id = -1``
+    rows are dropped from the result."""
+    joined = purchase_click_join_plan(events_stream_staged(spark, sf_dir), "leftOuter")
     result = run_to_memory(joined, output_mode="append", name_prefix="f08_ssloj")
     return (
         result.filter(F.col("user_id") >= 0)
@@ -457,25 +354,13 @@ def f08_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _f09_count(expr: str) -> str:
-    from ..functions.pii import oracle_pii_count
-
-    return oracle_pii_count(expr, "number")
-
-
-def _f09_scrub(expr: str) -> str:
-    from ..functions.pii import oracle_scrub
-
-    return oracle_scrub(expr)
-
-
 @query(
     "f09_streaming_pii_scrub",
     oracle=f"""
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM({_f09_count('props')}) AS BIGINT) AS n_number,
-           CAST(SUM(length({_f09_scrub('props')})) AS BIGINT) AS redacted_chars
+           CAST(SUM({oracle_pii_count('props', 'number')}) AS BIGINT) AS n_number,
+           CAST(SUM(length({oracle_scrub('props')})) AS BIGINT) AS redacted_chars
     FROM events
     GROUP BY event_type
     ORDER BY event_type
@@ -492,9 +377,6 @@ def f09_streaming_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: scrub cost is per-row map work distributed across stream
     partitions; the aggregate state is |event_type| rows — bounded."""
-    from ..functions.pii import pii_count, scrub
-    from ..streaming.pipeline import events_stream, run_to_memory
-
     stream = events_stream(spark, sf_dir).select(
         "event_type",
         pii_count(F.col("props"), "number").alias("n_num"),
@@ -641,44 +523,10 @@ def f12_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribution pair PLUS the unattributed purchases (null click) AND
     the orphaned clicks that led to no purchase in their forward
     5-minute window (null purchase) — the two failure sides an
-    attribution pipeline monitors.
-
-    Same watermark mechanics as f08: both branches carry a 10-minute
-    watermark and the interval condition bounds each side's state
-    (purchases retained 10 m + 5 m, clicks 10 m), so state is
-    rate x window, never unbounded. Null-padded rows for BOTH sides are
-    emitted only after the watermark proves no counterpart can arrive;
-    the staged sentinel files advance both branch watermarks past the
-    real data so the finite drain flushes every withheld row. Sentinel
-    rows (user_id = -1, both types) are dropped from the result."""
-    from ..streaming.pipeline import events_stream_staged, run_to_memory
-
-    stream = events_stream_staged(spark, sf_dir)
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "10 minutes")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .withWatermark("ts", "10 minutes")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("c_ts"),
-        )
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 5 MINUTES"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "fullOuter",
-    )
+    attribution pipeline monitors. As in f08, null-padded rows of BOTH
+    sides wait for the watermark, the staged sentinels flush them, and
+    the sentinel rows (``user_id = -1``, both types) are dropped."""
+    joined = purchase_click_join_plan(events_stream_staged(spark, sf_dir), "fullOuter")
     result = run_to_memory(joined, output_mode="append", name_prefix="f12_ssfoj")
     return (
         result.filter(F.coalesce("user_id", "c_user_id") >= 0)
@@ -736,46 +584,18 @@ def f13_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the replay was chunked — which is what lets the oracle be the
     batch CMS definition. State is d*w counters, independent of
     cardinality, rate, and retention."""
-    from ..sources.batch import load_table as _lt
-    from .dedup import cms_bucket as bucket
-
-    depths = F.array(*[F.lit(i) for i in range(_CMS_D)])
-    stream = events_stream(spark, sf_dir)
-    grid_plan = (
-        stream.select(F.col("user_id").cast("string").alias("k"))
-        .select("k", F.explode(depths).alias("d"))
-        .select("d", bucket(F.col("k"), F.col("d")).alias("b"))
-        .groupBy("d", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
     sketch = run_to_memory(
-        grid_plan, output_mode="complete", name_prefix="f13_cms_grid"
+        cms_grid(events_stream(spark, sf_dir)),
+        output_mode="complete",
+        name_prefix="f13_cms_grid",
     )
     cand = (
-        _lt(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .select(F.col("user_id").cast("string").alias("k"))
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("true_n"))
     )
-    tot = cand.agg(F.sum("true_n").alias("n"))
-    est = (
-        cand.select("k", F.explode(depths).alias("d"))
-        .withColumn("b", bucket(F.col("k"), F.col("d")))
-        .join(F.broadcast(sketch), ["d", "b"])
-        .groupBy("k")
-        .agg(F.min("c").alias("est_n"))
-    )
-    return (
-        cand.join(est, "k")
-        .crossJoin(F.broadcast(tot))
-        .filter(F.col("est_n") * 1.0 >= F.col("n") * F.lit(_CMS_MIN_FRAC))
-        .select(
-            F.col("k").cast("long").alias("user_id"),
-            "true_n",
-            "est_n",
-        )
-        .orderBy("user_id")
-    )
+    return cms_heavy_hitters(cand, sketch)
 
 
 # ---------------------------------------------------------------------------
@@ -806,23 +626,11 @@ def f14_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicates a purchase once per matching click and forces a
     downstream dedup that semi avoids entirely.
 
-    Scale: same watermark + time-bound state containment as f05 —
-    Spark holds ~(watermark + interval) of each side and, for a semi
-    join, drops a left row's state the moment it matches (it can never
-    emit again), so steady-state memory is bounded by rate x window on
-    both sides. Emission is eager (existence is monotone — no
-    watermark wait), so the availableNow drain surfaces every match
-    without sentinel staging.
-
-    Both branches filter ONE shared streaming source (the f12 pattern;
-    round 12): two separate ``events_stream`` calls plan as two
-    distinct file sources, each with its own offset tracking, listing
-    and read per micro-batch; the shared source halves that without
-    changing the join's inputs. Measured a WASH at fixture scale
-    (interleaved sf0.001/sf0.1 A/B — state-store machinery dominates
-    a 2-batch drain over one tiny file); kept for the structural win
-    at production rates, where the source side is a real ingest."""
-    joined = purchase_click_semi_join_plan(events_stream(spark, sf_dir))
+    A semi join drops a left row's state the moment it matches (it can
+    never emit again), and its emission is eager (existence is monotone
+    — no watermark wait), so the availableNow drain surfaces every match
+    without sentinel staging."""
+    joined = purchase_click_join_plan(events_stream(spark, sf_dir), "left_semi")
     result = run_to_memory(joined, output_mode="append", name_prefix="f14_semi")
     return result.select("purchase_id", "user_id").orderBy("purchase_id")
 
@@ -863,17 +671,10 @@ def f15_streaming_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan runs update-mode into a keyed sink (foreach_batch_upsert,
     streaming/transactions.py) instead of a complete-mode memory
     table."""
-    src = events_stream(spark, sf_dir)
-    agg = src.groupBy("user_id").agg(
-        F.max(
-            F.struct(
-                F.col("ts"), F.col("event_id"),
-                F.col("event_type"), F.col("value"),
-            )
-        ).alias("m")
-    )
     result = run_to_memory(
-        agg, output_mode="complete", name_prefix="f15_latest"
+        latest_state_plan(events_stream(spark, sf_dir)),
+        output_mode="complete",
+        name_prefix="f15_latest",
     )
     return result.select(
         "user_id",

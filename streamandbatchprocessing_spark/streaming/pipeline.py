@@ -24,7 +24,7 @@ import os
 import threading
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -35,6 +35,7 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from ..functions.aggregates import dsum
 from ..sources.staging import staging_dir
 
 _MEM_COUNTER = itertools.count()
@@ -306,8 +307,7 @@ def dashboard_plan(stream: DataFrame) -> DataFrame:
         .groupBy(F.window("ts", "5 minutes", "1 minute"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(25,6)")).cast("double")
-            .alias("total_value"),
+            dsum("value", "total_value"),
         )
         .select(
             F.col("window.start").alias("window_start"),
@@ -334,8 +334,7 @@ def session_windows_plan(stream: DataFrame, gap: str = "30 minutes") -> DataFram
         .groupBy(F.session_window("ts", gap), F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(25,6)")).cast("double")
-            .alias("total_value"),
+            dsum("value", "total_value"),
         )
         .select(
             "user_id",
@@ -358,63 +357,85 @@ def streaming_dedup_plan(stream: DataFrame) -> DataFrame:
     )
 
 
+def final_update_rows(updates: DataFrame, keys: list[str]) -> DataFrame:
+    """Each key's last update-mode emission: a drain in update mode
+    re-emits a key in every micro-batch that touches it, and its
+    ``n_events`` only grows, so the row with the largest count is the
+    final state."""
+    w = Window.partitionBy(*keys).orderBy(F.desc("n_events"))
+    return (
+        updates.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def _fold_cents(totals: tuple, pdf) -> tuple:
+    """Fold one pandas chunk of a key's rows into its ``(n, cents, nv)``
+    totals: the row count, the value sum in integer cents, and ``nv``,
+    the count of non-null values. SUM over an all-NULL group is NULL in
+    SQL and 0 is a legitimate sum, so only ``nv`` tells them apart."""
+    import numpy as np
+
+    n, cents, nv = totals
+    # Half-AWAY-from-zero like the oracle's round(); pandas .round() is
+    # half-to-even and differs on exact .5 cents. NULL values are
+    # excluded exactly as SQL SUM excludes them — a NaN through
+    # astype('int64') is platform garbage (observed: int64 min leaking
+    # into totals), never a sum.
+    v = (pdf["value"] * 100).to_numpy()
+    v = v[~np.isnan(v)]
+    cents += int(np.copysign(np.floor(np.abs(v) + 0.5), v).astype("int64").sum())
+    return n + len(pdf), cents, nv + len(v)
+
+
+def _totals_row(key, n: int, cents: int, nv: int, **extra):
+    """The one-row pandas output of a user-totals update."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "user_id": [key[0]],
+            "n_events": [n],
+            "total_cents": pd.array([cents if nv else None], dtype="Int64"),
+            **{name: [value] for name, value in extra.items()},
+        }
+    )
+
+
 def user_totals_plan(stream: DataFrame) -> DataFrame:
     """Per-user running totals in explicit GroupState
     (``applyInPandasWithState``, update mode, no timeout): one
     ``(user_id, n_events, total_cents)`` row per key per micro-batch.
     Money accumulates in integer cents inside pandas, so state merge
     order cannot perturb floats."""
-    import numpy as np
-    import pandas as pd
+    from functools import reduce
+
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    out_schema = "user_id bigint, n_events bigint, total_cents bigint"
-    # nv = count of non-null values folded in: SUM over a group whose
-    # values are ALL NULL is NULL in SQL, and 0 is a legitimate sum —
-    # only the count can distinguish them.
-    state_schema = "n bigint, cents bigint, nv bigint"
-
     def update(key, pdfs, state: GroupState):
-        n, cents, nv = state.get if state.exists else (0, 0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            # Half-AWAY-from-zero like the oracle's round(); pandas
-            # .round() is half-to-even and differs on exact .5 cents.
-            # NULL values are excluded exactly as SQL SUM excludes
-            # them — a NaN through astype('int64') is platform garbage
-            # (observed: int64 min leaking into totals), never a sum.
-            v = (pdf["value"] * 100).to_numpy()
-            v = v[~np.isnan(v)]
-            nv += len(v)
-            cents += int(
-                np.copysign(np.floor(np.abs(v) + 0.5), v).astype("int64").sum()
-            )
-        state.update((n, cents, nv))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_cents": pd.array(
-                    [cents if nv else None], dtype="Int64"
-                ),
-            }
-        )
+        totals = reduce(_fold_cents, pdfs, state.get if state.exists else (0, 0, 0))
+        state.update(totals)
+        yield _totals_row(key, *totals)
 
     return stream.groupBy("user_id").applyInPandasWithState(
         update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
+        outputStructType="user_id bigint, n_events bigint, total_cents bigint",
+        stateStructType="n bigint, cents bigint, nv bigint",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
-def purchase_click_semi_join_plan(stream: DataFrame) -> DataFrame:
-    """Stream-stream LEFT SEMI join of one events stream with itself:
-    purchases ``(purchase_id, user_id, p_ts)`` with at least one
-    same-user click in the 5 minutes up to the purchase, each emitted
-    once. Both sides are watermarked at 10 minutes, which bounds the
-    join state."""
+def purchase_click_join_plan(stream: DataFrame, how: str) -> DataFrame:
+    """Purchase→click attribution: a stream-stream interval join of one
+    events stream with itself, of type ``how``. Purchases
+    ``(purchase_id, user_id, p_ts)`` meet the same user's clicks
+    ``(click_id, c_user_id, c_ts)`` in the 5 minutes up to the purchase.
+    Both sides are watermarked at 10 minutes, so the join state holds
+    about (watermark + interval) of each side: rate x window, not
+    history. Both branches filter the one source, which is listed and
+    read once per micro-batch."""
     purchases = (
         stream.filter(F.col("event_type") == "purchase")
         .withWatermark("ts", "10 minutes")
@@ -438,7 +459,7 @@ def purchase_click_semi_join_plan(stream: DataFrame) -> DataFrame:
         (F.col("user_id") == F.col("c_user_id"))
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 5 MINUTES"))
         & (F.col("c_ts") <= F.col("p_ts")),
-        "left_semi",
+        how,
     )
 
 
@@ -458,78 +479,54 @@ def stateful_totals_with_eviction_plan(
     until data flows again — acceptable because state pressure and new
     data arrive together.
 
-    State per key: (n, cents, types) — event count, exact integer cents
-    (money never accumulates in floats), and the bounded distinct
-    event-type set as a sorted comma-joined string (state schemas are
-    flat structs; the type universe is 5 values so the string is
-    bounded)."""
-    import numpy as np
-    import pandas as pd
+    State per key: the ``(n, cents, nv)`` totals of
+    :func:`user_totals_plan` plus the bounded distinct event-type set as
+    a sorted comma-joined string (state schemas are flat structs; the
+    type universe is 5 values so the string is bounded)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "user_id bigint, n_events bigint, total_cents bigint, "
-        "n_types bigint, finalized boolean"
-    )
-    # nv = non-null values folded in: SUM over an all-NULL group is
-    # NULL in SQL, and 0 is a legitimate sum — only the count can
-    # distinguish them.
-    state_schema = "n bigint, cents bigint, nv bigint, types string"
 
     def update(key, pdfs, state: GroupState):
         if state.hasTimedOut:
             n, cents, nv, types = state.get
-            n_types = len([t for t in types.split(",") if t])
             state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_cents": pd.array(
-                        [cents if nv else None], dtype="Int64"
-                    ),
-                    "n_types": [n_types],
-                    "finalized": [True],
-                }
-            )
+            n_types = len([t for t in types.split(",") if t])
+            yield _totals_row(key, n, cents, nv, n_types=n_types, finalized=True)
             return
         n, cents, nv, types = state.get if state.exists else (0, 0, 0, "")
-        tset = {t for t in types.split(",") if t}
+        totals, tset = (n, cents, nv), {t for t in types.split(",") if t}
         for pdf in pdfs:
-            n += len(pdf)
-            # Half-AWAY-from-zero like the oracle's round(); pandas
-            # .round() is half-to-even and differs on exact .5 cents.
-            # NULL values are excluded exactly as SQL SUM excludes
-            # them — a NaN through astype('int64') is platform garbage
-            # (observed: int64 min leaking into totals), never a sum.
-            v = (pdf["value"] * 100).to_numpy()
-            v = v[~np.isnan(v)]
-            nv += len(v)
-            cents += int(
-                np.copysign(np.floor(np.abs(v) + 0.5), v).astype("int64").sum()
-            )
+            totals = _fold_cents(totals, pdf)
             # COUNT(DISTINCT event_type) semantics: NULL never counts.
             tset |= set(pdf["event_type"].dropna().unique())
-        state.update((n, cents, nv, ",".join(sorted(tset))))
+        state.update((*totals, ",".join(sorted(tset))))
         state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_cents": pd.array(
-                    [cents if nv else None], dtype="Int64"
-                ),
-                "n_types": [len(tset)],
-                "finalized": [False],
-            }
-        )
+        yield _totals_row(key, *totals, n_types=len(tset), finalized=False)
 
     return stream.groupBy("user_id").applyInPandasWithState(
         update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
+        outputStructType=(
+            "user_id bigint, n_events bigint, total_cents bigint, "
+            "n_types bigint, finalized boolean"
+        ),
+        stateStructType="n bigint, cents bigint, nv bigint, types string",
         outputMode="update",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    )
+
+
+def latest_state_plan(stream: DataFrame) -> DataFrame:
+    """Per-user latest event as a streaming ``max(struct(ts, event_id,
+    event_type, value))`` aggregate ``(user_id, m)``: CDC log-compaction
+    inside the engine. State is one struct per user, and the max merges
+    associatively, so micro-batch boundaries cannot change the result
+    (event_id is unique, so the comparison never reaches the non-key
+    fields)."""
+    return stream.groupBy("user_id").agg(
+        F.max(
+            F.struct(
+                F.col("ts"), F.col("event_id"), F.col("event_type"), F.col("value")
+            )
+        ).alias("m")
     )
 
 

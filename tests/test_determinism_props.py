@@ -7,11 +7,15 @@ Spark == DuckDB on fixture data)."""
 
 from __future__ import annotations
 
+import re
 from fractions import Fraction
+from pathlib import Path
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
+
+from streamandbatchprocessing_spark.functions.aggregates import dsum
 
 
 # ---------------------------------------------------------------------------
@@ -188,6 +192,29 @@ def test_oracle_floor_rounding_formulas_are_self_consistent():
             assert float(mul) == float(div), (name, mul, div)
             checked += 1
     assert checked >= 40  # the formula is load-bearing across families
+
+
+#: A decimal sum cast straight back to double: ``dsum``/``davg``
+#: written out by hand.
+_INLINE_DSUM = re.compile(r"""cast\("decimal\(25,6\)"\)\)\s*\.cast\("double"\)""")
+
+
+def test_exact_decimal_sum_only_in_the_aggregates():
+    """functions/aggregates.dsum/davg is the one Spark-side exact-decimal
+    sum: no other module casts a decimal sum straight back to double.
+    Partial decimal sums that a later step merges, and windowed sums,
+    do not match."""
+    pkg = Path(dsum.__code__.co_filename).resolve().parents[1]
+    offenders = [
+        f"{path.relative_to(pkg)}: {m.group(0)!r}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.name != "aggregates.py" or path.parent.name != "functions"
+        for m in _INLINE_DSUM.finditer(path.read_text())
+    ]
+    assert not offenders, "\n".join(offenders)
+    assert _INLINE_DSUM.search('F.sum(F.col("v").cast("decimal(25,6)"))\n  .cast("double")')
+    assert not _INLINE_DSUM.search('F.sum(F.col("v").cast("decimal(25,6)")).alias("dsum_raw")')
+    assert not _INLINE_DSUM.search('F.sum(F.col("v").cast("decimal(25,6)"))\n.over(w)\n.cast("double")')
 
 
 # ---------------------------------------------------------------------------

@@ -7,9 +7,13 @@ from __future__ import annotations
 
 import os
 import time
+from collections import Counter
+from functools import partial
 
 import pytest
 
+from streamandbatchprocessing_spark.queries.dedup import cms_grid
+from streamandbatchprocessing_spark.streaming import pipeline
 from streamandbatchprocessing_spark.streaming.transactions import (
     StreamManager,
     start_transaction_pipeline,
@@ -400,22 +404,32 @@ def test_processing_time_timeout_evicts_idle_keys(spark, tmp_path):
         query.stop()
 
 
+#: The join type each attribution query passes to
+#: ``pipeline.purchase_click_join_plan``.
+JOIN_TYPES = {"f05": "inner", "f08": "leftOuter", "f12": "fullOuter", "f14": "left_semi"}
+
+
 def test_f_family_queries_run_on_streaming_plans(spark, sf_dir):
     """The f-family's claim is that each registered query drives the
     STREAMING engine (run_to_memory drain), not a batch re-expression.
-    Pin the plan kind at the source: every f-plan builder must produce
-    a streaming DataFrame from events_stream."""
-    from streamandbatchprocessing_spark.streaming.pipeline import (
-        dashboard_plan,
-        events_stream,
-        session_windows_plan,
-        streaming_dedup_plan,
-    )
-
-    stream = events_stream(spark, sf_dir)
+    Pin the plan kind at the source: every plan builder in
+    ``streaming/pipeline.py`` (each join type of the attribution join
+    among them) and f13's ``cms_grid`` must produce a streaming
+    DataFrame from events_stream."""
+    builders = {
+        name: fn for name, fn in vars(pipeline).items()
+        if name.endswith("_plan") and callable(fn)
+    }
+    join = builders.pop("purchase_click_join_plan")
+    plans = {
+        **builders,
+        **{f"join-{how}": partial(join, how=how) for how in JOIN_TYPES.values()},
+        "cms_grid": cms_grid,
+    }
+    stream = pipeline.events_stream(spark, sf_dir)
     assert stream.isStreaming
-    for plan in (dashboard_plan, session_windows_plan, streaming_dedup_plan):
-        assert plan(stream).isStreaming, plan.__name__
+    for name, plan in plans.items():
+        assert plan(stream).isStreaming, name
 
 
 def test_streaming_state_merges_across_micro_batches(spark, sf_dir, tmp_path):
@@ -621,89 +635,6 @@ def test_checkpoint_recovery_after_midstream_crash(spark, sf_dir, tmp_path):
     assert got == want
 
 
-def test_cms_grid_survives_midstream_crash(spark, sf_dir, tmp_path):
-    """f13's count-min grid through a crash-restart: fault-inject at
-    micro-batch 2, resume from the SAME checkpoint, and the drained
-    d x w grid must equal the batch-built grid CELL-FOR-CELL. This is
-    the sketch-specific exactly-once property — a replayed increment
-    would silently inflate cells (est >= true still holds, so only
-    bit-equality with the batch grid catches it)."""
-    import glob as _glob
-    import os as _os
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from streamandbatchprocessing_spark.queries.dedup import (
-        _CMS_D, cms_bucket,
-    )
-    from streamandbatchprocessing_spark.sources.batch import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    src = str(tmp_path / "src")
-    _os.makedirs(src)
-    base = _time.time() - 100
-    for i in range(4):
-        pdir = str(tmp_path / f"part{i}")
-        ev.filter(F.col("event_id") % 4 == i).coalesce(1).write.parquet(pdir)
-        pfile = _glob.glob(f"{pdir}/part-*.parquet")[0]
-        dst = f"{src}/{i:02d}.parquet"
-        _os.rename(pfile, dst)
-        _os.utime(dst, (base + 10 * i, base + 10 * i))
-
-    bucket = cms_bucket
-    depths = F.array(*[F.lit(i) for i in range(_CMS_D)])
-
-    def grid(df):
-        return (
-            df.select(F.col("user_id").cast("string").alias("k"))
-            .select("k", F.explode(depths).alias("d"))
-            .select("d", bucket(F.col("k"), F.col("d")).alias("b"))
-            .groupBy("d", "b")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        )
-
-    schema = spark.read.parquet(src).schema
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-
-    def run(fail_at):
-        def sink(batch_df, batch_id: int) -> None:
-            if fail_at is not None and batch_id == fail_at:
-                raise RuntimeError("injected crash")
-            batch_df.write.mode("overwrite").parquet(out)
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            grid(stream).writeStream.outputMode("complete")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .queryName(f"cms_recovery_{fail_at}")
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        except Exception:
-            pass
-        finally:
-            if q.isActive:
-                q.stop()
-
-    run(fail_at=2)
-    run(fail_at=None)
-
-    got = sorted(
-        (r["d"], r["b"], r["c"]) for r in spark.read.parquet(out).collect()
-    )
-    want = sorted((r["d"], r["b"], r["c"]) for r in grid(ev).collect())
-    assert got == want
-
-
 def _events_in_time_ordered_files(spark, sf_dir, tmp_path, n_files=4):
     """The events fixture, plus a same-user click 2 minutes before two
     purchases in three (so the semi join has matches to emit), written
@@ -747,26 +678,40 @@ def _events_in_time_ordered_files(spark, sf_dir, tmp_path, n_files=4):
 
 
 @pytest.mark.parametrize(
-    "plan_name, output_mode",
+    "plan, output_mode",
     [
-        ("purchase_click_semi_join_plan", "append"),  # f14
-        ("user_totals_plan", "update"),  # f04
+        *(
+            pytest.param(
+                partial(pipeline.purchase_click_join_plan, how=how), "append",
+                id=f"join-{how}",
+            )
+            for how in JOIN_TYPES.values()
+        ),
+        pytest.param(pipeline.user_totals_plan, "update", id="user_totals_plan-update"),
+        pytest.param(cms_grid, "complete", id="cms_grid-complete"),
+        pytest.param(
+            pipeline.latest_state_plan, "complete", id="latest_state_plan-complete"
+        ),
     ],
 )
 def test_stateful_drain_restarts_after_midstream_crash(
-    spark, sf_dir, tmp_path, plan_name, output_mode
+    spark, sf_dir, tmp_path, plan, output_mode
 ):
-    """f14's stream-stream semi join and f04's applyInPandasWithState
-    totals through a crash and restart. The sink of micro-batch 2 fails
-    after the batch ran, so its state version is already on disk; the
-    query restarts on the same checkpoint, resumes at batch 2 and
-    commits that state version again over the file the crashed run
-    left. Every micro-batch's output must equal an uninterrupted run's."""
+    """Every stateful plan the availableNow harness can drive, through a
+    crash and restart: the attribution join of f05, f08, f12 and f14,
+    f04's applyInPandasWithState totals, f13's count-min grid and f15's
+    latest state. (f06's processing-time timeout keeps an availableNow
+    drain from ending; its eviction test covers it.) The sink of
+    micro-batch 2 fails after the batch ran, so its state version is
+    already on disk; the query restarts on the same checkpoint, resumes
+    at batch 2 and commits that state version again over the file the
+    crashed run left. Every micro-batch's output must equal an
+    uninterrupted run's, and a complete-mode run's last batch must
+    equal the plan applied to the whole input as a batch DataFrame —
+    for the count-min grid that is the cell-for-cell proof that no
+    increment was replayed (est >= true would still hold)."""
     import glob as _glob
 
-    from streamandbatchprocessing_spark.streaming import pipeline
-
-    plan = getattr(pipeline, plan_name)
     src = _events_in_time_ordered_files(spark, sf_dir, tmp_path)
     schema = spark.read.parquet(src).schema
 
@@ -774,7 +719,7 @@ def test_stateful_drain_restarts_after_midstream_crash(
         out: dict = {}
 
         def sink(batch_df, batch_id: int) -> None:
-            out[batch_id] = sorted(tuple(r) for r in batch_df.collect())
+            out[batch_id] = Counter(tuple(r) for r in batch_df.collect())
             if batch_id == fail_at:
                 raise RuntimeError("injected crash")
 
@@ -801,6 +746,9 @@ def test_stateful_drain_restarts_after_midstream_crash(
 
     want = drain(str(tmp_path / "ck_ref"))
     assert any(want.values()), want
+    if output_mode == "complete":
+        batch = plan(spark.read.parquet(src)).collect()
+        assert want[max(want)] == Counter(tuple(r) for r in batch)
 
     ck = str(tmp_path / "ck")
     crashed = drain(ck, fail_at=2)
