@@ -1,3 +1,3 @@
-from .aggregates import dsum, davg, dround, pround, pround_sql
+from .aggregates import dsum, davg, pround, pround_sql
 
-__all__ = ["dsum", "davg", "dround", "pround", "pround_sql"]
+__all__ = ["dsum", "davg", "pround", "pround_sql"]

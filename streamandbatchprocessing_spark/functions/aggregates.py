@@ -45,29 +45,18 @@ def davg(col: Column | str, alias: str | None = None) -> Column:
     return out.alias(alias) if alias else out
 
 
-def dround(col: Column, scale: int, alias: str | None = None) -> Column:
-    """Round a (deterministic) double; use only on already-deterministic
-    inputs such as ``dsum``/``davg`` outputs, mirroring the reference's
-    ``round(x, 2)`` post-aggregation formatting.
-
-    DEPRECATED for oracle-gated outputs — use :func:`pround`.
-    ``round(double, s)`` is engine-SPECIFIC at .5 ties even on
-    bit-identical inputs: Spark rounds the exact binary expansion via
-    BigDecimal HALF_UP while DuckDB rounds the scaled double, and the
-    two can land on opposite sides of a tie (observed live: d08's
-    centroid mean, 0.003213 vs 0.003214 at sf0.1)."""
-    out = F.round(col, scale)
-    return out.alias(alias) if alias else out
-
-
 def pround(col: Column | str, scale: int, alias: str | None = None) -> Column:
     """ENGINE-PORTABLE rounding: ``floor(x·10^s + 0.5) / 10^s``.
 
     Every step (multiply, add, floor, divide) is an exactly-specified
     IEEE 754 operation, so any engine computing this expression on the
-    same double produces the SAME double — unlike ``round(double, s)``
-    whose tie resolution is engine-specific (see :func:`dround`). Ties
-    resolve half-up (toward +∞) on both engines by construction.
+    same double produces the SAME double. Ties resolve half-up (toward
+    +∞) on both engines by construction. ``round(double, s)`` is
+    engine-SPECIFIC at .5 ties even on bit-identical inputs: Spark
+    rounds the exact binary expansion via BigDecimal HALF_UP while
+    DuckDB rounds the scaled double, and the two can land on opposite
+    sides of a tie (observed live: d08's centroid mean, 0.003213 vs
+    0.003214 at sf0.1).
 
     Domain bound: |x|·10^s must stay below 2^53 for the float multiply
     to be order-of-magnitude exact and below 2^63 for Spark's
@@ -95,3 +84,9 @@ def pround_sql(x: str, scale: int) -> str:
     divide scales."""
     k = float(10 ** scale)
     return f"floor(({x}) * {k!r} + 0.5) / {k!r}"
+
+
+#: DuckDB-oracle twins of :func:`dsum` and :func:`davg` for oracle
+#: strings: ``DSUM_SQL.format(x=<column expression>)``.
+DSUM_SQL = "CAST(SUM(CAST({x} AS DECIMAL(25,6))) AS DOUBLE)"
+DAVG_SQL = DSUM_SQL + " / COUNT({x})"

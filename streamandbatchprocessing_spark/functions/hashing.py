@@ -56,16 +56,3 @@ def minhash_hashes(col: Column, n: int) -> list[Column]:
     h1 = F.conv(F.substring(m, 1, 15), 16, 10).cast("long")
     h2 = F.conv(F.substring(m, 16, 12), 16, 10).cast("long")
     return [(h1 + F.lit(i) * h2) % F.lit(MERSENNE61) for i in range(n)]
-
-
-def simhash_bits(tokens_col: Column, n_bits: int = 32) -> list[Column]:
-    """Per-token bit indicator columns for SimHash: for bit j, +1 when
-    bit j of the token hash is set else -1. Summed per document and
-    thresholded at >0, these yield the SimHash fingerprint. Built as
-    plain column arithmetic on an exploded token column.
-    """
-    h = hash60(tokens_col)
-    return [
-        (F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"bit{j}")
-        for j in range(n_bits)
-    ]

@@ -108,8 +108,3 @@ def dot_fixed(a: Column, b: Column, dim: int) -> Column:
     for j in range(dim):
         acc = acc + F.element_at(a, j + 1) * F.element_at(b, j + 1)
     return acc
-
-
-def norm_fixed(a: Column, dim: int) -> Column:
-    """:func:`norm` via :func:`dot_fixed` — codegen'd, bit-identical."""
-    return F.sqrt(dot_fixed(a, a, dim))

@@ -51,10 +51,6 @@ def has_broadcast_hash_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in executed_plan(df)
 
 
-def has_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in executed_plan(df)
-
-
 def broadcast_hint_subtrees(df: DataFrame) -> list[str]:
     """Tree dumps of every ``ResolvedHint (strategy=broadcast)`` subtree
     in the ANALYZED logical plan — i.e. exactly what the query author

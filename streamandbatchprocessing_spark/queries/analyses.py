@@ -19,12 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.aggregates import davg, dsum, pround
+from ..functions.aggregates import DAVG_SQL, DSUM_SQL, davg, dsum, pround
 from ..sources.batch import load_table
 from .registry import query
 
-_DSUM = "CAST(SUM(CAST({x} AS DECIMAL(25,6))) AS DOUBLE)"
-_DAVG = "CAST(SUM(CAST({x} AS DECIMAL(25,6))) AS DOUBLE) / COUNT({x})"
 # events.props is a JSON object like {"k": 87}; this is the portable pair
 # of extraction expressions (verified equivalent Spark<->DuckDB). The
 # json_valid guard matches Spark's malformed→NULL contract
@@ -48,8 +46,8 @@ def _events_with_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH ev AS (SELECT *, {_K_SQL} AS k FROM events)
     SELECT k,
-           {_DSUM.format(x='value')} AS total_value,
-           {_DAVG.format(x='value')} AS avg_value,
+           {DSUM_SQL.format(x='value')} AS total_value,
+           {DAVG_SQL.format(x='value')} AS avg_value,
            COUNT(*) AS n_events,
            COUNT(DISTINCT user_id) AS n_users
     FROM ev
@@ -84,9 +82,9 @@ def a01_revenue_by_category(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH ev AS (SELECT *, {_K_SQL} % 5 AS k_bucket FROM events)
     SELECT event_type, k_bucket,
-           {_DSUM.format(x='value')} AS total_value,
+           {DSUM_SQL.format(x='value')} AS total_value,
            COUNT(*) AS n_events,
-           {_DAVG.format(x='value')} AS avg_value,
+           {DAVG_SQL.format(x='value')} AS avg_value,
            COUNT(DISTINCT user_id) AS n_users
     FROM ev
     GROUP BY event_type, k_bucket
@@ -165,7 +163,7 @@ def a03_type_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH agg AS (
         SELECT user_id,
-               {_DSUM.format(x='value')} AS ltv,
+               {DSUM_SQL.format(x='value')} AS ltv,
                COUNT(*) AS n_events,
                MIN(CAST(ts AS TIMESTAMP)) AS first_seen,
                MAX(CAST(ts AS TIMESTAMP)) AS last_seen,
@@ -221,8 +219,8 @@ def a04_user_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH ev AS (SELECT *, {_K_SQL} % 10 AS k_bucket FROM events)
     SELECT k_bucket,
            COUNT(*) AS n_anomalies,
-           {_DSUM.format(x='value')} AS total_value,
-           {_DAVG.format(x='value')} AS avg_value,
+           {DSUM_SQL.format(x='value')} AS total_value,
+           {DAVG_SQL.format(x='value')} AS avg_value,
            COUNT(DISTINCT user_id) AS n_users
     FROM ev
     WHERE event_type = 'error' OR value > 400
@@ -256,8 +254,8 @@ def a05_anomaly_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(ts AS DATE) AS event_date,
            CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS event_hour,
            COUNT(*) AS n_events,
-           {_DSUM.format(x='value')} AS total_value,
-           {_DAVG.format(x='value')} AS avg_value,
+           {DSUM_SQL.format(x='value')} AS total_value,
+           {DAVG_SQL.format(x='value')} AS avg_value,
            COUNT(DISTINCT user_id) AS n_users
     FROM events
     WHERE event_type = 'purchase'
@@ -292,8 +290,8 @@ def a06_hourly_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT event_type,
            COUNT(*) AS n_events,
-           {_DSUM.format(x='value')} AS total_value,
-           {_DAVG.format(x='value')} AS avg_value,
+           {DSUM_SQL.format(x='value')} AS total_value,
+           {DAVG_SQL.format(x='value')} AS avg_value,
            COUNT(DISTINCT user_id) AS n_users,
            CAST(SUM(CASE WHEN value > 300 THEN 1 ELSE 0 END) AS BIGINT) AS n_big,
            floor((SUM(CASE WHEN value > 300 THEN 1 ELSE 0 END) * 100.0 / COUNT(*)) * 10000.0 + 0.5) / 10000.0
@@ -334,7 +332,7 @@ def a07_type_performance(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH agg AS (
         SELECT user_id,
                COUNT(*) AS n_events,
-               {_DSUM.format(x='value')} AS total_value,
+               {DSUM_SQL.format(x='value')} AS total_value,
                MIN(CAST(ts AS DATE)) AS first_date,
                MAX(CAST(ts AS DATE)) AS last_date
         FROM events
@@ -380,8 +378,8 @@ def a08_user_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP)) AS window_start,
            event_type,
            COUNT(*) AS n_events,
-           {_DSUM.format(x='value')} AS total_value,
-           {_DAVG.format(x='value')} AS avg_value,
+           {DSUM_SQL.format(x='value')} AS total_value,
+           {DAVG_SQL.format(x='value')} AS avg_value,
            COUNT(DISTINCT user_id) AS n_users
     FROM events
     WHERE event_type IN ('purchase', 'click')

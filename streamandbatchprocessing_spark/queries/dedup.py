@@ -29,7 +29,6 @@ from ..functions.text import shingles, tokens
 from ..plans import static_plan
 from ..session import is_local_master
 from ..sources.batch import load_table
-from ..sources.staging import staging_dir
 from .registry import env_int, persist_tracked, query, session_artifact
 
 _N_HASHES = 16
@@ -244,10 +243,8 @@ def _agree_col(pa: str, pb: str, matched_band: int):
 #: verify (c08), calibration (c14), source matrix (c19), containment
 #: (c20), degree census (c21) and clustering (c07) stages are all
 #: downstream readers of those artifacts. The session_artifact memo
-#: (queries/registry.py — keyed on app/corpus/plan-conf so the
-#: perturbation sweep rebuilds under perturbed plans) gives the query
-#: registry the same shape: one persisted copy instead of a rebuild
-#: inside every query.
+#: (queries/registry.py) gives the query registry the same shape: one
+#: persisted copy instead of a rebuild inside every query.
 
 
 def _session_artifact(spark: SparkSession, sf_dir: str, kind: str, build):
@@ -263,55 +260,34 @@ def shared_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: How the candidate-stream artifact is materialized (round 13, the
-#: round-12 verdict's #1): ``local`` = ``localCheckpoint`` (fast, but
-#: blocks are unrecoverable — on executor loss every in-flight consumer
-#: fails), ``reliable`` = ``checkpoint()`` to the SparkContext
-#: checkpoint dir with a MEMORY_AND_DISK persist on top (warm reads
-#: come from blocks; a lost/evicted block recomputes by re-reading the
-#: checkpoint FILES, so consumers survive executor loss AND the
-#: variants-cap LRU can release blocks promptly and safely).
-#: ``auto`` (default) picks ``local`` on a ``local``/``local[...]``
-#: master (:func:`is_local_master`) — where
-#: "executor loss" is process death and localCheckpoint's
-#: skip-the-write build is strictly better — and ``reliable`` on any
-#: cluster master, where recompute-safety is the difference between a
-#: retried task and a permanently failed query.
-_PAIRS_MATERIALIZE_MODES = ("auto", "local", "reliable")
-_PAIRS_MATERIALIZE = os.environ.get("SBP_PAIRS_MATERIALIZE", "auto")
-if _PAIRS_MATERIALIZE not in _PAIRS_MATERIALIZE_MODES:
-    raise ValueError(
-        f"$SBP_PAIRS_MATERIALIZE={_PAIRS_MATERIALIZE!r} is not one of "
-        f"{_PAIRS_MATERIALIZE_MODES}"
-    )
-
-
 def _pairs_materialize_mode(spark: SparkSession) -> str:
-    if _PAIRS_MATERIALIZE != "auto":
-        return _PAIRS_MATERIALIZE
+    """How the candidate-stream artifact is materialized: ``local`` =
+    ``localCheckpoint`` on a ``local``/``local[...]`` master
+    (:func:`is_local_master`), where "executor loss" is process death
+    and skipping the checkpoint write is strictly better; ``reliable``
+    = ``checkpoint()`` to the SparkContext checkpoint dir with a
+    MEMORY_AND_DISK persist on top on any cluster master, where a lost
+    block recomputes by re-reading the checkpoint FILES — a retried
+    task instead of a permanently failed query."""
     return "local" if is_local_master(spark.sparkContext.master) else "reliable"
 
 
 def _ensure_checkpoint_dir(spark: SparkSession) -> None:
     """Set a SparkContext checkpoint dir if the host application has
-    not: ``$SBP_CHECKPOINT_DIR`` when given (a real deployment points
-    this at durable shared storage — reliable checkpoints MUST be
-    readable by every executor). Only a local master, whose one JVM
-    is every executor, may fall back to an atexit-cleaned staging dir;
-    on any other master a driver-local dir would fake the recovery the
-    reliable regime exists for, so that is an error."""
+    not: ``$SBP_CHECKPOINT_DIR``, which a real deployment points at
+    durable shared storage — reliable checkpoints MUST be readable by
+    every executor, so a driver-local default would fake the recovery
+    the reliable regime exists for, and its absence is an error."""
     sc = spark.sparkContext
     if sc._jsc.sc().checkpointDir().isDefined():  # noqa: SLF001
         return
     path = os.environ.get("SBP_CHECKPOINT_DIR")
     if not path:
-        if not is_local_master(sc.master):
-            raise RuntimeError(
-                f"the reliable pairs regime on master {sc.master!r} needs a "
-                "checkpoint dir every executor can read: set "
-                "$SBP_CHECKPOINT_DIR or SparkContext.setCheckpointDir"
-            )
-        path = staging_dir("sbp-reliable-ckpt-")
+        raise RuntimeError(
+            f"the reliable pairs regime on master {sc.master!r} needs a "
+            "checkpoint dir every executor can read: set "
+            "$SBP_CHECKPOINT_DIR or SparkContext.setCheckpointDir"
+        )
     sc.setCheckpointDir(path)
 
 
@@ -320,8 +296,7 @@ def _materialize_lineage_free(spark: SparkSession, df: DataFrame) -> DataFrame:
     (round 12: the artifact's 4-band union-of-self-joins lineage
     re-entered every consumer's analysis/optimization pass — 16-66
     lineage repetitions per plan, 0.4-12 s compile per query) under the
-    regime :data:`_PAIRS_MATERIALIZE` selects — see that knob for the
-    local-vs-reliable trade."""
+    regime :func:`_pairs_materialize_mode` selects."""
     if _pairs_materialize_mode(spark) == "local":
         return df.localCheckpoint(eager=True)
     from pyspark import StorageLevel
@@ -350,19 +325,13 @@ def shared_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     census measured its consumers at 16-66 repetitions of the
     InMemoryRelation lineage per plan, and profile_queries attributed
     0.4-12 s of per-query compile time to it. Either materialization
-    regime (see :data:`_PAIRS_MATERIALIZE`) collapses the artifact to a
-    lineage-free ``Scan ExistingRDD`` leaf backed by MEMORY_AND_DISK
-    blocks; on a cluster master the reliable regime additionally writes
-    the partitions to the checkpoint dir, so losing an executor's
-    blocks (or the LRU evicting them) recomputes from files instead of
-    permanently failing every in-flight consumer — the round-12
-    verdict's #1. In the local regime, eviction must NOT force-release
-    the blocks (they are unrecoverable): registry's eviction-path
-    ``_unpersist_value`` is a no-op for a checkpointed frame and the
-    ContextCleaner releases blocks once no consumer plan references the
-    RDD; only the full-release path (shutdown/corpus rotation, where
-    the caller owns the session and no consumer can be in flight)
-    force-drops them."""
+    regime (see :func:`_pairs_materialize_mode`) collapses the artifact
+    to a lineage-free ``Scan ExistingRDD`` leaf backed by
+    MEMORY_AND_DISK blocks; on a cluster master the reliable regime
+    additionally writes the partitions to the checkpoint dir, so losing
+    an executor's blocks recomputes from files instead of permanently
+    failing every in-flight consumer — the round-12 verdict's #1.
+    :func:`release_session_artifacts` drops the blocks."""
     return session_artifact(
         spark, sf_dir, "pairs",
         lambda: _materialize_lineage_free(
@@ -384,9 +353,9 @@ def shared_pairs_count(spark: SparkSession, sf_dir: str) -> int:
     round-11 advisor's pattern): the count is a full action over the
     persisted O(pairs) artifact (~0.7 s on the sf0.1 stream), and
     re-running it on every frame CONSTRUCTION made every consumer's
-    build pay it again. One count per (application, corpus, plan-conf
-    variant) is the production shape — a pipeline records the
-    candidate-stream cardinality once, next to the artifact itself."""
+    build pay it again. One count per (application, corpus) is the
+    production shape — a pipeline records the candidate-stream
+    cardinality once, next to the artifact itself."""
     return session_artifact(
         spark, sf_dir, "pairs_count",
         lambda: shared_pairs(spark, sf_dir).count(),
@@ -1985,13 +1954,12 @@ def _c18_probe_regime(spark: SparkSession, sf_dir: str) -> str:
     direction the pinned blk exchange is the join's own clustering,
     never a dead exchange, so the pathology cannot re-enter.
 
-    Memoized per (application, sf_dir, plan-conf variant) via
-    session_artifact — the memo key includes
-    autoBroadcastJoinThreshold, so the perturbation sweep's forced-SMJ
-    pass re-derives under its own conf — because frame construction
-    must stay cheap: the round-11 gate ran a full count() ACTION every
-    time ``_c18_frame`` was built (every registry build, oracle
-    compare, and plan test — the advisor's third finding)."""
+    Memoized per (application, sf_dir, autoBroadcastJoinThreshold) via
+    session_artifact — the threshold is part of the kind, so a changed
+    threshold re-derives — because frame construction must stay cheap:
+    the round-11 gate ran a full count() ACTION every time
+    ``_c18_frame`` was built (every registry build, oracle compare, and
+    plan test — the advisor's third finding)."""
     def derive() -> str:
         p = _c18_blocked(load_table(spark, sf_dir, "part"))
         trial = p.alias("a").join(
@@ -2004,7 +1972,10 @@ def _c18_probe_regime(spark: SparkSession, sf_dir: str) -> str:
             if "BroadcastHashJoin" in static_plan(trial)
             else "shuffle"
         )
-    return session_artifact(spark, sf_dir, "c18_probe_regime", derive)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    return session_artifact(
+        spark, sf_dir, f"c18_probe_regime@{threshold}", derive
+    )
 
 
 def _c18_oracle(top_n: int) -> str:
@@ -2093,7 +2064,7 @@ def _c18_frame(spark: SparkSession, sf_dir: str, top_n: int) -> DataFrame:
     # probe, where the old always-by-primary-key repartition became a
     # DEAD exchange): the right key depends on which join the planner
     # will pick, read from the planner's own trial plan (round 12 —
-    # see _c18_probe_regime) and memoized per conf variant.
+    # see _c18_probe_regime) and memoized per broadcast threshold.
     #
     # * BROADCAST regime (build side fits the threshold): partition
     #   the probe by PRIMARY KEY. Rows of every block spread evenly

@@ -2367,8 +2367,8 @@ def _p26_flag_regime(spark: SparkSession, sf_dir: str) -> str:
     exchanges) wins. Both branches are bit-identical by construction
     (same hash60 expression, same ids; pinned by
     tests/test_round9_ops.py::test_p26_flag_regimes_agree).
-    Memoized per (application, sf_dir, plan-conf variant) so the
-    forced-SMJ perturbation sweep re-derives under its own conf."""
+    Memoized per (application, sf_dir, autoBroadcastJoinThreshold): the
+    threshold is part of the kind, so a changed threshold re-derives."""
 
     def derive() -> str:
         from .dedup import shared_pairs
@@ -2387,7 +2387,10 @@ def _p26_flag_regime(spark: SparkSession, sf_dir: str) -> str:
             else "inline"
         )
 
-    return session_artifact(spark, sf_dir, "p26_flag_regime", derive)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    return session_artifact(
+        spark, sf_dir, f"p26_flag_regime@{threshold}", derive
+    )
 
 
 @query("p26_split_leakage_audit", oracle=_p26_oracle())

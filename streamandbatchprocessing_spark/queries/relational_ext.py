@@ -10,11 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.aggregates import davg, dsum, pround, pround_sql
+from ..functions.aggregates import DSUM_SQL, davg, dsum, pround, pround_sql
 from ..sources.batch import load_table
 from .registry import persist_tracked, query
-
-_DSUM = "CAST(SUM(CAST({x} AS DECIMAL(25,6))) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------------
@@ -106,8 +104,8 @@ def g02_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH m AS (
         SELECT c_mktsegment,
                COUNT(*) AS n,
-               {_DSUM.format(x='c_acctbal')} AS s1,
-               {_DSUM.format(x='c_acctbal * c_acctbal')} AS s2
+               {DSUM_SQL.format(x='c_acctbal')} AS s1,
+               {DSUM_SQL.format(x='c_acctbal * c_acctbal')} AS s2
         FROM customer GROUP BY c_mktsegment)
     SELECT c_mktsegment, n,
            floor((s1 / n) * 1000000.0 + 0.5) / 1000000.0 AS mean_acctbal,
@@ -196,9 +194,9 @@ def g04_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH wide AS (
         SELECT o_orderpriority,
-               {_DSUM.format(x="CASE WHEN o_orderstatus='F' THEN o_totalprice ELSE 0 END")} AS finished,
-               {_DSUM.format(x="CASE WHEN o_orderstatus='O' THEN o_totalprice ELSE 0 END")} AS open_,
-               {_DSUM.format(x="CASE WHEN o_orderstatus='P' THEN o_totalprice ELSE 0 END")} AS pending
+               {DSUM_SQL.format(x="CASE WHEN o_orderstatus='F' THEN o_totalprice ELSE 0 END")} AS finished,
+               {DSUM_SQL.format(x="CASE WHEN o_orderstatus='O' THEN o_totalprice ELSE 0 END")} AS open_,
+               {DSUM_SQL.format(x="CASE WHEN o_orderstatus='P' THEN o_totalprice ELSE 0 END")} AS pending
         FROM orders GROUP BY o_orderpriority)
     SELECT o_orderpriority, status, revenue FROM (
         SELECT o_orderpriority, 'F' AS status, finished AS revenue FROM wide
@@ -1726,7 +1724,7 @@ def g25_hour_of_week_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor AS (SELECT CAST(MAX(ts) AS DATE) AS maxd FROM p),
     per_user AS (SELECT user_id,
                         CAST(COUNT(*) AS BIGINT) AS frequency,
-                        {_DSUM.format(x='value')} AS monetary,
+                        {DSUM_SQL.format(x='value')} AS monetary,
                         CAST(MAX(ts) AS DATE) AS last_d
                  FROM p GROUP BY user_id),
     rfm AS (SELECT user_id, frequency, monetary,
@@ -1970,7 +1968,7 @@ def g28_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "g29_revenue_pareto",
     oracle=f"""
-    WITH pc AS (SELECT o_custkey, {_DSUM.format(x='o_totalprice')} AS revenue
+    WITH pc AS (SELECT o_custkey, {DSUM_SQL.format(x='o_totalprice')} AS revenue
                 FROM orders GROUP BY o_custkey),
     th AS (SELECT
         {", ".join(pround_sql(f'quantile_cont(revenue, 0.{q})', 6) + f' AS t{q}'
@@ -1982,9 +1980,9 @@ def g28_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
            FROM pc CROSS JOIN th),
     g AS (SELECT CAST(decile AS INT) AS decile,
                  CAST(COUNT(*) AS BIGINT) AS n_customers,
-                 {_DSUM.format(x='revenue')} AS total_revenue
+                 {DSUM_SQL.format(x='revenue')} AS total_revenue
           FROM sc GROUP BY decile),
-    t AS (SELECT {_DSUM.format(x='total_revenue')} AS grand_total FROM g)
+    t AS (SELECT {DSUM_SQL.format(x='total_revenue')} AS grand_total FROM g)
     SELECT decile, n_customers, total_revenue,
            {pround_sql('total_revenue / grand_total', 6)} AS revenue_share,
            {pround_sql(
@@ -2546,7 +2544,7 @@ def g35_purchase_frequency_curve(
     "g36_order_value_reconciliation",
     oracle=f"""
     WITH lc AS (SELECT l_orderkey,
-                       {_DSUM.format(
+                       {DSUM_SQL.format(
                            x="l_extendedprice * (1 - l_discount)"
                              " * (1 + l_tax)")} AS recomputed
                 FROM lineitem GROUP BY l_orderkey),
@@ -2559,11 +2557,11 @@ def g35_purchase_frequency_curve(
            CAST(COUNT(*) AS BIGINT) AS n_orders,
            CAST(SUM(CASE WHEN abs_dev > 0.01 THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_mismatched,
-           floor(({_DSUM.format(x="abs_dev")} / COUNT(*))
+           floor(({DSUM_SQL.format(x="abs_dev")} / COUNT(*))
                  * 1000000.0 + 0.5) / 1000000.0 AS mean_abs_dev,
            MAX(abs_dev) AS max_abs_dev,
-           {_DSUM.format(x="o_totalprice")} AS recorded_total,
-           {_DSUM.format(x="recomputed")} AS recomputed_total
+           {DSUM_SQL.format(x="o_totalprice")} AS recorded_total,
+           {DSUM_SQL.format(x="recomputed")} AS recomputed_total
     FROM per GROUP BY priority ORDER BY priority
     """,
 )

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.aggregates import dsum
+from ..functions.aggregates import DSUM_SQL, dsum
 from ..functions.pii import oracle_pii_count, oracle_scrub, pii_count, scrub
 from ..sources.batch import load_table
 from ..streaming.pipeline import (
@@ -32,8 +32,6 @@ from ..streaming.pipeline import (
 from .dedup import _CMS_D, _CMS_MIN_FRAC, _CMS_W, cms_grid, cms_heavy_hitters
 from .registry import query
 
-_DSUM = "CAST(SUM(CAST({x} AS DECIMAL(25,6))) AS DOUBLE)"
-
 
 @query(
     "f01_streaming_dashboard",
@@ -48,7 +46,7 @@ _DSUM = "CAST(SUM(CAST({x} AS DECIMAL(25,6))) AS DOUBLE)"
            window_start + INTERVAL '5 minutes' AS window_end,
            event_type,
            COUNT(*) AS n_events,
-           {_DSUM.format(x='value')} AS total_value
+           {DSUM_SQL.format(x='value')} AS total_value
     FROM slid
     GROUP BY window_start, event_type
     ORDER BY window_start, event_type
@@ -200,7 +198,7 @@ def f05_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
            event_type,
            COUNT(*) AS n_events,
-           {_DSUM.format(x='value')} AS total_value
+           {DSUM_SQL.format(x='value')} AS total_value
     FROM ev
     GROUP BY 1, 2
     ORDER BY 1, 2
@@ -286,7 +284,7 @@ def f06_idle_key_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT c.c_mktsegment AS segment, e.event_type,
            COUNT(*) AS n_events,
-           {_DSUM.format(x='e.value')} AS total_value
+           {DSUM_SQL.format(x='e.value')} AS total_value
     FROM events e JOIN customer c ON c.c_custkey = e.user_id
     GROUP BY segment, e.event_type
     ORDER BY segment, e.event_type

@@ -22,13 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.aggregates import davg, dsum, pround
+from ..functions.aggregates import DAVG_SQL, DSUM_SQL, davg, dsum, pround
 from ..sources.batch import load_table
 from .registry import persist_tracked, query
-
-# SQL fragment mirroring dsum()/davg() on the DuckDB side.
-_DSUM = "CAST(SUM(CAST({x} AS DECIMAL(25,6))) AS DOUBLE)"
-_DAVG = "CAST(SUM(CAST({x} AS DECIMAL(25,6))) AS DOUBLE) / COUNT({x})"
 
 
 # ---------------------------------------------------------------------------
@@ -38,13 +34,13 @@ _DAVG = "CAST(SUM(CAST({x} AS DECIMAL(25,6))) AS DOUBLE) / COUNT({x})"
     "b01_pricing_summary",
     oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           {_DSUM.format(x='l_quantity')}                                   AS sum_qty,
-           {_DSUM.format(x='l_extendedprice')}                              AS sum_base_price,
-           {_DSUM.format(x='l_extendedprice * (1 - l_discount)')}           AS sum_disc_price,
-           {_DSUM.format(x='l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
-           {_DAVG.format(x='l_quantity')}                                   AS avg_qty,
-           {_DAVG.format(x='l_extendedprice')}                              AS avg_price,
-           {_DAVG.format(x='l_discount')}                                   AS avg_disc,
+           {DSUM_SQL.format(x='l_quantity')}                                   AS sum_qty,
+           {DSUM_SQL.format(x='l_extendedprice')}                              AS sum_base_price,
+           {DSUM_SQL.format(x='l_extendedprice * (1 - l_discount)')}           AS sum_disc_price,
+           {DSUM_SQL.format(x='l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
+           {DAVG_SQL.format(x='l_quantity')}                                   AS avg_qty,
+           {DAVG_SQL.format(x='l_extendedprice')}                              AS avg_price,
+           {DAVG_SQL.format(x='l_discount')}                                   AS avg_disc,
            COUNT(*)                                                         AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-02'
@@ -85,7 +81,7 @@ def b01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "b02_top_unshipped_orders",
     oracle=f"""
     SELECT o.o_orderkey,
-           {_DSUM.format(x='l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
+           {DSUM_SQL.format(x='l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
            o.o_orderdate, o.o_orderpriority
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
@@ -135,7 +131,7 @@ def b02_top_unshipped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "b03_regional_supplier_volume",
     oracle=f"""
     SELECT n.n_name,
-           {_DSUM.format(x='l.l_extendedprice * (1 - l.l_discount)')} AS revenue
+           {DSUM_SQL.format(x='l.l_extendedprice * (1 - l.l_discount)')} AS revenue
     FROM region r
     JOIN nation n   ON n.n_regionkey = r.r_regionkey
     JOIN customer c ON c.c_nationkey = n.n_nationkey
@@ -192,8 +188,8 @@ def b03_regional_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT p.p_brand,
            COUNT(*) AS n_items,
-           {_DSUM.format(x='l.l_quantity')} AS total_qty,
-           {_DSUM.format(x='l.l_extendedprice * (1 - l.l_discount)')} AS revenue
+           {DSUM_SQL.format(x='l.l_quantity')} AS total_qty,
+           {DSUM_SQL.format(x='l.l_extendedprice * (1 - l.l_discount)')} AS revenue
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     GROUP BY p.p_brand
     ORDER BY p.p_brand
@@ -271,7 +267,7 @@ def b06_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT o_orderstatus, o_orderpriority,
            COUNT(*) AS n_orders,
-           {_DSUM.format(x='o_totalprice')} AS total_price
+           {DSUM_SQL.format(x='o_totalprice')} AS total_price
     FROM orders
     GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
     """,
@@ -336,7 +332,7 @@ def b07_priority_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT l_returnflag, l_linestatus,
            COUNT(*) AS n_items,
-           {_DSUM.format(x='l_quantity')} AS total_qty
+           {DSUM_SQL.format(x='l_quantity')} AS total_qty
     FROM lineitem
     GROUP BY CUBE (l_returnflag, l_linestatus)
     """,
@@ -518,7 +514,7 @@ def b11_asof_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT c.c_mktsegment,
            COUNT(*) AS n_orders,
-           {_DSUM.format(x='o.o_totalprice')} AS total_price
+           {DSUM_SQL.format(x='o.o_totalprice')} AS total_price
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     GROUP BY c.c_mktsegment
     ORDER BY c_mktsegment
@@ -642,7 +638,7 @@ def b14_status_distincts(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS n_open,
            CAST(SUM(CASE WHEN o.o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT)
                AS n_pending,
-           {_DSUM.format(x="CASE WHEN o.o_orderstatus = 'F' THEN o.o_totalprice ELSE 0 END")}
+           {DSUM_SQL.format(x="CASE WHEN o.o_orderstatus = 'F' THEN o.o_totalprice ELSE 0 END")}
                AS finished_price
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     GROUP BY c.c_mktsegment

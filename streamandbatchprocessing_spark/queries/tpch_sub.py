@@ -19,11 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.aggregates import davg, dsum
+from ..functions.aggregates import DSUM_SQL, davg, dsum
 from ..sources.batch import load_table
 from .registry import query
-
-_DSUM = "CAST(SUM(CAST({x} AS DECIMAL(25,6))) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------------
@@ -78,7 +76,7 @@ def b18_order_count_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "b19_small_quantity_revenue",
     oracle=f"""
-    SELECT {_DSUM.format(x='l_extendedprice')} / 7.0 AS avg_yearly
+    SELECT {DSUM_SQL.format(x='l_extendedprice')} / 7.0 AS avg_yearly
     FROM (
         SELECT l.l_extendedprice,
                l.l_quantity,
@@ -123,7 +121,7 @@ def b19_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "b20_disjunctive_revenue",
     oracle=f"""
-    SELECT {_DSUM.format(x='l.l_extendedprice * (1 - l.l_discount)')} AS revenue
+    SELECT {DSUM_SQL.format(x='l.l_extendedprice * (1 - l.l_discount)')} AS revenue
     FROM lineitem l
     JOIN part p ON p.p_partkey = l.l_partkey
     WHERE (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 15
@@ -171,7 +169,7 @@ def b20_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "b21_large_volume_orders",
     oracle=f"""
     SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate, o.o_totalprice,
-           {_DSUM.format(x='l.l_quantity')} AS sum_qty
+           {DSUM_SQL.format(x='l.l_quantity')} AS sum_qty
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON o.o_orderkey = l.l_orderkey
@@ -223,7 +221,7 @@ def b21_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT n.n_name,
            COUNT(*) AS numcust,
-           {_DSUM.format(x='c.c_acctbal')} AS totacctbal
+           {DSUM_SQL.format(x='c.c_acctbal')} AS totacctbal
     FROM customer c
     JOIN nation n ON n.n_nationkey = c.c_nationkey
     WHERE c.c_acctbal > (
@@ -272,9 +270,9 @@ def b22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "b23_promo_revenue_share",
     oracle=f"""
-    SELECT 100.0 * {_DSUM.format(
+    SELECT 100.0 * {DSUM_SQL.format(
         x="CASE WHEN p.p_type = 'PROMO' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0.0 END"
-    )} / {_DSUM.format(x='l.l_extendedprice * (1 - l.l_discount)')} AS promo_revenue_pct
+    )} / {DSUM_SQL.format(x='l.l_extendedprice * (1 - l.l_discount)')} AS promo_revenue_pct
     FROM lineitem l
     JOIN part p ON l.l_partkey = p.p_partkey
     WHERE l.l_shipdate >= TIMESTAMP '1995-03-01'
@@ -310,7 +308,7 @@ def b23_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH revenue AS (
         SELECT l_suppkey AS supplier_no,
-               {_DSUM.format(x='l_extendedprice * (1 - l_discount)')} AS total_revenue
+               {DSUM_SQL.format(x='l_extendedprice * (1 - l_discount)')} AS total_revenue
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1995-01-01'
           AND l_shipdate <  TIMESTAMP '1995-04-01'
@@ -362,7 +360,7 @@ def b24_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT n1.n_name AS cust_nation,
            n2.n_name AS supp_nation,
            CAST(YEAR(l.l_shipdate) AS BIGINT) AS l_year,
-           {_DSUM.format(x='l.l_extendedprice * (1 - l.l_discount)')} AS volume
+           {DSUM_SQL.format(x='l.l_extendedprice * (1 - l.l_discount)')} AS volume
     FROM lineitem l
     JOIN orders o   ON l.l_orderkey = o.o_orderkey
     JOIN customer c ON o.o_custkey = c.c_custkey
@@ -433,7 +431,7 @@ def b25_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     "b26_returned_item_losses",
     oracle=f"""
     SELECT c.c_custkey, c.c_name,
-           {_DSUM.format(x='l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
+           {DSUM_SQL.format(x='l.l_extendedprice * (1 - l.l_discount)')} AS revenue,
            n.n_name, c.c_acctbal
     FROM customer c
     JOIN orders o   ON c.c_custkey = o.o_custkey
@@ -487,7 +485,7 @@ def b26_returned_item_losses(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "b27_forecast_revenue_change",
     oracle=f"""
-    SELECT {_DSUM.format(x='l_extendedprice * l_discount')} AS revenue
+    SELECT {DSUM_SQL.format(x='l_extendedprice * l_discount')} AS revenue
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1995-01-01'
       AND l_shipdate <  TIMESTAMP '1996-01-01'

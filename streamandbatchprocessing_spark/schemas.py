@@ -9,7 +9,7 @@ drift).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -83,7 +83,3 @@ def with_ingest_columns(df: DataFrame) -> DataFrame:
     return df.withColumn("event_date", F.to_date("event_timestamp")).withColumn(
         "processing_timestamp", F.current_timestamp()
     )
-
-
-def event_date_col() -> Column:
-    return F.to_date("event_timestamp")

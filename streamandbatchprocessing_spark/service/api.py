@@ -20,6 +20,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql.types import StructType
 
+from ..config import BatchConfig
 from ..operators.analytics import ANALYSES, VALID_ANALYSIS_TYPES
 from .batch_job import (
     STOP_GRACE_S,
@@ -35,10 +36,6 @@ try:
 except ImportError:  # pragma: no cover — flask is available in CI image
     Flask = None
 
-MAX_CONCURRENT_BATCHES = 8
-DEFAULT_PAGE = 100
-MAX_PAGE = 10000
-
 
 def _error(code: str, message: str, http: int):
     return jsonify({"error": code, "message": message}), http
@@ -50,6 +47,7 @@ def create_app(
     on_stop=None,
     stop_grace_seconds: float = STOP_GRACE_S,
     pool: ThreadPoolExecutor | None = None,
+    batch_config: BatchConfig = BatchConfig(),
 ) -> "Flask":
     """Build the service app around a BatchJobRunner and an optional
     streaming manager (an object with start(topic)/stop()/status()).
@@ -60,14 +58,17 @@ def create_app(
     ``stop_grace_seconds`` is the reference's response-flush pause before
     the drain begins (tests pass 0); batches still running after it are
     cancelled. A caller-owned ``pool`` lets the
-    bootstrap drain it from the signal/atexit path too.
+    bootstrap drain it from the signal/atexit path too; without one, the
+    app makes one of ``batch_config.thread_pool_size`` threads.
+    ``batch_config`` also sets the default and the maximum page size.
     """
     if Flask is None:
         raise RuntimeError("flask is not installed")
     app = Flask("streamandbatchprocessing-spark")
     registry: BatchRegistry = runner.registry
     pool = pool or ThreadPoolExecutor(
-        max_workers=MAX_CONCURRENT_BATCHES, thread_name_prefix="batch-pool"
+        max_workers=batch_config.thread_pool_size,
+        thread_name_prefix="batch-pool",
     )
     started_at = time.time()
 
@@ -141,7 +142,10 @@ def create_app(
         # Records persisted before schemas were recorded read with inference.
         schema = (record.schemas or {}).get(name)
         offset = request.args.get("offset", 0, type=int)
-        limit = min(request.args.get("limit", DEFAULT_PAGE, type=int), MAX_PAGE)
+        limit = min(
+            request.args.get("limit", batch_config.default_page_size, type=int),
+            batch_config.max_page_size,
+        )
         if offset < 0 or limit < 0:
             # Spark's in-plan offset/limit reject negatives with an
             # AnalysisException — map to the error model's 400 instead

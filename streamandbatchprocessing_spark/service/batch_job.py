@@ -203,7 +203,6 @@ class BatchJobRunner:
         path: str,
         offset: int = 0,
         limit: int = 100,
-        max_page: int = 10000,
         total: int | None = None,
         schema: StructType | None = None,
     ) -> tuple[list[dict], int]:
@@ -213,7 +212,6 @@ class BatchJobRunner:
         that knows ``total`` and ``schema`` (both on the batch record)
         saves the count job and the schema-inference job, and the read
         too when the page is past the end."""
-        limit = min(limit, max_page)
         if total is not None and offset >= total:
             return [], total
         reader = self.spark.read.format(self.fmt)

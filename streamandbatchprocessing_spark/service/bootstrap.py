@@ -123,7 +123,8 @@ def build_runtime(
         pool=pool,
     )
     runtime.app = create_app(
-        runner, stream_manager, on_stop=runtime.shutdown, pool=pool
+        runner, stream_manager, on_stop=runtime.shutdown, pool=pool,
+        batch_config=cfg.batch,
     )
     return runtime
 

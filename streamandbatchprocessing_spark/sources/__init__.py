@@ -1,3 +1,3 @@
-from .batch import FIXTURE_TABLES, load_table, load_tables
+from .batch import FIXTURE_TABLES, load_table
 
-__all__ = ["FIXTURE_TABLES", "load_table", "load_tables"]
+__all__ = ["FIXTURE_TABLES", "load_table"]

@@ -35,10 +35,6 @@ FIXTURE_TABLES = (
 BROADCAST_TABLES = ("region", "nation", "supplier", "part", "customer")
 
 
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 #: Parquet schema memo, keyed by table path (round-12 optimization,
 #: guide §6): schema INFERENCE is a driver-side footer read on every
 #: ``spark.read.parquet`` call — measured 127 ms/call vs 22 ms with an
@@ -96,15 +92,6 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
     return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in (names or FIXTURE_TABLES)}
-
-
-def read_any(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """Format-dispatching batch read (reference S6)."""
-    return spark.read.format(fmt).load(path)
 
 
 def write_partitioned(

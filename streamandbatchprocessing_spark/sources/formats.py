@@ -2,9 +2,8 @@
 
 The fixture star schema arrives as parquet, but a production engine
 ingests and exports CSV / JSON Lines / ORC as a matter of course
-(reference S6/S7 generalized — ``read_any`` dispatches the format
-string; this module adds the OPTIONS that make the text formats
-lossless and the tests that prove it).
+(reference S6/S7 generalized: this module adds the OPTIONS that make
+the text formats lossless and the tests that prove it).
 
 Why options matter: parquet and ORC are self-describing, but CSV/JSON
 drop type information — a naive roundtrip silently turns timestamps

@@ -164,3 +164,36 @@ def test_built_runtime_runs_a_batch_over_the_stream_table(spark, tmp_path):
         assert record["row_count"] > 0
     finally:
         rt.pool.shutdown(wait=True)
+
+
+def test_built_runtime_pages_by_the_batch_config(spark, tmp_path):
+    """``build_runtime`` hands ``cfg.batch`` to the app, so a page never
+    exceeds ``batch.max_page_size``."""
+    from streamandbatchprocessing_spark.service.bootstrap import build_runtime
+    from streamandbatchprocessing_spark.service.registry import (
+        BatchJobRecord,
+        BatchStatus,
+    )
+
+    p = tmp_path / "conf.json"
+    p.write_text(json.dumps({
+        "tables": {"base_path": str(tmp_path / "lake")},
+        "batch": {"max_page_size": 5},
+    }))
+    cfg = config_mod.load(path=str(p), env={})
+    raw = str(tmp_path / "raw")
+    spark.range(20).write.parquet(raw)
+    rt = build_runtime(config=cfg, spark=spark, source_factory=lambda t: None)
+    try:
+        rt.registry.register(BatchJobRecord(
+            batch_id="batch-page-cap", analysis_type="revenue_by_region",
+            start_date="2024-01-01", end_date="2024-12-31",
+            status=BatchStatus.COMPLETED, raw_path=raw, row_count=20,
+        ))
+        page = rt.app.test_client().get(
+            "/batch/data/batch-page-cap?limit=50"
+        ).get_json()
+        assert page["limit"] == 5
+        assert page["returned"] == 5 and page["hasMore"] is True
+    finally:
+        rt.pool.shutdown(wait=True)

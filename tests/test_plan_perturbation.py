@@ -16,6 +16,9 @@ from __future__ import annotations
 import pytest
 
 from streamandbatchprocessing_spark.queries import QUERIES
+from streamandbatchprocessing_spark.queries.registry import (
+    release_session_artifacts,
+)
 
 #: Representative slice: every family whose internals could plausibly
 #: depend on partitioning — joins (broadcast→SMJ), salted aggs, shares,
@@ -229,6 +232,10 @@ _PERTURB = {
 @pytest.mark.parametrize("name", PERTURBED)
 def test_result_stable_under_plan_perturbation(spark, sf_dir, name):
     baseline = sorted(map(repr, QUERIES[name](spark, sf_dir).collect()))
+    # Session artifacts are conf-blind: release them so the perturbed
+    # run rebuilds every shared artifact under the perturbed plans, and
+    # again afterwards so later tests never see perturbed-plan builds.
+    release_session_artifacts()
     saved = {k: spark.conf.get(k) for k in _PERTURB}
     try:
         for k, v in _PERTURB.items():
@@ -237,4 +244,5 @@ def test_result_stable_under_plan_perturbation(spark, sf_dir, name):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
+        release_session_artifacts()
     assert baseline == perturbed, f"{name}: result depends on physical plan"

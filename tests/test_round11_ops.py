@@ -40,8 +40,7 @@ def test_env_int_rejects_negative(monkeypatch):
 
 def test_env_int_zero_disables_caps_but_not_working_sets(monkeypatch):
     """0 is legal for cap-style knobs (minimum=0, 'disable the bound')
-    and illegal where a positive working set is required (minimum=1,
-    e.g. $SBP_ARTIFACT_VARIANTS_CAP)."""
+    and illegal where a positive working set is required (minimum=1)."""
     monkeypatch.setenv("SBP_TEST_KNOB", "0")
     assert env_int("SBP_TEST_KNOB", 8) == 0
     with pytest.raises(ValueError, match=r"SBP_TEST_KNOB.*out of range"):

@@ -587,6 +587,20 @@ def test_runtime_shutdown_cancels_a_batch_stuck_in_a_spark_job(spark, tmp_path):
     drained.start()
     drained.join(60)
     assert not drained.is_alive(), "the cancelled Spark job kept the pool thread"
+    # The job fails while its Python tasks are still being killed; wait
+    # for them, so no later Python task meets a worker torn down mid-read.
+    tracker = spark.sparkContext.statusTracker()
+    executors = spark.sparkContext._jsc.sc().statusTracker()  # noqa: SLF001
+
+    def busy():
+        return tracker.getActiveStageIds() or any(
+            e.numRunningTasks() for e in executors.getExecutorInfos()
+        )
+
+    deadline = time.time() + 60
+    while busy() and time.time() < deadline:
+        time.sleep(0.1)
+    assert not busy(), "the cancelled stage's tasks are still running"
 
 
 def test_stopped_batch_starts_no_job_after_its_loader_returns(spark, tmp_path):

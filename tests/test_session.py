@@ -316,8 +316,7 @@ def test_session_without_javac_keeps_sparks_local_filesystem(tmp_path):
     assert not (tmp_path / "cache").exists()
 
 
-def test_pairs_materialize_auto_uses_reliable_on_local_cluster(monkeypatch):
-    monkeypatch.setattr(dedup, "_PAIRS_MATERIALIZE", "auto")
+def test_pairs_materialize_auto_uses_reliable_on_local_cluster():
     for master, mode in (("local[*]", "local"), ("local-cluster[2,1,1024]", "reliable")):
         fake = SimpleNamespace(sparkContext=SimpleNamespace(master=master))
         assert dedup._pairs_materialize_mode(fake) == mode

@@ -6,15 +6,13 @@ write-once session artifacts instead of rebuilding inside each query.
 These tests pin the three properties that sharing must not break:
 
 1. Artifact contents equal a cold inline rebuild bit-for-bit.
-2. The memo actually memoizes (same object back) — and is keyed on the
-   plan-perturbation confs, so the forced-SMJ sweep rebuilds.
+2. The memo actually memoizes (same object back), whatever the plan
+   confs; a harness that wants perturbed-plan builds releases first.
 3. release_session_artifacts empties the memo and unpersists, so a
    corpus-snapshot rotation cannot leak cached blocks.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
@@ -77,16 +75,14 @@ def test_text_artifacts_split_text_once(spark, sf_dir):
         assert ran.count("split(") == 1, (build.__name__, plan)
 
 
-def test_memo_hits_and_is_conf_keyed(spark, sf_dir):
+def test_memo_hits_and_is_conf_blind(spark, sf_dir):
     a = dedup.shared_sig(spark, sf_dir)
     b = dedup.shared_sig(spark, sf_dir)
     assert a is b  # memo hit — no rebuild
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        c = dedup.shared_sig(spark, sf_dir)
-        assert c is not a  # perturbed conf gets its own build
-        assert _rows(c) == _rows(a)  # ...with identical contents
+        assert dedup.shared_sig(spark, sf_dir) is a  # still no rebuild
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
 
@@ -217,148 +213,6 @@ def test_shared_artifacts_are_spill_safe(spark, sf_dir):
             assert lvl.useMemory and lvl.useDisk, (name, str(lvl))
 
 
-def test_variant_cap_evicts_lru_conf_variants(spark, sf_dir):
-    """Artifacts are keyed on plan-conf values, so a session sweeping
-    many conf combinations would otherwise accumulate one persisted
-    copy per variant per kind. The memo retains at most TWO variants
-    per (app, sf_dir, kind) — exactly the perturb_sweep working set —
-    and unpersists least-recently-used beyond that."""
-    release_session_artifacts()
-    builds = []
-
-    def touch(tag):
-        return session_artifact(
-            spark, sf_dir, "cap_probe", lambda: builds.append(tag) or tag
-        )
-
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        for parts in ("5", "7", "11"):
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
-            touch(parts)
-        # three variants built, only the last two retained
-        assert builds == ["5", "7", "11"]
-        probe_keys = [
-            k for k in _SESSION_ARTIFACTS if k[2] == "cap_probe"
-        ]
-        assert len(probe_keys) == 2
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        assert touch("7-again") == "7"  # still memoized (no rebuild)
-        spark.conf.set("spark.sql.shuffle.partitions", "5")
-        assert touch("5-again") == "5-again"  # evicted -> rebuilt
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
-        release_session_artifacts()
-
-
-def test_variant_cap_is_env_configurable(spark, sf_dir, monkeypatch):
-    """Round-10 operations lever: a host sweeping K >= 3 conf variants
-    round-robin sets $SBP_ARTIFACT_VARIANTS_CAP=K to hold all K
-    resident — with the cap raised to 3, the 3-variant round-robin
-    that thrashes the default LRU of 2 never rebuilds."""
-    import subprocess
-    import sys
-
-    out = subprocess.run(
-        [sys.executable, "-c",
-         "from streamandbatchprocessing_spark.queries.registry import "
-         "_ARTIFACT_VARIANTS_CAP as c; print(c)"],
-        env={**os.environ, "SBP_ARTIFACT_VARIANTS_CAP": "5"},
-        capture_output=True, text=True, check=True,
-    )
-    assert out.stdout.strip() == "5"
-
-    from streamandbatchprocessing_spark.queries import registry
-
-    monkeypatch.setattr(registry, "_ARTIFACT_VARIANTS_CAP", 3)
-    release_session_artifacts()
-    builds = []
-
-    def touch(tag):
-        return session_artifact(
-            spark, sf_dir, "cap3_probe", lambda: builds.append(tag) or tag
-        )
-
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        for _sweep in range(3):  # round-robin the 3 variants 3x
-            for parts in ("5", "7", "11"):
-                spark.conf.set("spark.sql.shuffle.partitions", parts)
-                touch(parts)
-        # one build per variant, zero rebuilds across re-entries
-        assert builds == ["5", "7", "11"]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
-        release_session_artifacts()
-
-
-def test_evicted_lock_race_keeps_first_insert(spark, sf_dir):
-    """A thread waiting on a key lock that eviction just removed from
-    the lock map races the key's rebuilder (which holds a FRESH lock
-    for the same key). Both builds run; the first insert must win, all
-    callers must get that same object back, and the losing build's
-    persisted DataFrame must be unpersisted — never orphaned in the
-    block manager."""
-    import threading
-
-    from streamandbatchprocessing_spark.queries.registry import (
-        _ARTIFACT_KEY_LOCKS,
-    )
-    from streamandbatchprocessing_spark.sources.batch import load_table
-
-    release_session_artifacts()
-    slow_entered = threading.Event()
-    slow_release = threading.Event()
-    results = {}
-    built = {}
-
-    def slow_build():
-        # Simulates the waiter that acquired the STALE lock object:
-        # while it builds, eviction has already popped its lock, so a
-        # second caller builds concurrently under a fresh lock.
-        slow_entered.set()
-        assert slow_release.wait(timeout=30)
-        built["loser"] = load_table(spark, sf_dir, "region").persist()
-        return built["loser"]
-
-    def slow_caller():
-        results["slow"] = session_artifact(
-            spark, sf_dir, "race_probe", slow_build
-        )
-
-    def fast_caller():
-        results["fast"] = session_artifact(
-            spark, sf_dir, "race_probe",
-            lambda: load_table(spark, sf_dir, "nation").persist(),
-        )
-
-    t_slow = threading.Thread(target=slow_caller)
-    t_slow.start()
-    assert slow_entered.wait(timeout=30)
-    # Simulate the eviction that races the in-flight build: pop the
-    # key's lock so the next caller mints a fresh one and builds.
-    with_probe = [k for k in _ARTIFACT_KEY_LOCKS if k[2] == "race_probe"]
-    assert with_probe, "slow build should have registered its key lock"
-    for k in with_probe:
-        _ARTIFACT_KEY_LOCKS.pop(k, None)
-    t_fast = threading.Thread(target=fast_caller)
-    t_fast.start()
-    t_fast.join(timeout=30)
-    assert "fast" in results, "fresh-lock build should not block"
-    slow_release.set()
-    t_slow.join(timeout=30)
-    # First insert (the fast caller's) wins; the slow loser gets the
-    # same object back and its own build is unpersisted.
-    assert results["slow"] is results["fast"]
-    assert results["fast"].storageLevel.useMemory  # winner stays persisted
-    assert not built["loser"].storageLevel.useMemory  # loser unpersisted
-    memo_values = [
-        v for k, v in _SESSION_ARTIFACTS.items() if k[2] == "race_probe"
-    ]
-    assert memo_values == [results["fast"]]
-    release_session_artifacts()
-
-
 def test_unrelated_artifact_builds_do_not_serialize(spark, sf_dir):
     """Builds hold a PER-KEY lock, not the global memo lock: a thread
     touching kind B must not wait for kind A's slow first-touch build
@@ -397,7 +251,16 @@ def test_unrelated_artifact_builds_do_not_serialize(spark, sf_dir):
     release_session_artifacts()
 
 
-def test_pairs_reliable_regime_survives_block_loss(spark, sf_dir, monkeypatch):
+def _force_cluster_regime(spark, monkeypatch, tmp_path):
+    """Take the cluster side of every ``is_local_master`` branch in
+    dedup, with the checkpoint dir a cluster deployment would set."""
+    monkeypatch.setattr(dedup, "is_local_master", lambda master: False)
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
+
+
+def test_pairs_reliable_regime_survives_block_loss(
+    spark, sf_dir, monkeypatch, tmp_path
+):
     """Round 13 (the round-12 verdict's #1): on a cluster master the
     candidate stream materializes via reliable ``checkpoint()`` + a
     MEMORY_AND_DISK persist, so (a) the consumer plan keeps the
@@ -406,14 +269,13 @@ def test_pairs_reliable_regime_survives_block_loss(spark, sf_dir, monkeypatch):
     (c) LOSING the in-memory blocks cannot strand a consumer — reads
     recompute from the checkpoint FILES (the failure mode the advisor
     flagged: localCheckpoint blocks are unrecoverable on executor
-    loss). Forced via $SBP_PAIRS_MATERIALIZE, which is also the gate's
-    own escape hatch."""
+    loss)."""
     from streamandbatchprocessing_spark.plans import executed_plan
 
     release_session_artifacts()
     local_rows = _rows(dedup.shared_pairs(spark, sf_dir))
     release_session_artifacts()
-    monkeypatch.setattr(dedup, "_PAIRS_MATERIALIZE", "reliable")
+    _force_cluster_regime(spark, monkeypatch, tmp_path)
     try:
         pairs = dedup.shared_pairs(spark, sf_dir)
         analyzed = pairs._jdf.queryExecution().analyzed()  # noqa: SLF001
@@ -425,7 +287,7 @@ def test_pairs_reliable_regime_survives_block_loss(spark, sf_dir, monkeypatch):
         lvl = pairs.storageLevel
         assert lvl.useMemory and lvl.useDisk, str(lvl)
         assert _rows(pairs) == local_rows
-        # simulate block loss / LRU eviction: drop every cached block,
+        # simulate block loss: drop every cached block,
         # then read again — the reliable regime recomputes from the
         # checkpoint files where localCheckpoint would fail outright.
         pairs.unpersist(blocking=True)
@@ -435,16 +297,17 @@ def test_pairs_reliable_regime_survives_block_loss(spark, sf_dir, monkeypatch):
         release_session_artifacts()
 
 
-def test_pairs_materialize_mode_follows_master(spark, monkeypatch):
-    """auto = local on local[*] (blocks die with the process anyway;
-    skip the checkpoint write), reliable anywhere else."""
-    monkeypatch.setattr(dedup, "_PAIRS_MATERIALIZE", "auto")
+def test_pairs_materialize_mode_follows_master(spark, monkeypatch, tmp_path):
+    """local on local[*] (blocks die with the process anyway; skip the
+    checkpoint write), reliable anywhere else."""
     assert dedup._pairs_materialize_mode(spark) == "local"
-    monkeypatch.setattr(dedup, "_PAIRS_MATERIALIZE", "reliable")
+    _force_cluster_regime(spark, monkeypatch, tmp_path)
     assert dedup._pairs_materialize_mode(spark) == "reliable"
 
 
-def test_reliable_checkpoint_computes_its_input_once(spark, monkeypatch):
+def test_reliable_checkpoint_computes_its_input_once(
+    spark, monkeypatch, tmp_path
+):
     """The eager reliable checkpoint writes its files in the one job
     that computes the frame, so the candidate stream's 4-band self-join
     runs once without a persist before the checkpoint (Spark 4.1's
@@ -453,7 +316,7 @@ def test_reliable_checkpoint_computes_its_input_once(spark, monkeypatch):
     A Python UDF counts the rows it evaluates."""
     from pyspark.sql.types import LongType
 
-    monkeypatch.setattr(dedup, "_PAIRS_MATERIALIZE", "reliable")
+    _force_cluster_regime(spark, monkeypatch, tmp_path)
     evaluated = spark.sparkContext.accumulator(0)
 
     def tick(x):
@@ -473,13 +336,11 @@ def test_reliable_checkpoint_computes_its_input_once(spark, monkeypatch):
 
 
 def test_full_release_force_drops_checkpoint_blocks(spark, sf_dir):
-    """The round-12 advisor's eviction finding: localCheckpoint blocks
-    are invisible to DataFrame.unpersist, so the FULL-release path
-    (shutdown / corpus rotation — caller promises no in-flight
-    consumer) must force-unpersist the underlying RDD or a conf sweep
-    strands O(pairs) copies until JVM GC. Eviction-path releases stay
-    hands-off (a concurrent consumer of an unrecoverable block must
-    not be failed mid-query)."""
+    """The round-12 advisor's finding: localCheckpoint blocks are
+    invisible to DataFrame.unpersist, so a release (shutdown / corpus
+    rotation — the caller promises no in-flight consumer) must also
+    unpersist the underlying RDD, or each release strands an O(pairs)
+    copy until JVM GC."""
     release_session_artifacts()
     pairs = dedup.shared_pairs(spark, sf_dir)
     jrdd = pairs._jdf.queryExecution().analyzed().rdd()  # noqa: SLF001
