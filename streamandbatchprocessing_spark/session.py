@@ -53,6 +53,33 @@ goes on the driver's classpath, and a cluster's executors would not
 have it. Without ``javac``, when the compile fails, or when a JVM is
 already running (its classpath is fixed; spark-submit and the pyspark
 shell start one before Python), Spark's default class stays in place.
+
+Every master keeps ``CODEGEN_CACHE_ENTRIES`` generated classes compiled
+(``spark.sql.codegen.cache.maxEntries``, a static conf that executors
+read from the same SparkConf). Spark's default LRU holds 100, and the
+engine reuses more than that, cyclically, so the LRU missed on every
+class. Measured with ``CodegenMetrics`` at sf0.01 on 4 cores:
+
+  * one ``query_suite`` pass (the f14 drain, five corpus artifacts and
+    seven registry queries) needs 177 distinct classes. With the
+    default, every warm pass compiled 170-171 of them again (f14 36,
+    b03 30, b08 19); with this cap a warm pass compiles none.
+  * one ``stream_live`` run reuses about 220: 141 for the seven
+    analyses' batches, 20 for their pages, about 20 for the two
+    streaming queries and about 35 that first appeared beside the
+    stream. With the default a warm REST batch compiled 15-31 classes;
+    with this cap it compiles 2.
+  * a cached class holds 21-31 KB of heap (its source and bytecode),
+    so 1000 of them cost about 30 MB.
+
+Some classes are used once, because Spark inlines a timestamp literal
+into the generated code: ``current_timestamp()`` in a REST snapshot's
+``processing_timestamp`` (2 classes per batch) and the batch timestamp
+of each raw-sink micro-batch (2 per micro-batch). They pass through
+the LRU. The unpaced live stream commits about four micro-batches a
+second, so about 8 of them arrive per second, and a reused class that
+is idle for (1000 - 220) / 8, about 100 s, is evicted; a REST client
+cycling through the seven analyses comes back to each well within that.
 """
 
 from __future__ import annotations
@@ -84,6 +111,10 @@ FS_CHECKPOINT_FILE_MANAGER = (
 NIO_LOCAL_FILESYSTEM = "streamandbatchprocessing_spark.jvm.NioLocalFileSystem"
 _NIO_SOURCE = os.path.join(os.path.dirname(__file__), "jvm", "NioLocalFileSystem.java")
 DRIVER_CLASSPATH = "spark.driver.extraClassPath"
+
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+#: Generated classes the JVM keeps compiled; sized in the module docstring.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def is_local_master(master: str) -> bool:
@@ -187,6 +218,7 @@ def build_spark(
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
     )
     if enable_fair_scheduler:
         # Reference runs streaming + on-demand batch jobs in one session

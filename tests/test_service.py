@@ -414,6 +414,22 @@ def test_snapshot_holds_one_file_per_category(spark, tmp_path):
     assert expected.exceptAll(got).count() == 0
 
 
+def test_a_repeated_analysis_compiles_only_its_timestamp(spark, tmp_path):
+    """A batch that repeats an analysis the session has run compiles
+    only the 2 classes of its snapshot write, whose ``current_timestamp()``
+    Spark inlines as a literal. A ``full_report`` alone needs more
+    classes than Spark's default cache of 100 holds."""
+    from .test_session import compiled_classes
+
+    table = str(tmp_path / "table")
+    transactions_df(spark, 1200).write.partitionBy("event_date").parquet(table)
+    window = ("2024-01-01", "2024-12-31")
+    _run_batch(spark, tmp_path, table, window, {}, "full_report")
+    before = compiled_classes(spark)
+    _run_batch(spark, tmp_path, table, window, {}, "full_report")
+    assert compiled_classes(spark) - before <= 2
+
+
 def test_batch_and_page_jobs_carry_the_batch_id(spark, runner):
     """The run and its pages run under ``setJobGroup(batch_id)``, and
     both threads are untagged again afterwards."""
@@ -601,6 +617,15 @@ def test_runtime_shutdown_cancels_a_batch_stuck_in_a_spark_job(spark, tmp_path):
     while busy() and time.time() < deadline:
         time.sleep(0.1)
     assert not busy(), "the cancelled stage's tasks are still running"
+    # A killed task's monitor threads destroy its Python workers a few
+    # seconds later, also the one the task had already returned to the
+    # idle pool; a later task that takes that worker before its process
+    # is gone fails with ClosedChannelException. Stop the worker daemons:
+    # the next Python task starts a fresh one.
+    factories = spark._jvm.org.apache.spark.SparkEnv.get().pythonWorkers()  # noqa: SLF001
+    workers = factories.values().iterator()
+    while workers.hasNext():
+        workers.next().stop()
 
 
 def test_stopped_batch_starts_no_job_after_its_loader_returns(spark, tmp_path):
