@@ -44,8 +44,8 @@ class KafkaConfig:
 
 @dataclass(frozen=True)
 class TablesConfig:
-    """Reference ``delta.*`` paths; format-agnostic here (parquet or a
-    Delta-capable classpath both work through sources/batch)."""
+    """Reference ``delta.*`` paths; the tables under them are parquet
+    (Delta is not on this classpath)."""
 
     base_path: str = "data/tables"
     stream_transactions_path: str = ""  # derived: <base>/stream/transactions
@@ -128,34 +128,3 @@ def load(path: str | None = None, env: dict | None = None) -> AppConfig:
             ),
         )
     return _derive(cfg)
-
-
-def env_int(name: str, default: int, *, minimum: int = 0) -> int:
-    """Validated integer deployment knob (the ``$SBP_*`` levers).
-
-    One parse discipline for every knob, applied at import: a
-    malformed value fails with a message naming the variable and the
-    accepted range instead of a bare ``ValueError`` from ``int()``
-    deep in a module import, and out-of-range values (negatives for
-    the emission caps, zero for knobs that require a positive working
-    set) are rejected the same way. By convention ``0`` means
-    "disable the bound" for every cap-style knob (``minimum=0``);
-    knobs where zero is meaningless pass ``minimum=1``.
-    """
-    raw = os.environ.get(name)
-    if raw is None:
-        return default
-    try:
-        value = int(raw)
-    except ValueError:
-        raise ValueError(
-            f"${name}={raw!r} is not an integer; expected an int "
-            f">= {minimum} (default {default})"
-        ) from None
-    if value < minimum:
-        raise ValueError(
-            f"${name}={value} is out of range; expected >= {minimum} "
-            f"(default {default}"
-            + (", 0 disables the bound)" if minimum == 0 else ")")
-        )
-    return value

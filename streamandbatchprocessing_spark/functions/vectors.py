@@ -96,15 +96,3 @@ def sign_bucket_sql(col: str, n_bits: int = 4, offset: int = 0) -> str:
         f"CASE WHEN {col}[{offset + i + 1}] >= 0 THEN {2 ** i} ELSE 0 END"
         for i in range(n_bits)
     ) + ")"
-
-
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """:func:`dot` with the dimension known at plan time: the fold is
-    expanded into ``dim`` scalar multiply-adds, which (unlike Catalyst
-    higher-order functions, ~45 µs/call interpreted) stay inside
-    whole-stage codegen. Bit-identical to the fold: same left-to-right
-    accumulation from 0.0, and IEEE ``0.0 + x == x``."""
-    acc = F.lit(0.0)
-    for j in range(dim):
-        acc = acc + F.element_at(a, j + 1) * F.element_at(b, j + 1)
-    return acc

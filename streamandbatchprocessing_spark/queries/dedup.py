@@ -26,10 +26,9 @@ from pyspark.sql import functions as F
 from ..functions.hashing import hash60, minhash_hashes
 from ..functions.aggregates import pround, pround_sql
 from ..functions.text import shingles, tokens
-from ..plans import static_plan
 from ..session import is_local_master
 from ..sources.batch import load_table
-from .registry import env_int, persist_tracked, query, session_artifact
+from .registry import persist_tracked, planner_broadcasts, query, session_artifact
 
 _N_HASHES = 16
 _BANDS = 2  # 2 bands × 8 rows — tuned for the fixture's high base jaccard
@@ -1910,13 +1909,12 @@ _FUZZY_MAX_EDIT = 3
 #: both engines). The result is therefore ≤ N·|records| rows at ANY
 #: scale — an ER pipeline consumes best-candidates-per-record anyway,
 #: and on a dense corpus the uncapped pair set grows quadratically
-#: (measured round 9: 390.7 M pairs at sf1.0). 0 disables the cap;
-#: override per deployment via $SBP_C18_TOPN — the Spark plan and the
+#: (measured round 9: 390.7 M pairs at sf1.0). The Spark plan and the
 #: registered oracle read the same constant, so they cannot
 #: desynchronize.
-_FUZZY_TOPN = env_int("SBP_C18_TOPN", 8)
+_FUZZY_TOPN = 8
 
-#: Conservative plan-estimate of one projected probe row (key 8 B +
+
 def _c18_blocked(part: DataFrame) -> DataFrame:
     """The composite-blocking-key projection both the trial plan and
     the real join build from — ONE definition so the regime probe
@@ -1935,57 +1933,23 @@ def _c18_blocked(part: DataFrame) -> DataFrame:
     )
 
 
-def _c18_probe_regime(spark: SparkSession, sf_dir: str) -> str:
-    """Which join Catalyst picks for c18's blk equi-join —
-    ``"broadcast"`` or ``"shuffle"`` — read from the PLANNER ITSELF
-    (round 12, the round-11 advisor's ask): a trial plan of the join
-    WITHOUT the pinned probe exchange is compiled (analysis +
-    optimization + physical planning only; no job runs) and its
-    statically planned join node inspected. Round 11 re-derived the
-    decision from a parallel size model (rows x 64 B vs a hand-parsed
-    autoBroadcastJoinThreshold), which could disagree with Catalyst's
-    sizeInBytes statistic near the threshold and silently reintroduce
-    the dead-exchange / AQE-coalescing pathology the gate exists to
-    prevent; reading the plan makes gate-planner agreement structural
-    (pinned at the threshold edge by
+def _c18_trial(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """c18's blk equi-join WITHOUT the pinned probe exchange: the trial
+    plan whose join pick (:func:`planner_broadcasts`) gates the probe
+    key (agreement at the threshold edge pinned by
     tests/test_plans.py::test_c18_gate_agrees_with_planner_at_edge).
-    AQE can still convert the planned SMJ to a broadcast join at
-    runtime if the shuffled build side measures small — in that
-    direction the pinned blk exchange is the join's own clustering,
-    never a dead exchange, so the pathology cannot re-enter.
-
-    Memoized per (application, sf_dir, autoBroadcastJoinThreshold) via
-    session_artifact — the threshold is part of the kind, so a changed
-    threshold re-derives — because frame construction must stay cheap:
-    the round-11 gate ran a full count() ACTION every time
-    ``_c18_frame`` was built (every registry build, oracle compare, and
-    plan test — the advisor's third finding)."""
-    def derive() -> str:
-        p = _c18_blocked(load_table(spark, sf_dir, "part"))
-        trial = p.alias("a").join(
-            p.alias("b"),
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.p_partkey") < F.col("b.p_partkey")),
-        )
-        return (
-            "broadcast"
-            if "BroadcastHashJoin" in static_plan(trial)
-            else "shuffle"
-        )
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    return session_artifact(
-        spark, sf_dir, f"c18_probe_regime@{threshold}", derive
+    If AQE turns the planned sort-merge join into a broadcast at
+    runtime, the pinned blk exchange is still the join's own
+    clustering, never a dead exchange."""
+    p = _c18_blocked(load_table(spark, sf_dir, "part"))
+    return p.alias("a").join(
+        p.alias("b"),
+        (F.col("a.blk") == F.col("b.blk"))
+        & (F.col("a.p_partkey") < F.col("b.p_partkey")),
     )
 
 
 def _c18_oracle(top_n: int) -> str:
-    cap = (
-        f"QUALIFY ROW_NUMBER() OVER (PARTITION BY a.p_partkey"
-        f" ORDER BY levenshtein(a.p_name, b.p_name), b.p_partkey)"
-        f" <= {top_n}"
-        if top_n > 0
-        else ""
-    )
     return f"""
     WITH p AS (SELECT p_partkey, p_name,
                       string_split(p_name, ' ')[1] || '|' ||
@@ -1997,7 +1961,7 @@ def _c18_oracle(top_n: int) -> str:
     FROM p a JOIN p b
       ON a.blk = b.blk AND a.p_partkey < b.p_partkey
     WHERE levenshtein(a.p_name, b.p_name) <= {_FUZZY_MAX_EDIT}
-    {cap}
+    QUALIFY ROW_NUMBER() OVER (PARTITION BY a.p_partkey ORDER BY levenshtein(a.p_name, b.p_name), b.p_partkey) <= {top_n}
     ORDER BY part_a, part_b
     """
 
@@ -2064,7 +2028,7 @@ def _c18_frame(spark: SparkSession, sf_dir: str, top_n: int) -> DataFrame:
     # probe, where the old always-by-primary-key repartition became a
     # DEAD exchange): the right key depends on which join the planner
     # will pick, read from the planner's own trial plan (round 12 —
-    # see _c18_probe_regime) and memoized per broadcast threshold.
+    # see _c18_trial) and memoized per broadcast threshold.
     #
     # * BROADCAST regime (build side fits the threshold): partition
     #   the probe by PRIMARY KEY. Rows of every block spread evenly
@@ -2092,7 +2056,7 @@ def _c18_frame(spark: SparkSession, sf_dir: str, top_n: int) -> DataFrame:
     # partitioning-invariant (perturb-sweep-verified).
     probe_key = (
         "p_partkey"
-        if _c18_probe_regime(spark, sf_dir) == "broadcast"
+        if planner_broadcasts(spark, sf_dir, "c18_probe_regime", _c18_trial)
         else "blk"
     )
     a = p.repartition(
@@ -2105,17 +2069,6 @@ def _c18_frame(spark: SparkSession, sf_dir: str, top_n: int) -> DataFrame:
         (F.col("a.blk") == F.col("b.blk"))
         & (F.col("a.p_partkey") < F.col("b.p_partkey")),
     ).filter(dist <= _FUZZY_MAX_EDIT)
-    if top_n <= 0:
-        return (
-            joined.select(
-                F.col("a.p_partkey").alias("part_a"),
-                F.col("b.p_partkey").alias("part_b"),
-                F.col("a.p_name").alias("name_a"),
-                F.col("b.p_name").alias("name_b"),
-                dist.cast("long").alias("edit_dist"),
-            )
-            .orderBy("part_a", "part_b")
-        )
     # Best-N per left record, computed over NARROW rows: the window's
     # per-partition sort runs on (part_a, part_b, edit_dist) only —
     # carrying both name strings through the sort of the (possibly
@@ -2241,19 +2194,12 @@ _CONT_MIN = 0.8
 #: portable). The suppression decision downstream needs only the
 #: strongest containments per document, and the uncapped set grows
 #: quadratically on a dense corpus (measured round 9: 690 M pairs at
-#: sf1.0); with the cap the result is ≤ N·|docs| at any scale. 0
-#: disables; override per deployment via $SBP_C20_TOPN — the Spark
-#: plan and the registered oracle read the same constant.
-_C20_TOPN = env_int("SBP_C20_TOPN", 8)
+#: sf1.0); with the cap the result is ≤ N·|docs| at any scale. The
+#: Spark plan and the registered oracle read the same constant.
+_C20_TOPN = 8
 
 
 def _containment_oracle(top_n: int) -> str:
-    cap = (
-        f"QUALIFY ROW_NUMBER() OVER (PARTITION BY da ORDER BY"
-        f" GREATEST(i * 1.0 / na, i * 1.0 / nb) DESC, db) <= {top_n}"
-        if top_n > 0
-        else ""
-    )
     return f"""
     {_sig_cte()},
     {_cand_cte()},
@@ -2272,7 +2218,7 @@ def _containment_oracle(top_n: int) -> str:
            {pround_sql('i * 1.0 / nb', 6)} AS containment_ba
     FROM iu
     WHERE GREATEST(i * 1.0 / na, i * 1.0 / nb) >= {_CONT_MIN}
-    {cap}
+    QUALIFY ROW_NUMBER() OVER (PARTITION BY da ORDER BY GREATEST(i * 1.0 / na, i * 1.0 / nb) DESC, db) <= {top_n}
     """
 
 
@@ -2377,23 +2323,20 @@ def _c20_frame(spark: SparkSession, sf_dir: str, top_n: int) -> DataFrame:
     )
     c_ab = F.col("i") * 1.0 / F.col("na")
     c_ba = F.col("i") * 1.0 / F.col("nb")
-    qualifying = iu.filter(F.greatest(c_ab, c_ba) >= _CONT_MIN)
-    if top_n > 0:
-        # Strongest-N containments per doc_a over the QUALIFYING pairs
-        # only (the >= _CONT_MIN filter already ran). NO new exchange:
-        # the da-side tokset join above already clustered the stream
-        # by da (see the join-order note), so this window plans as a
-        # local sort + WindowGroupLimit on the join's own partitioning
-        # (plan-pinned by tests/test_plans.py).
-        w = Window.partitionBy("da").orderBy(
-            F.greatest(c_ab, c_ba).desc(), "db"
-        )
-        qualifying = (
-            qualifying.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= top_n)
-            .drop("rn")
-        )
-    return qualifying.select(
+    # Strongest-N containments per doc_a over the QUALIFYING pairs only
+    # (the >= _CONT_MIN filter runs first). NO new exchange: the
+    # da-side tokset join above already clustered the stream by da (see
+    # the join-order note), so this window plans as a local sort +
+    # WindowGroupLimit on the join's own partitioning (plan-pinned by
+    # tests/test_plans.py).
+    w = Window.partitionBy("da").orderBy(F.greatest(c_ab, c_ba).desc(), "db")
+    capped = (
+        iu.filter(F.greatest(c_ab, c_ba) >= _CONT_MIN)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= top_n)
+        .drop("rn")
+    )
+    return capped.select(
         F.col("da").alias("doc_a"),
         F.col("db").alias("doc_b"),
         F.col("na").cast("long").alias("size_a"),

@@ -28,7 +28,7 @@ from ..functions.aggregates import davg, dsum, pround, pround_sql
 from ..functions.windows import panel_window, panel_window_all
 from ..sources.batch import load_table
 from .dedup import _agree_col, _band_pairs, _CC_MIN_AGREE, _sig_df
-from .registry import persist_tracked, query, session_artifact
+from .registry import persist_tracked, planner_broadcasts, query
 from .textops import QUALITY_SCORE_CTE
 
 _EN_WORDS = ", ".join(f"'{w}'" for w in LANG_STOPWORDS["en"])
@@ -1776,9 +1776,9 @@ def p20_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 #: Target docs per output shard. Fixture-scaled (≈8 shards at sf0.01);
 #: a production writer sets it so a shard ≈ the target file size
-#: (b34's bytes-per-row estimate / target_file_bytes) — the knob is a
-#: row count precisely so the shard count is derived FROM the corpus
-#: (ceil division) rather than fixed.
+#: (the target bytes per file / b34's bytes-per-row estimate) — the
+#: knob is a row count precisely so the shard count is derived FROM
+#: the corpus (ceil division) rather than fixed.
 _SHARD_TARGET = 64
 
 
@@ -2351,45 +2351,28 @@ def _p26_split_of(c: F.Column) -> F.Column:
     )
 
 
-def _p26_flag_regime(spark: SparkSession, sf_dir: str) -> str:
-    """How p26 attaches split flags to the candidate stream —
-    ``"broadcast"`` (join the |corpus| (doc_id, split) table, flag
-    hashed ONCE per doc) or ``"inline"`` (recompute the id hash on
-    both sides of every pair row, zero flag joins) — read from the
-    PLANNER ITSELF, c18's ``_c18_probe_regime`` pattern: a trial plan
-    of the flag join is compiled (no job runs) and its join node
-    inspected. Measured at sf0.1 (round 12, interleaved): the
-    broadcast join is ~0.9 s faster warm (2.7 s -> ~1.8 s) because it
-    hashes |docs| ids instead of 2x|pairs|; at a corpus whose flag
-    table the planner would NOT broadcast, the join would shuffle the
-    candidate stream twice by da then db to attach a flag the stream
-    can compute itself — there the inline hash (codegen'd, zero
-    exchanges) wins. Both branches are bit-identical by construction
-    (same hash60 expression, same ids; pinned by
-    tests/test_round9_ops.py::test_p26_flag_regimes_agree).
-    Memoized per (application, sf_dir, autoBroadcastJoinThreshold): the
-    threshold is part of the kind, so a changed threshold re-derives."""
+def _p26_trial(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """p26's flag join as a trial plan. Its join pick
+    (:func:`planner_broadcasts`) chooses how p26 attaches split flags
+    to the candidate stream: join the |corpus| (doc_id, split) table,
+    flag hashed ONCE per doc, when the planner broadcasts it; else
+    recompute the id hash on both sides of every pair row, zero flag
+    joins. Measured at sf0.1 (round 12, interleaved): the broadcast
+    join is ~0.9 s faster warm (2.7 s -> ~1.8 s) because it hashes
+    |docs| ids instead of 2x|pairs|; at a corpus whose flag table the
+    planner would NOT broadcast, the join would shuffle the candidate
+    stream twice by da then db to attach a flag the stream can compute
+    itself, and the inline hash (codegen'd, zero exchanges) wins. Both
+    branches are bit-identical by construction (same hash60
+    expression, same ids; pinned by
+    tests/test_round9_ops.py::test_p26_flag_regimes_agree)."""
+    from .dedup import shared_pairs
 
-    def derive() -> str:
-        from .dedup import shared_pairs
-
-        flags = load_table(spark, sf_dir, "documents").select(
-            "doc_id", _p26_split_of(F.col("doc_id")).alias("split")
-        )
-        trial = shared_pairs(spark, sf_dir).select("da", "db").join(
-            flags, F.col("da") == F.col("doc_id")
-        )
-        from ..plans.explain import static_plan
-
-        return (
-            "broadcast"
-            if "BroadcastHashJoin" in static_plan(trial)
-            else "inline"
-        )
-
-    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    return session_artifact(
-        spark, sf_dir, f"p26_flag_regime@{threshold}", derive
+    flags = load_table(spark, sf_dir, "documents").select(
+        "doc_id", _p26_split_of(F.col("doc_id")).alias("split")
+    )
+    return shared_pairs(spark, sf_dir).select("da", "db").join(
+        flags, F.col("da") == F.col("doc_id")
     )
 
 
@@ -2413,7 +2396,7 @@ def p26_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-shared banded candidate stream (shared_pairs — zero new
     corpus scans) and attaches the split flag by the planner-gated
     cheaper of broadcast flag joins vs inline id-hashing
-    (_p26_flag_regime — the flag is a pure hash of the id, so the
+    (_p26_trial — the flag is a pure hash of the id, so the
     stream never has to be shuffled to learn it); everything collapses
     to three one-row aggregates cross-joined as broadcasts.
     All-integer output plus one 6dp share — bit-portable under any
@@ -2451,9 +2434,9 @@ def p26_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Under the planner's BROADCAST regime the join attaches flags
     # hashed ONCE per doc instead of 2x per pair — ~0.9 s faster warm
     # at sf0.1 — so the pick is regime-gated via the planner's own
-    # trial plan (_p26_flag_regime, the c18 pattern). Bit-identical
+    # trial plan (_p26_trial, the c18 pattern). Bit-identical
     # either way (same hash60 expression, same ids).
-    if _p26_flag_regime(spark, sf_dir) == "broadcast":
+    if planner_broadcasts(spark, sf_dir, "p26_flag_regime", _p26_trial):
         flags = docs.select("doc_id", _p26_split_of(F.col("doc_id"))
                             .alias("split"))
         sa = flags.select(

@@ -7,7 +7,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config import env_int  # also imported from here by the query modules
+from ..plans import static_plan
 from ..session import ensure_query_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -105,6 +105,28 @@ def session_artifact(spark: SparkSession, sf_dir: str, kind: str, build):
         with _ARTIFACT_LOCK:
             _SESSION_ARTIFACTS[key] = value
     return value
+
+
+def planner_broadcasts(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    trial: Callable[[SparkSession, str], DataFrame],
+) -> bool:
+    """Whether Catalyst plans the join ``trial(spark, sf_dir)`` builds
+    as a broadcast hash join, read from the planner itself: the trial
+    plan is compiled (analysis, optimization, physical planning; no job
+    runs) and its static plan inspected, so a regime gate cannot
+    disagree with the planner near the threshold as a parallel size
+    model could. Memoized per (application, corpus dir,
+    ``autoBroadcastJoinThreshold``): the threshold is part of the kind,
+    so a changed threshold re-derives, and frame construction stays
+    cheap."""
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    return session_artifact(
+        spark, sf_dir, f"{kind}@{threshold}",
+        lambda: "BroadcastHashJoin" in static_plan(trial(spark, sf_dir)),
+    )
 
 
 def release_session_artifacts(application_id: str | None = None) -> None:

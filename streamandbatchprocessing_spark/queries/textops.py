@@ -12,8 +12,6 @@ column (plus multilingual unit tests in tests/test_textops.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -29,7 +27,7 @@ from ..functions.text import (
 from ..functions.aggregates import pround, pround_sql
 from ..functions.windows import panel_window
 from ..sources.batch import load_table
-from .registry import env_int, persist_tracked, query
+from .registry import persist_tracked, query
 
 _STOPWORDS = ("the", "a")
 #: SQL IN-list of the stopwords — interpolated into every oracle that
@@ -1806,14 +1804,11 @@ _JSD_TERM9 = (
 #: are bounded at any corpus size. Probability denominators stay
 #: full-corpus (per-source token totals), so head-token probabilities
 #: are exact; only sub-head-rank tail mass leaves the divergence sum.
-#: Override per deployment via $SBP_E24_VOCAB_K (both the Spark plan
-#: and the registered oracle read the same constant, so they can never
-#: desynchronize); 0 disables the cap — the full corpus vocabulary —
-#: matching the zero semantics of every other $SBP_* emission bound
-#: (c18/c20). 65536 is far above the test fixtures' vocabulary, so
-#: gate-SF outputs are cap-invariant; tests pin the capped behavior
-#: directly at small K.
-_E24_VOCAB_K = env_int("SBP_E24_VOCAB_K", 65536)
+#: The Spark plan and the registered oracle read the same constant, so
+#: they can never desynchronize. 65536 is far above the test fixtures'
+#: vocabulary, so gate-SF outputs are cap-invariant; tests pin the
+#: capped behavior directly at small K.
+_E24_VOCAB_K = 65536
 
 
 def _e24_oracle(vocab_k: int) -> str:
@@ -1825,7 +1820,7 @@ def _e24_oracle(vocab_k: int) -> str:
     n AS (SELECT source, CAST(SUM(cnt) AS BIGINT) AS n
           FROM c GROUP BY source),
     v AS (SELECT tok FROM (SELECT tok, SUM(cnt) AS tot FROM c GROUP BY tok)
-          {f"ORDER BY tot DESC, tok LIMIT {vocab_k}" if vocab_k > 0 else ""}),
+          ORDER BY tot DESC, tok LIMIT {vocab_k}),
     g AS (SELECT s.source, s.n, v.tok, COALESCE(c.cnt, 0) AS cnt
           FROM n s CROSS JOIN v
           LEFT JOIN c ON c.source = s.source AND c.tok = v.tok),
@@ -1895,13 +1890,12 @@ def _e24_frame(
     n = c.groupBy("source").agg(F.sum("cnt").cast("long").alias("n"))
     # TakeOrdered head-K, never a full sort: the vocabulary support is
     # the corpus's top-K tokens by total count, tie-broken on the
-    # token so the set is identical on both engines. vocab_k == 0
-    # disables the cap (the full corpus vocabulary — the pre-round-10
-    # unbounded shape, bit-for-bit).
-    v = c.groupBy("tok").agg(F.sum("cnt").cast("long").alias("tot"))
-    if vocab_k > 0:
-        v = v.orderBy(F.col("tot").desc(), "tok").limit(vocab_k)
-    v = v.select("tok")
+    # token so the set is identical on both engines.
+    v = (
+        c.groupBy("tok").agg(F.sum("cnt").cast("long").alias("tot"))
+        .orderBy(F.col("tot").desc(), "tok").limit(vocab_k)
+        .select("tok")
+    )
     g = (
         n.crossJoin(F.broadcast(v))
         .join(c, ["source", "tok"], "left")

@@ -32,9 +32,7 @@ Deliberate fixes of the reference's physical anti-patterns
      parquet files, which the analysis scan and the raw page then read
      back. AQE coalesces a small rebalance to one file per category and
      splits a large or skewed one into advisory-sized files, so the
-     file count follows the bytes, not the split count. Files are
-     dear on a local filesystem without the Hadoop native library:
-     each ``create`` (with its checksum twin) spawns processes.
+     file count follows the bytes, not the split count.
 
 Every batch is a handful of small Spark jobs that queue in the FAIR
 ``batch-pool`` behind the stream, so the runner issues only the jobs
@@ -70,15 +68,13 @@ class BatchJobRunner:
         spark: SparkSession,
         registry: BatchRegistry,
         base_dir: str,
-        fmt: str = "parquet",
         source_loader=None,
     ) -> None:
         self.spark = spark
         self.registry = registry
         self.base_dir = base_dir
-        self.fmt = fmt
         #: () -> DataFrame over the transaction schema; injected so tests
-        #: and deployments choose the event table (Delta dir, parquet, …).
+        #: and deployments choose the event table.
         self.source_loader = source_loader
 
     # -- paths (layout parity: AGENTS.md:1071-1100) ----------------------
@@ -118,12 +114,12 @@ class BatchJobRunner:
             if self._stopped(batch_id):
                 return
             row_count = _write_counted(
-                source.hint("rebalance", "category"), self.fmt, raw, "category"
+                source.hint("rebalance", "category"), raw, "category"
             )
             t2 = time.time()
 
             # Fix 2: analyses read the snapshot back, with its known schema.
-            snapshot = self.spark.read.format(self.fmt).schema(raw_schema).load(raw)
+            snapshot = self.spark.read.schema(raw_schema).parquet(raw)
             agg = self.agg_path(batch_id)
             results = run_analysis(analysis_type, snapshot)
             schemas = {"raw": raw_schema.jsonValue()}
@@ -135,7 +131,7 @@ class BatchJobRunner:
                 schemas[name] = df.schema.jsonValue()
                 if self._stopped(batch_id):
                     return
-                agg_rows[name] = _write_counted(df, self.fmt, path)
+                agg_rows[name] = _write_counted(df, path)
             t3 = time.time()
 
             self._finish(
@@ -214,8 +210,8 @@ class BatchJobRunner:
         too when the page is past the end."""
         if total is not None and offset >= total:
             return [], total
-        reader = self.spark.read.format(self.fmt)
-        df = (reader.schema(schema) if schema is not None else reader).load(path)
+        reader = self.spark.read
+        df = (reader.schema(schema) if schema is not None else reader).parquet(path)
         if total is None:
             total = df.count()
         page_df = df.orderBy(*df.columns[:1]).offset(offset).limit(limit)
@@ -274,14 +270,14 @@ def clear_job_group(sc) -> None:
         sc.setLocalProperty(key, None)
 
 
-def _write_counted(df: DataFrame, fmt: str, path: str, partition_by: str | None = None) -> int:
-    """Overwrite ``path`` with ``df`` and return the rows written, counted
-    by an ``Observation`` on the write itself (no second job)."""
+def _write_counted(df: DataFrame, path: str, partition_by: str | None = None) -> int:
+    """Overwrite ``path`` with parquet ``df`` and return the rows written,
+    counted by an ``Observation`` on the write itself (no second job)."""
     written = Observation()
-    writer = df.observe(written, F.count(F.lit(1)).alias("rows")).write.format(fmt)
+    writer = df.observe(written, F.count(F.lit(1)).alias("rows")).write
     if partition_by is not None:
         writer = writer.partitionBy(partition_by)
-    writer.mode("overwrite").save(path)
+    writer.mode("overwrite").parquet(path)
     return written.get["rows"]
 
 

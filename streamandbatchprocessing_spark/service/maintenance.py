@@ -42,6 +42,12 @@ from .registry import BatchRegistry, BatchJobRecord, BatchStatus
 
 _MANIFEST = "_manifest.json"
 
+#: Bytes per file that :func:`compact` and :meth:`VersionedTable.optimize`
+#: rewrite to. 128 MB is the parquet sweet spot: big enough that scan
+#: tasks amortize footer/dictionary overhead, small enough that one file
+#: is one comfortable task.
+TARGET_FILE_BYTES = 128 * 1024 * 1024
+
 
 class VersionedTable:
     """Parquet table with immutable versions and a JSON manifest.
@@ -62,9 +68,8 @@ class VersionedTable:
     travel to a pre-append version still shows the old schema.
     """
 
-    def __init__(self, root: str, fmt: str = "parquet") -> None:
+    def __init__(self, root: str) -> None:
         self.root = root
-        self.fmt = fmt
 
     # -- manifest ---------------------------------------------------------
     def _manifest_path(self) -> str:
@@ -102,10 +107,10 @@ class VersionedTable:
         manifest = self.manifest()
         version = manifest["current"] + 1
         vdir = os.path.join(self.root, f"v={version}")
-        writer = df.write.format(self.fmt).mode("errorifexists")
+        writer = df.write.mode("errorifexists")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.save(vdir)
+        writer.parquet(vdir)
         manifest["versions"].append(
             {
                 "version": version,
@@ -238,15 +243,11 @@ class VersionedTable:
             partition_by=self._effective_partition_by(manifest, version),
         )
 
-    def optimize(
-        self,
-        spark: SparkSession,
-        target_file_bytes: int = 128 * 1024 * 1024,
-    ) -> int:
+    def optimize(self, spark: SparkSession) -> int:
         """Delta's ``OPTIMIZE`` as a versioned transaction: read the
-        current version, rewrite it as ``ceil(bytes / target)`` balanced
-        files into a fresh dir, and commit a version referencing ONLY
-        that dir. Unlike the standalone :func:`compact` (which swaps a
+        current version, rewrite it as ``ceil(bytes / TARGET_FILE_BYTES)``
+        balanced files into a fresh dir, and commit a version referencing
+        ONLY that dir. Unlike the standalone :func:`compact` (which swaps a
         plain directory in place), time travel is preserved — prior
         versions still reference the un-compacted dirs until
         :meth:`vacuum` reclaims them, exactly Delta's
@@ -263,7 +264,7 @@ class VersionedTable:
             dir_stats(os.path.join(self.root, d))[1]
             for d in self._dirs_of(cur[0])
         )
-        target_files = max(1, math.ceil(total / target_file_bytes))
+        target_files = max(1, math.ceil(total / TARGET_FILE_BYTES))
         # Preserve the table's partitioning (Delta OPTIMIZE compacts
         # WITHIN partitions, never flattens them). Resolution follows
         # LINEAGE, not recency: after RESTORE the layout in force is
@@ -323,11 +324,7 @@ class VersionedTable:
         ]
         # mergeSchema: appended dirs may have evolved the schema — the
         # resolved version's read schema is the union (autoMerge parity).
-        return (
-            spark.read.format(self.fmt)
-            .option("mergeSchema", "true")
-            .load(paths)
-        )
+        return spark.read.option("mergeSchema", "true").parquet(*paths)
 
     # -- vacuum -------------------------------------------------------------
     def vacuum(self, keep: int = 2) -> list[int]:
@@ -356,41 +353,33 @@ class VersionedTable:
         return dropped
 
 
-def dir_stats(path: str, suffix: str = ".parquet") -> tuple[int, int]:
-    """(n_files, total_bytes) of data files under ``path``."""
+def dir_stats(path: str) -> tuple[int, int]:
+    """(n_files, total_bytes) of the parquet files under ``path``."""
     n, size = 0, 0
     for root, _dirs, files in os.walk(path):
         for f in files:
-            if f.endswith(suffix):
+            if f.endswith(".parquet"):
                 n += 1
                 size += os.path.getsize(os.path.join(root, f))
     return n, size
 
 
-def compact(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
+def compact(spark: SparkSession, path: str) -> dict:
     """OPTIMIZE-style small-file compaction (AGENTS.md:1162-1171): read
-    the table, rewrite it as ``ceil(bytes / target)`` files, atomically
-    swap directories. Returns before/after file counts.
-
-    128 MB is the parquet sweet spot: big enough that scan tasks amortize
-    footer/dictionary overhead, small enough that one file is one
-    comfortable task. Compaction keys the streaming-sink story — per
-    micro-batch files otherwise degrade every downstream scan.
+    the parquet table, rewrite it as ``ceil(bytes / TARGET_FILE_BYTES)``
+    files, atomically swap directories. Returns before/after file counts.
+    Compaction keys the streaming-sink story — per micro-batch files
+    otherwise degrade every downstream scan.
     """
     files_before, total_bytes = dir_stats(path)
-    target_files = max(1, math.ceil(total_bytes / target_file_bytes))
-    df = spark.read.format(fmt).load(path)
+    target_files = max(1, math.ceil(total_bytes / TARGET_FILE_BYTES))
+    df = spark.read.parquet(path)
     tmp = path.rstrip("/") + "._compact_tmp"
     old = path.rstrip("/") + "._compact_old"
     # coalesce() avoids a shuffle but can collapse upstream parallelism
     # into target_files read tasks; for a maintenance rewrite the shuffle
     # is the safer trade (full read parallelism, balanced output files).
-    df.repartition(target_files).write.format(fmt).mode("errorifexists").save(tmp)
+    df.repartition(target_files).write.mode("errorifexists").parquet(tmp)
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old)

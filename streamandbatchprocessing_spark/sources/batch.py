@@ -2,8 +2,8 @@
 
 Parity target: reference S6/S7/S8 (Delta batch read/write,
 ``BatchJob.scala:44-90``) — here generalized to the parquet star schema
-the harness provides (TESTDATA.md). Delta is used when the JARs are on
-the classpath, else parquet.
+the harness provides (TESTDATA.md). Every table is parquet; Delta is
+not on this classpath.
 
 Scale notes: readers return plain lazy DataFrames so Catalyst keeps
 predicate pushdown / column pruning / partition pruning; nothing here
@@ -28,11 +28,6 @@ FIXTURE_TABLES = (
     "documents",
     "embeddings",
 )
-
-#: Dimension tables small enough to broadcast at every scale factor the
-#: fixtures ship (region=5, nation=25 rows; customer/supplier/part grow
-#: with sf but stay dimension-sized relative to lineitem).
-BROADCAST_TABLES = ("region", "nation", "supplier", "part", "customer")
 
 
 #: Parquet schema memo, keyed by table path (round-12 optimization,
@@ -99,7 +94,6 @@ def write_partitioned(
     path: str,
     partition_by: list[str] | None = None,
     mode: str = "overwrite",
-    fmt: str = "parquet",
 ) -> None:
     """Partitioned batch write (reference S7/S8:
     ``df.write.format("delta").partitionBy("category").mode("overwrite")``).
@@ -109,10 +103,10 @@ def write_partitioned(
     stream table by ``event_date`` — both low-cardinality columns that
     downstream filters prune on. Keep that contract.
     """
-    writer = df.write.format(fmt).mode(mode)
+    writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+    writer.parquet(path)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

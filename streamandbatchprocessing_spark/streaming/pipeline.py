@@ -125,9 +125,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _normalize_event_ts(raw, unit)
 
 
-def events_stream_staged(
-    spark: SparkSession, sf_dir: str, n_sentinels: int = 2
-) -> DataFrame:
+def events_stream_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming read of the events fixture staged for OUTER-join /
     eviction semantics on finite input.
 
@@ -136,8 +134,8 @@ def events_stream_staged(
     watermark-expiry output) are only emitted in a batch AFTER the
     watermark has advanced past a row's expiry, so on a 1-batch drain
     they would be withheld forever. Staging copies the fixture into a
-    temp dir alongside ``n_sentinels`` far-future sentinel files and
-    reads with ``maxFilesPerTrigger=2``: batch 1 = the data PLUS the
+    temp dir alongside two far-future sentinel files and reads with
+    ``maxFilesPerTrigger=2``: batch 1 = the data PLUS the
     first sentinel (which sets the batch's max event time a day past
     every real row, so the watermark computed at batch end already
     clears all real-data expiries), batch 2 = the second sentinel,
@@ -150,11 +148,7 @@ def events_stream_staged(
     their minimum — a click-only sentinel would stall the purchase
     branch. Callers must drop ``user_id < 0`` rows from the result.
 
-    ``n_sentinels`` must be >= 2: with ``maxFilesPerTrigger=2`` the
-    data file and the FIRST sentinel share batch 1, so a lone sentinel
-    would leave no later batch for expired state to flush into and
-    outer-join/expiry rows would be withheld forever. The batch
-    arithmetic above also assumes the fixture is a single parquet
+    The batch arithmetic above assumes the fixture is a single parquet
     FILE (a multi-part ``events.parquet/`` directory would shift batch
     composition and watermark timing) — asserted below; directory
     fixtures take the unstaged :func:`events_stream` path."""
@@ -165,13 +159,6 @@ def events_stream_staged(
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    if n_sentinels < 2:
-        raise ValueError(
-            "events_stream_staged needs n_sentinels >= 2: batch 1 "
-            "consumes the data file plus the first sentinel "
-            "(maxFilesPerTrigger=2), so a later sentinel-only batch "
-            f"must exist for expired state to flush (got {n_sentinels})"
-        )
     src = os.path.join(sf_dir, "events.parquet")
     if not os.path.isfile(src):
         raise ValueError(
@@ -196,7 +183,7 @@ def events_stream_staged(
     base = _time.time()
     os.utime(dst, (base - 30, base - 30))
     day = 86_400 * (1_000_000_000 if unit == "ns" else 1_000_000)
-    for i in range(n_sentinels):
+    for i in range(2):
         ts_val = mx_raw + (i + 1) * day
         tbl = pa.table(
             {

@@ -41,7 +41,6 @@ def start_transaction_pipeline(
     spark: SparkSession,
     source: DataFrame,
     base_dir: str,
-    fmt: str = "parquet",
     trigger_available_now: bool = False,
 ):
     """Start both streaming queries; returns their handles.
@@ -70,25 +69,18 @@ def start_transaction_pipeline(
             return writer
 
         raw_query = _writer(
-            enriched, "raw_transactions", "append", fmt, ["event_date"]
+            enriched, "raw_transactions", "append", "parquet", ["event_date"]
         ).start(os.path.join(base_dir, "stream", "transactions"))
 
         try:
-            # Complete-mode aggregate sinks can't write files; parquet
-            # keeps append-only sinks, so the dashboard lands in a
-            # memory table when file formats are used (Delta supports
-            # complete mode and is chosen automatically when its JARs
-            # are present).
+            # A complete-mode aggregate cannot go to a parquet sink
+            # (file sinks are append-only), so the dashboard lands in a
+            # memory table.
             dash = realtime_dashboard(enriched)
-            sink = "delta" if fmt == "delta" else "memory"
             with shuffle_partitions(spark, DASHBOARD_STATE_PARTITIONS):
-                dash_writer = _writer(dash, "stream_aggregations", "complete", sink)
-                if sink == "delta":
-                    dash_query = dash_writer.start(
-                        os.path.join(base_dir, "stream", "stream_aggregations")
-                    )
-                else:
-                    dash_query = dash_writer.start()
+                dash_query = _writer(
+                    dash, "stream_aggregations", "complete", "memory"
+                ).start()
         except Exception:
             # A half-started pipeline is worse than none: the raw query
             # would keep running with no handle anyone tracks, and its
@@ -135,14 +127,13 @@ class StreamManager:
 
     def __init__(
         self, spark: SparkSession, source_factory: Callable[[str | None], DataFrame],
-        base_dir: str, fmt: str = "parquet",
+        base_dir: str,
     ) -> None:
         import threading
 
         self.spark = spark
         self.source_factory = source_factory
         self.base_dir = base_dir
-        self.fmt = fmt
         self._queries = []
         # The reference holds its handles in an AtomicReference
         # (StreamingJob.scala:20-21); the route-level is_active() check
@@ -161,7 +152,7 @@ class StreamManager:
                 raise RuntimeError("streaming pipeline already running")
             source = self.source_factory(topic)
             self._queries = start_transaction_pipeline(
-                self.spark, source, self.base_dir, fmt=self.fmt
+                self.spark, source, self.base_dir
             )
             return [str(q.id) for q in self._queries]
 

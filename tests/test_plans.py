@@ -840,7 +840,10 @@ def test_c18_gate_agrees_with_planner_at_edge(spark, sf_dir):
     query's ACTUAL planned join/exchange shape must match."""
     from streamandbatchprocessing_spark.queries.dedup import (
         _c18_blocked,
-        _c18_probe_regime,
+        _c18_trial,
+    )
+    from streamandbatchprocessing_spark.queries.registry import (
+        planner_broadcasts,
     )
 
     p = _c18_blocked(load_table(spark, sf_dir, "part"))
@@ -853,7 +856,9 @@ def test_c18_gate_agrees_with_planner_at_edge(spark, sf_dir):
             spark.conf.set(
                 "spark.sql.autoBroadcastJoinThreshold", threshold
             )
-            regime = _c18_probe_regime(spark, sf_dir)
+            broadcasts = planner_broadcasts(
+                spark, sf_dir, "c18_probe_regime", _c18_trial
+            )
             plan = executed_plan(
                 QUERIES["c18_blocked_fuzzy_match"](spark, sf_dir)
             )
@@ -861,7 +866,7 @@ def test_c18_gate_agrees_with_planner_at_edge(spark, sf_dir):
                 line for line in plan.splitlines()
                 if "REPARTITION_BY_NUM" in line
             ]
-            if regime == "broadcast":
+            if broadcasts:
                 assert "BroadcastHashJoin" in plan, (threshold, plan[:3000])
                 assert len(pinned) == 1 and "p_partkey#" in pinned[0], pinned
             else:

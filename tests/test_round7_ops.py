@@ -47,18 +47,6 @@ def test_sign_bits_sql_twin_matches_python(n):
     assert got == sign_bits_for(n)
 
 
-def test_staged_stream_rejects_single_sentinel(spark, sf_dir):
-    """With maxFilesPerTrigger=2 the data file and first sentinel share
-    batch 1, so n_sentinels=1 would leave no flush batch for expired
-    state — the builder must refuse it loudly, not withhold rows."""
-    from streamandbatchprocessing_spark.streaming.pipeline import (
-        events_stream_staged,
-    )
-
-    with pytest.raises(ValueError, match="n_sentinels >= 2"):
-        events_stream_staged(spark, sf_dir, n_sentinels=1)
-
-
 def test_staged_stream_rejects_directory_fixture(spark, tmp_path):
     """The staged batch accounting assumes ONE data file; a multi-part
     events.parquet directory must be rejected with a pointer to the

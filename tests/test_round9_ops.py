@@ -308,25 +308,28 @@ def test_p26_counts_are_consistent_with_the_split(spark, sf_dir):
 def test_p26_flag_regimes_agree(spark, sf_dir):
     """Round 12: the near-dup arm attaches split flags by the
     planner-gated cheaper of broadcast flag joins vs inline id-hashing
-    (_p26_flag_regime). Both branches must be bit-identical — force
-    each regime via the broadcast threshold (the artifact memo keys on
-    it, so each setting re-derives the gate) and compare the one-row
-    audit exactly."""
-    from streamandbatchprocessing_spark.queries.pipeline import (
-        _p26_flag_regime,
+    (planner_broadcasts over _p26_trial). Both branches must be
+    bit-identical — force each regime via the broadcast threshold (the
+    artifact memo keys on it, so each setting re-derives the gate) and
+    compare the one-row audit exactly."""
+    from streamandbatchprocessing_spark.queries.pipeline import _p26_trial
+    from streamandbatchprocessing_spark.queries.registry import (
+        planner_broadcasts,
     )
 
     conf_key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(conf_key)
     rows = {}
     try:
-        for threshold, want in (("10485760", "broadcast"), ("-1", "inline")):
+        for threshold, want in (("10485760", True), ("-1", False)):
             spark.conf.set(conf_key, threshold)
-            assert _p26_flag_regime(spark, sf_dir) == want
+            assert planner_broadcasts(
+                spark, sf_dir, "p26_flag_regime", _p26_trial
+            ) is want
             rows[want] = _rows(spark, sf_dir, "p26_split_leakage_audit")
     finally:
         spark.conf.set(conf_key, prev)
-    assert rows["broadcast"] == rows["inline"]
+    assert rows[True] == rows[False]
 
 
 # ---------------------------------------------------------------------------

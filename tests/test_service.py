@@ -34,7 +34,7 @@ def runner(spark, tmp_path_factory):
     source.cache().count()
     registry = BatchRegistry()
     yield BatchJobRunner(
-        spark, registry, str(base), fmt="parquet", source_loader=lambda: source
+        spark, registry, str(base), source_loader=lambda: source
     )
     source.unpersist()
 
@@ -489,7 +489,7 @@ def test_pages_run_one_job_each(spark, runner):
         (ids["full_report"], "/aggregated?analysis=revenue_by_region", "revenue_by_region"),
     ]
     restarted = BatchJobRunner(
-        spark, rebuild_registry(runner.base_dir), runner.base_dir, fmt="parquet"
+        spark, rebuild_registry(runner.base_dir), runner.base_dir
     )
     for app_runner in (runner, restarted):
         app = create_app(app_runner).test_client()
